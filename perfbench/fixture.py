@@ -1,10 +1,13 @@
 """Seeded generator for the star-schema, event, document and embedding
 tables the registered queries read (`<dir>/<table>.parquet`, one file each).
 
-The shapes follow the fixture the queries were written against: TPC-H-like
-keys and value ranges, a 30-word document vocabulary with 5% near-duplicate
-copies (source text plus a trailing " dup"), unit-norm 64-d embeddings with
-ten labels, and a 30-day event stream whose timestamps rise with event_id.
+The shapes are modelled on the sf0.01 fixture the queries were written
+against: TPC-H-like uniform keys and value ranges, a 30-word document
+vocabulary with 5% near-duplicate copies (source text plus a trailing
+" dup"), unit-norm Gaussian 64-d embeddings with ten labels, and a 30-day
+event stream whose microsecond timestamps rise with event_id. Row counts,
+parquet column types and file sizes match that fixture; per-query result
+rows and latencies on both are compared in perfbench/README.md.
 
 Every random draw is a hash of (seed, column tag, row number), so the same
 seed gives byte-identical tables regardless of thread count.
@@ -135,6 +138,10 @@ def _tables(sf: float, docs: int, vecs: int):
                    label
             FROM g ORDER BY vec_id""",
     }
+
+
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+          "events", "documents", "embeddings")
 
 
 def generate(out_dir: str, seed: int, sf: float, docs: int = 500, vecs: int = 500) -> int:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """graft benchmark: one workload per invocation, run from the repository root.
 
-    python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1> [--smoke]
+    python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
+        [--smoke] [--fixture DIR]
 
 Workloads (see perfbench/README.md): etl_backfill, olap_headline.
 The command builds graft and the JVM harness from source
@@ -17,12 +18,14 @@ line last on stdout:
 per-layer metrics. Everything a run writes lives under .bench_run/ and is
 removed at exit; a detail record of each run is kept in .bench_out/.
 --smoke runs a seconds-long variant (sf0.001 tables, 2 days) for the
-benchmark's own tests. The exit code is 0 only when every check passed.
+benchmark's own tests; --fixture reads the query tables from DIR instead of
+generating them. The exit code is 0 only when every check passed.
 """
 import argparse
 import json
 import os
 import re
+import resource
 import shutil
 import signal
 import subprocess
@@ -34,19 +37,15 @@ sys.path.insert(0, HERE)
 
 import build  # noqa: E402
 import fixture  # noqa: E402
+import pyarrow.parquet as pq  # noqa: E402
 
 WORKLOADS = ("etl_backfill", "olap_headline")
 # fixture scale of the query workload: sf0.01-sized tables (60k lineitem)
 FIXTURE_SF = {False: 0.01, True: 0.001}
 RUN_LIMIT_S = 170
-JVM_HEAP = "3g"
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar",
-]
+# the JVM writes each query's result twice for the oracle check: the cold
+# first call of setup as <name>, the warm second call as <name>~warm
+RESULTS = ("", "~warm")
 
 
 def log(msg: str) -> None:
@@ -60,7 +59,15 @@ def parse_args(argv):
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--smoke", action="store_true")
+    p.add_argument("--fixture", metavar="DIR",
+                   help="olap_headline only: read the query tables from DIR instead of "
+                        "generating them, to compare the generated tables with another fixture")
     return p.parse_args(argv)
+
+
+def table_rows(path: str) -> int:
+    """Rows of a parquet file or directory."""
+    return pq.ParquetDataset(path).read(columns=[]).num_rows
 
 
 def oracle_check(data_dir: str, verify_dir: str):
@@ -78,31 +85,31 @@ def oracle_check(data_dir: str, verify_dir: str):
 
 
 def cpu_ticks():
-    """(steal, total) CPU ticks from /proc/stat, or None off Linux: the share
-    of time the host withheld from this machine, kept in the detail record."""
+    """(steal, busy, total) CPU ticks of the machine from /proc/stat, or
+    None off Linux. With the JVM's own CPU time they give the share of time
+    the host withheld from the machine and the share other processes used,
+    kept in the detail record to explain slow runs."""
     try:
         with open("/proc/stat") as fh:
             f = [int(x) for x in fh.readline().split()[1:]]
-        return f[7], sum(f)
+        return f[7], sum(f[:3]) + sum(f[5:7]), sum(f[:8])
     except (OSError, IndexError, ValueError):
         return None
 
 
-def run_jvm(args, classes, jars, run_dir, data_dir, input_rows, deadline):
+def run_jvm(args, root, classes, jars, run_dir, data_dir, input_rows, deadline):
     tmp, local = os.path.join(run_dir, "tmp"), os.path.join(run_dir, "local")
     work = os.path.join(run_dir, "work")
     for d in (tmp, local, work):
         os.makedirs(d, exist_ok=True)
     out = os.path.join(run_dir, "result.json")
     cores = os.cpu_count() or 1
-    cmd = ["java"]
-    for m in ADD_OPENS:
-        cmd += ["--add-opens", f"{m}=ALL-UNNAMED"]
-    cmd += [f"-Xmx{JVM_HEAP}", f"-Xlog:gc:file={os.path.join(run_dir, 'gc.log')}",
+    # the JVM options of `sbt run`, then this run's own scratch directories
+    cmd = ["java"] + build.java_options(root)
+    cmd += [f"-Xlog:gc:file={os.path.join(run_dir, 'gc.log')}",
             f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={local}",
             f"-Dspark.sql.warehouse.dir={os.path.join(run_dir, 'spark-warehouse')}",
             f"-Dderby.system.home={run_dir}",
-            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             "-cp", os.pathsep.join([classes, os.path.join(jars, "*")]),
             "perfbench.Main", "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", str(args.trace),
@@ -152,7 +159,7 @@ def main(argv) -> int:
 
     classes = build.build(root)
     deadline = max(deadline, time.monotonic() + 150)  # a first run also builds
-    jars = build.spark_jars()
+    jars = build.spark_jars(root)
 
     run_dir = os.path.join(root, ".bench_run", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -161,28 +168,39 @@ def main(argv) -> int:
         data_dir = os.path.join(run_dir, "data")
         input_rows = 0
         gen_s = 0.0
-        if args.workload != "etl_backfill":
+        if args.workload != "etl_backfill" and args.fixture:
+            data_dir = os.path.abspath(args.fixture)
+            input_rows = sum(table_rows(os.path.join(data_dir, f"{t}.parquet"))
+                             for t in fixture.TABLES)
+        elif args.workload != "etl_backfill":
             g0 = time.monotonic()
             input_rows = fixture.generate(data_dir, args.seed, FIXTURE_SF[args.smoke])
             gen_s = time.monotonic() - g0
-        t0 = cpu_ticks()
-        res, work = run_jvm(args, classes, jars, run_dir, data_dir, input_rows, deadline)
-        t1 = cpu_ticks()
-        if t0 and t1 and t1[1] > t0[1]:
-            res["info"]["cpu_steal_share"] = (t1[0] - t0[0]) / (t1[1] - t0[1])
+        t0, r0 = cpu_ticks(), resource.getrusage(resource.RUSAGE_CHILDREN)
+        res, work = run_jvm(args, root, classes, jars, run_dir, data_dir, input_rows, deadline)
+        t1, r1 = cpu_ticks(), resource.getrusage(resource.RUSAGE_CHILDREN)
+        if t0 and t1 and t1[2] > t0[2]:
+            hz = os.sysconf("SC_CLK_TCK")
+            total = t1[2] - t0[2]
+            jvm = (r1.ru_utime + r1.ru_stime - r0.ru_utime - r0.ru_stime) * hz
+            res["info"]["cpu_steal_share"] = (t1[0] - t0[0]) / total
+            res["info"]["cpu_other_share"] = max(0.0, (t1[1] - t0[1] - jvm) / total)
 
         attempted, failed = res["attempted"], res["failed"]
         errors = list(res["errors"])
-        oracle = {}
+        oracle, result_rows = {}, {}
         if args.workload != "etl_backfill":
             verdicts, text = oracle_check(data_dir, os.path.join(work, "verify"))
             for q in res["info"]["queries"]:
-                attempted += 1
-                ok = verdicts.get(q, False)
-                oracle[q] = ok
-                if not ok:
-                    failed += 1
-                    errors.append(f"oracle mismatch: {q}")
+                for r in RESULTS:
+                    attempted += 1
+                    ok = verdicts.get(q + r, False)
+                    oracle[q + r] = ok
+                    if not ok:
+                        failed += 1
+                        errors.append(f"oracle mismatch: {q + r}")
+                if oracle[q]:
+                    result_rows[q] = table_rows(os.path.join(work, "verify", f"{q}.parquet"))
             if not all(oracle.values()):
                 log(text)
 
@@ -197,13 +215,14 @@ def main(argv) -> int:
         correct = failed == 0
         detail = {"workload": args.workload, "seed": args.seed, "seconds": args.seconds,
                   "trace": args.trace, "smoke": args.smoke, "cores": os.cpu_count(),
-                  "fixture_gen_s": gen_s, "fixture_rows": input_rows, "oracle": oracle,
+                  "fixture": args.fixture, "fixture_gen_s": gen_s, "fixture_rows": input_rows,
+                  "oracle": oracle, "result_rows": result_rows,
                   "errors": errors, "end_to_end": res["e2e"], "per_layer": res["layer"],
                   "info": res["info"], "fail_ratio": failed / max(attempted, 1),
                   "wall_clock_s": time.monotonic() - t_start}
         out_dir = os.path.join(root, ".bench_out")
         os.makedirs(out_dir, exist_ok=True)
-        stem = f"{args.workload}-s{args.seed}-t{args.trace}"
+        stem = f"{args.workload}-s{args.seed}-t{args.trace}" + ("-fixture" if args.fixture else "")
         with open(os.path.join(out_dir, stem + ".json"), "w") as fh:
             json.dump(detail, fh, indent=1)
         spans = os.path.join(work, "spans.jsonl")

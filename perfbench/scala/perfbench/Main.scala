@@ -74,9 +74,10 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   var genS = 0.0
   /** Input rows one pass consumes, for `rows_per_s`. */
   var inputRows: Long = o.inputRows
-  /** Latency of every operation in an untraced measured pass, by name. */
-  val ops = mutable.ArrayBuffer.empty[(String, Double)]
-  final case class PassRec(pass: Int, traced: Boolean, seconds: Double)
+  /** Latency of every operation in a timed pass: (pass, name, seconds). */
+  val ops = mutable.ArrayBuffer.empty[(Int, String, Double)]
+  final case class PassRec(pass: Int, traced: Boolean, warmup: Boolean, seconds: Double,
+                           cpuSeconds: Double)
   val passes = mutable.ArrayBuffer.empty[PassRec]
   /** Per-call layer samples, pooled over traced passes; reported as medians. */
   val calls = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
@@ -87,6 +88,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   val info = mutable.LinkedHashMap.empty[String, Any]
   private var tracing = false
   private var pass = -1
+  private var warmupPasses = 0
 
   def traced: Boolean = tracing
 
@@ -99,8 +101,16 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   /** Layer samples come from traced measured passes only, never setup. */
   private def sampling = tracing && pass >= 0
 
-  /** One operation's latency, kept from untraced measured passes only. */
-  def op(name: String, seconds: Double): Unit = if (!tracing && pass >= 0) ops += name -> seconds
+  /** Whether the current pass is an untimed warm-up pass. */
+  private def warmup: Boolean = pass >= 0 && pass < warmupPasses
+
+  /** Whether the current pass's times count: a measured pass that is
+    * neither traced nor a warm-up pass.
+    */
+  def timed: Boolean = !tracing && pass >= 0 && !warmup
+
+  /** One operation's latency, kept from timed passes only. */
+  def op(name: String, seconds: Double): Unit = if (timed) ops += ((pass, name, seconds))
 
   def call(name: String, v: Double): Unit =
     if (sampling) calls.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += v
@@ -145,24 +155,33 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
     System.err.println(f"[perfbench] setup done: $setupS%.2f s")
   }
 
-  /** Measured passes: keep starting passes until `--seconds` have gone by,
-    * at least `minPasses` (one in smoke mode). With `--trace 1`, even passes
-    * are traced and odd ones are not, so the run also yields tracing
-    * overhead. `after` runs once per pass outside its timing (output checks).
+  /** Passes: first `warmups` untimed passes, left out of every figure, for
+    * a workload whose setup leaves the JIT still warming; then measured
+    * passes until `--seconds` have gone by, at least `minPasses` (one in
+    * smoke mode). With `--trace 1` measured passes run traced, untraced,
+    * untraced, traced, and so on, so the run also yields tracing overhead
+    * between warm passes, with a steady warming trend cancelled out; such
+    * a run makes two measured passes more.
+    * `after` runs once per pass outside its timing (output checks).
     */
-  def measure(minPasses: Int, after: Int => Unit = _ => ())(body: Int => Unit): Unit = {
-    val t0 = System.nanoTime()
+  def measure(minPasses: Int, warmups: Int = 0, after: Int => Unit = _ => ())
+             (body: Int => Unit): Unit = {
+    warmupPasses = warmups
+    var t0 = System.nanoTime()
     def el = (System.nanoTime() - t0) / 1e9
-    val least = if (o.smoke) 1 else minPasses
+    val least = warmups + (if (o.smoke) 1 else minPasses) + (if (o.trace) 2 else 0)
     var p = 0
     while ((p < least || el < o.seconds) && el < Main.PassBudgetS) {
       pass = p
-      setTracing(o.trace && p % 2 == 0)
+      if (p == warmups) t0 = System.nanoTime()
+      setTracing(o.trace && p >= warmups && Set(0, 3)((p - warmups) % 4))
       val s = System.nanoTime()
+      val c = Stats.processCpuNs()
       tr.inRun(s"p$p") { tr.span("bench", s"pass $p") { body(p) } }
       val wall = (System.nanoTime() - s) / 1e9
+      val cpu = (Stats.processCpuNs() - c) / 1e9
       drain()
-      passes += PassRec(p, tracing, wall)
+      passes += PassRec(p, tracing, warmup, wall, cpu)
       if (tracing) {
         val w = work.get.sum(s"p$p/")
         w.foreach { case (k, v) if k != "executor_run_s" => add(s"exec.$k", v); case _ => () }
@@ -183,10 +202,13 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   }
 
   def result(startS: Double): Map[String, Any] = {
-    val untraced = passes.filterNot(_.traced).map(_.seconds).toSeq
+    val untraced = passes.filterNot(p => p.traced || p.warmup).map(_.seconds).toSeq
     val traced = passes.filter(_.traced).map(_.seconds).toSeq
-    val wall = Stats.median(untraced)
-    val lat = ops.map(_._2).toSeq
+    // JIT compilation, GC and CPU taken by other tenants only ever slow a
+    // pass down, so the fastest timed pass is the steadiest estimate of
+    // the warm cost of one
+    val wall = if (untraced.isEmpty) 0.0 else untraced.min
+    val lat = ops.map(_._3).toSeq
     val (tail, tailPct) = Stats.tail(lat)
     val e2e = Map(
       "setup_s" -> (startS + setupS),
@@ -203,10 +225,13 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
     }
     if (traced.nonEmpty && untraced.nonEmpty)
       layer("trace.overhead_s") = Stats.median(traced) - Stats.median(untraced)
-    info("passes") = passes.map(p => Map("pass" -> p.pass, "traced" -> p.traced, "s" -> p.seconds))
+    info("passes") = passes.map(p =>
+      Map("pass" -> p.pass, "traced" -> p.traced, "warmup" -> p.warmup, "s" -> p.seconds,
+        "cpu_s" -> p.cpuSeconds))
     info("ops") = ops.size
-    info("op_s") = ops.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    info("op_s") = ops.groupBy(_._2).view.mapValues(_.map(_._3).toSeq).toMap
     info("op_tail_percentile") = tailPct
+    info("op_tail_n") = lat.size
     info("gen_s") = genS
     Map("attempted" -> attempted, "failed" -> failed, "errors" -> errors.toSeq,
       "e2e" -> e2e, "layer" -> layer.toMap, "info" -> info.toMap)
@@ -214,6 +239,10 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
 }
 
 object Stats {
+  /** CPU time of this JVM, every thread, so far. */
+  def processCpuNs(): Long = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+
   def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0
     else {

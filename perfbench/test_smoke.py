@@ -1,7 +1,7 @@
 """Smoke test of the benchmark itself: each workload in --smoke mode must
 print a correct result line carrying exactly BENCHMARK.json's metrics, for
-both trace settings, and a directory that is not a graft checkout must be
-refused without a result line.
+both trace settings and on tables given with --fixture, and a directory
+that is not a graft checkout must be refused without a result line.
 
 Usage, from the repository root: python3 perfbench/test_smoke.py
 """
@@ -55,6 +55,21 @@ class SmokeTest(unittest.TestCase):
         layer = self.check("olap_headline", 1)
         self.assertGreater(layer["exec.jobs"]["value"], 0)
         self.assertEqual(layer["artifacts.rebuilds"]["value"], 0)
+
+    def test_fixture_dir(self):
+        # --fixture reads existing tables instead of generating them
+        sys.path.insert(0, os.path.dirname(RUN))
+        import fixture
+        os.makedirs(".bench_run", exist_ok=True)
+        d = tempfile.mkdtemp(dir=".bench_run")
+        try:
+            fixture.generate(d, 2, 0.001)
+            r = run(".", "--workload", "olap_headline", "--seed", "1", "--seconds", "1",
+                    "--trace", "0", "--smoke", "--fixture", d)
+            self.assertEqual(r.returncode, 0)
+            self.assertTrue(json.loads(r.stdout.strip().splitlines()[-1])["correct"])
+        finally:
+            shutil.rmtree(d)
 
     def test_refuses_without_checkout(self):
         d = tempfile.mkdtemp()
