@@ -5,9 +5,10 @@ The shapes are modelled on the sf0.01 fixture the queries were written
 against: TPC-H-like uniform keys and value ranges, a 30-word document
 vocabulary with 5% near-duplicate copies (source text plus a trailing
 " dup"), unit-norm Gaussian 64-d embeddings with ten labels, and a 30-day
-event stream whose microsecond timestamps rise with event_id. Row counts,
-parquet column types and file sizes match that fixture; per-query result
-rows and latencies on both are compared in perfbench/README.md.
+event stream whose microsecond timestamps rise with event_id. Row counts
+match that fixture, and so do the parquet column types and (within 6%) the
+file sizes of the larger tables; per-query result rows and latencies on
+both are compared in perfbench/README.md.
 
 Every random draw is a hash of (seed, column tag, row number), so the same
 seed gives byte-identical tables regardless of thread count.

@@ -74,8 +74,8 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   var genS = 0.0
   /** Input rows one pass consumes, for `rows_per_s`. */
   var inputRows: Long = o.inputRows
-  /** Latency of every operation in a timed pass: (pass, name, seconds). */
-  val ops = mutable.ArrayBuffer.empty[(Int, String, Double)]
+  /** Latency of every operation in a timed pass, by name. */
+  val ops = mutable.ArrayBuffer.empty[(String, Double)]
   final case class PassRec(pass: Int, traced: Boolean, warmup: Boolean, seconds: Double,
                            cpuSeconds: Double)
   val passes = mutable.ArrayBuffer.empty[PassRec]
@@ -110,7 +110,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
   def timed: Boolean = !tracing && pass >= 0 && !warmup
 
   /** One operation's latency, kept from timed passes only. */
-  def op(name: String, seconds: Double): Unit = if (timed) ops += ((pass, name, seconds))
+  def op(name: String, seconds: Double): Unit = if (timed) ops += name -> seconds
 
   def call(name: String, v: Double): Unit =
     if (sampling) calls.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += v
@@ -208,7 +208,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
     // pass down, so the fastest timed pass is the steadiest estimate of
     // the warm cost of one
     val wall = if (untraced.isEmpty) 0.0 else untraced.min
-    val lat = ops.map(_._3).toSeq
+    val lat = ops.map(_._2).toSeq
     val (tail, tailPct) = Stats.tail(lat)
     val e2e = Map(
       "setup_s" -> (startS + setupS),
@@ -229,7 +229,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val tr: Trace) {
       Map("pass" -> p.pass, "traced" -> p.traced, "warmup" -> p.warmup, "s" -> p.seconds,
         "cpu_s" -> p.cpuSeconds))
     info("ops") = ops.size
-    info("op_s") = ops.groupBy(_._2).view.mapValues(_.map(_._3).toSeq).toMap
+    info("op_s") = ops.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     info("op_tail_percentile") = tailPct
     info("op_tail_n") = lat.size
     info("gen_s") = genS

@@ -36,28 +36,26 @@ object Queries {
     verifyDir.mkdirs()
     Json.write(new File(verifyDir, "oracle_sql.json"), names.filter(oracle.contains)
       .flatMap(n => Seq(n -> oracle(n), s"$n~warm" -> oracle(n))).toMap)
-    def check(suffix: String, stage: String)(wrap: String => (=> Unit) => Unit): Unit =
-      names.foreach { n =>
-        ctx.attempted += 1
-        try wrap(n) {
-          all(n)(spark, ctx.o.data).coalesce(1).write.mode("overwrite")
-            .parquet(new File(verifyDir, s"$n$suffix.parquet").getPath)
-        } catch {
-          case e: Throwable if scala.util.control.NonFatal(e) => ctx.fail(s"$n $stage: $e")
-        } finally cleanup(spark)
-      }
+    def writeResult(n: String, suffix: String): Unit =
+      all(n)(spark, ctx.o.data).coalesce(1).write.mode("overwrite")
+        .parquet(new File(verifyDir, s"$n$suffix.parquet").getPath)
+    def attempt(n: String, stage: String)(body: => Unit): Unit = {
+      ctx.attempted += 1
+      try body
+      catch {
+        case e: Throwable if scala.util.control.NonFatal(e) => ctx.fail(s"$n $stage: $e")
+      } finally cleanup(spark)
+    }
 
     // Setup, on a fresh artifact root: the first call of every query, cold.
     val builders = mutable.ArrayBuffer.empty[String]
     ctx.setup {
-      check("", "setup") { n => body =>
+      names.foreach { n =>
         val before = Probes.files(artifactRoots)
         val t = System.nanoTime()
-        try tr.span("artifacts", n)(body)
-        finally {
-          ctx.once(s"artifacts.build_s.$n") = (System.nanoTime() - t) / 1e9
-          if (Probes.files(artifactRoots) != before) builders += n
-        }
+        attempt(n, "setup") { tr.span("artifacts", n) { writeResult(n, "") } }
+        ctx.once(s"artifacts.build_s.$n") = (System.nanoTime() - t) / 1e9
+        if (Probes.files(artifactRoots) != before) builders += n
       }
     }
     ctx.info("artifact_builders") = builders.toSeq
@@ -73,18 +71,15 @@ object Queries {
     // call takes the warm path the passes time, artifact reuse included
     // (`artifacts.rebuilds` shows the passes leave the artifact roots as
     // they were), and it is also the JIT warm-up for the passes.
-    check("~warm", "warm check") { _ => body => body }
+    names.foreach(n => attempt(n, "warm check") { writeResult(n, "~warm") })
     ctx.measure(minPasses = 2) { p =>
       val order = new scala.util.Random(ctx.o.seed * 1000003L + p).shuffle(names)
       order.foreach { n =>
-        ctx.attempted += 1
-        val t = System.nanoTime()
-        try {
+        attempt(n, s"pass $p") {
+          val t = System.nanoTime()
           tr.span("bench", n) { runOne(ctx, n, all(n)) }
           ctx.op(n, (System.nanoTime() - t) / 1e9)
-        } catch {
-          case e: Throwable if scala.util.control.NonFatal(e) => ctx.fail(s"$n pass $p: $e")
-        } finally cleanup(spark)
+        }
       }
     }
 
