@@ -1,9 +1,19 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "== artifact root guard =="
+# every persisted artifact lives under the store's one root
+stray=$(grep -rln 'java.io.tmpdir' src/main \
+  | grep -vx 'src/main/scala/graft/operators/Artifacts.scala' || true)
+if [[ -n "$stray" ]]; then
+  echo "java.io.tmpdir outside graft.operators.Artifacts:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 
 echo "== compile + unit specs =="
 sbt -batch test

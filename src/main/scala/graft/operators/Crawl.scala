@@ -1047,24 +1047,14 @@ object Crawl extends QueryModule {
     * write→read round trip of the crawl layer.
     */
   private[graft] object GzipShardFixture {
-    private val base = new java.io.File(sys.props("java.io.tmpdir"), "graft_warcgz")
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    def dir(s: SparkSession, d: String): String = {
-      val key = s"shards_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-      val out = new java.io.File(base, key)
-      if (!built.contains(key)) {
-        if (!new java.io.File(out, "_SUCCESS").exists()) {
-          graft.sources.GzipShardWriter.write(
-            Tables.documents(s, d).select(col("doc_id"),
-              concat(lit("doc-"), col("doc_id")).as("name"),
-              col("text").cast("binary").as("data")),
-            out.getPath, 8): Unit
-        }
-        built.add(key)
-      }
-      out.getPath
-    }
+    def dir(s: SparkSession, d: String): String = Artifacts.wh.tablePath(
+      Artifacts.publish("gz_shards", d) { scratch =>
+        graft.sources.GzipShardWriter.write(
+          Tables.documents(s, d).select(col("doc_id"),
+            concat(lit("doc-"), col("doc_id")).as("name"),
+            col("text").cast("binary").as("data")),
+          Artifacts.wh.tablePath(scratch), 8): Unit
+      })
   }
 
   /** On-disk `.warc.gz` shard files (request + response record per doc,
@@ -1075,33 +1065,23 @@ object Crawl extends QueryModule {
     * touches the driver.
     */
   private[graft] object WarcShardFixture {
-    private val base = new java.io.File(sys.props("java.io.tmpdir"), "graft_warcshards")
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    def dir(s: SparkSession, d: String): String = {
-      // v2: response records carry the HTTP layer (key bumped so cached
-      // v1 shard sets regenerate)
-      val key = s"warc_v2_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-      val out = new java.io.File(base, key)
-      if (!built.contains(key)) {
-        if (!new java.io.File(out, "_SUCCESS").exists()) {
-          val rows = Tables.documents(s, d).select(col("doc_id"), col("text"))
-            .rdd.flatMap { r =>
-              val id = r.getLong(0)
-              // name "q" < "r" sorts the request record before its response
-              Seq(Row(id, "q", requestRecord(id)),
-                Row(id, "r", responseRecord(id, r.getString(1))))
-            }
-          val df = s.createDataFrame(rows, StructType(Seq(
-            StructField("doc_id", LongType),
-            StructField("name", StringType),
-            StructField("data", BinaryType))))
-          graft.sources.GzipShardWriter.write(df, out.getPath, 8): Unit
-        }
-        built.add(key)
-      }
-      out.getPath
-    }
+    // layout v2: response records carry the HTTP layer
+    def dir(s: SparkSession, d: String): String = Artifacts.wh.tablePath(
+      Artifacts.publish("warc_shards", d, layout = "v2") { scratch =>
+        val rows = Tables.documents(s, d).select(col("doc_id"), col("text"))
+          .rdd.flatMap { r =>
+            val id = r.getLong(0)
+            // name "q" < "r" sorts the request record before its response
+            Seq(Row(id, "q", requestRecord(id)),
+              Row(id, "r", responseRecord(id, r.getString(1))))
+          }
+        val df = s.createDataFrame(rows, StructType(Seq(
+          StructField("doc_id", LongType),
+          StructField("name", StringType),
+          StructField("data", BinaryType))))
+        graft.sources.GzipShardWriter.write(
+          df, Artifacts.wh.tablePath(scratch), 8): Unit
+      })
   }
 
   private val warcStatSchema = StructType(Seq(
@@ -1312,14 +1292,15 @@ object Crawl extends QueryModule {
     * `pipe_frontier_compacted` / `pipe_frontier_gated` — two batches,
     * default retry bound) and [[FrontierAgedFixture]]
     * (`pipe_frontier_aged` — three batches, retryMaxAge = 1, so
-    * late-arriving targets genuinely age out).
+    * late-arriving targets genuinely age out). Each variant has its own
+    * store `kind` (`fs`, `fsa`, `fsh`), so the variants never share a key.
     */
   private[graft] sealed class FrontierFixture(
-      variant: String,
+      kind: String,
       slices: Seq[org.apache.spark.sql.Column],
       retryMaxAge: Option[Long],
       serveTables: Seq[String] = Nil)
-    extends StreamedFixture("fs", s"graft_frontier_$variant",
+    extends StreamedFixture(kind,
       Seq("_records", "_settled", "_edges", "_terminals", "_ledger")
         ++ serveTables,
       // v3: round 16 added the ledger fold (`_ledger_serve`) to
@@ -1370,7 +1351,7 @@ object Crawl extends QueryModule {
   }
 
   private[graft] object FrontierServeFixture extends FrontierFixture(
-    "serve",
+    "fs",
     Seq(col("doc_id") % 10 =!= 0, col("doc_id") % 10 === 0),
     graft.streaming.StreamRunner.DefaultRetryMaxAge)
 
@@ -1381,7 +1362,7 @@ object Crawl extends QueryModule {
     * give-up/retry boundary `pipe_frontier_aged`'s oracle replays.
     */
   private[graft] object FrontierAgedFixture extends FrontierFixture(
-    "aged",
+    "fsa",
     Seq(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5,
       col("doc_id") % 10 === 5, col("doc_id") % 10 === 0),
     Some(1L))
@@ -1397,7 +1378,7 @@ object Crawl extends QueryModule {
     * contract.
     */
   private[graft] object FrontierHybridFixture extends FrontierFixture(
-    "hyb",
+    "fsh",
     Seq(col("doc_id") % 10 =!= 0, col("doc_id") % 10 === 0),
     graft.streaming.StreamRunner.DefaultRetryMaxAge,
     serveTables = Seq("_records_serve", "_settled_serve", "_ledger_serve")) {
@@ -1418,7 +1399,7 @@ object Crawl extends QueryModule {
 
   /** The PERSISTED crawl frontier: the archive's parsed redirect records
     * `(doc_id, format, url, status, location)` as a fingerprint-keyed
-    * [[Dedup.DerivedArtifacts]] table — the status-line edges and 200
+    * [[Artifacts]] table — the status-line edges and 200
     * landings a frontier walk needs, WITHOUT the WARC/HTTP bytes. A real
     * crawler maintains this at ingest time (each batch's parsed records
     * append with the batch — the dedup_incremental signature-table
@@ -1427,7 +1408,7 @@ object Crawl extends QueryModule {
     * fingerprint and read by `crawl_frontier_incr`.
     */
   private def frontierRecordsTable(s: SparkSession, d: String): DataFrame =
-    Dedup.DerivedArtifacts.table(s, d, "documents", "frontier_records")(
+    Artifacts.table(s, d, "documents", "frontier_records")(
       redirectRecordsArrow(attachRedirectMedia(Tables.documents(s, d))))
 
   /** Redirect-CHAIN resolution over a parsed record frame `(doc_id, url,

@@ -39,8 +39,7 @@ object Curation extends QueryModule {
     * the atomic publish (the StreamedFixture mid-stream convention).
     */
   private object LakeHealthFixture extends StreamedFixture(
-    "lh", "graft_lakehealth",
-    Seq("_fresh", "_hyb", "_hyb_serve", "_vac", "_vac_serve",
+    "lh", Seq("_fresh", "_hyb", "_hyb_serve", "_vac", "_vac_serve",
       "_gen2", "_gen2_serve"), layout = "v1") {
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit = {
@@ -93,8 +92,7 @@ object Curation extends QueryModule {
     *    only decides WHEN).
     */
   private object LakeMaintainFixture extends StreamedFixture(
-    "lm", "graft_lakemaint",
-    Seq("_fold_only", "_fold_only_serve", "_fold_vac", "_fold_vac_serve",
+    "lm", Seq("_fold_only", "_fold_only_serve", "_fold_vac", "_fold_vac_serve",
       "_idle", "_idle_serve", "_perc", "_perc_sigs", "_perc_sigs_serve",
       "_actions"), layout = "v2") {
     override protected def buildScratch(
@@ -174,8 +172,7 @@ object Curation extends QueryModule {
     * still drive their lakes' vacuum/retention.
     */
   private[graft] object WarehouseMaintFixture extends StreamedFixture(
-    "wm", "graft_whmaint",
-    Seq("_sem", "_sem_serve",
+    "wm", Seq("_sem", "_sem_serve",
       "_ddc", "_ddc_serve", "_ddc_sigs", "_ddc_sigs_serve",
       "_ddc_hashes", "_ddc_hashes_serve", "_ddc_stats", "_ddc_stats_serve",
       "_lex_postings", "_lex_postings_serve",
@@ -465,7 +462,7 @@ object Curation extends QueryModule {
   }
 
   /** A REAL shard export for the manifest job: the corpus written ONCE
-    * (per corpus fingerprint — the [[Dedup.DerivedArtifacts]] staleness
+    * (per corpus fingerprint — the [[Artifacts]] staleness
     * contract) as a shard-partitioned table, shard = content-hash mod 8 —
     * the deterministic assignment a WebDataset/TFRecord export uses so
     * re-exports land documents in the same shard and byte-identical docs
@@ -476,33 +473,20 @@ object Curation extends QueryModule {
     * directly — any export loss/duplication breaks the hash.
     */
   private[graft] object ExportFixture {
-    val shards = 8L
-    val wh = new graft.pipeline.Warehouse(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_export").getPath)
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    def tableName(s: SparkSession, d: String): String = {
-      val key = s"corpus_shards_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-      if (!built.contains(key)) {
-        if (!new java.io.File(wh.tablePath(key), "_SUCCESS").exists()) {
-          wh.dropTable(key)
-          Tables.documents(s, d)
-            .select(col("doc_id"), col("text"), col("n_chars"),
-              pmod(h60(col("text")), lit(shards)).as("shard"))
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(wh.tablePath(key))
-        }
-        built.add(key)
+    def tableName(s: SparkSession, d: String): String =
+      Artifacts.publish("corpus_shards", d) { scratch =>
+        Tables.documents(s, d)
+          .select(col("doc_id"), col("text"), col("n_chars"),
+            pmod(h60(col("text")), lit(8L)).as("shard"))
+          .write.partitionBy("shard").parquet(Artifacts.wh.tablePath(scratch))
       }
-      key
-    }
   }
 
   /** A REAL versioned lake table for the version-pinned diff: three
     * `_v=N` snapshots of the corpus written through
     * [[graft.pipeline.Warehouse.versionedWrite]] (immutable snapshot
     * dirs + atomic marker commit), built once per corpus fingerprint
-    * (the [[Dedup.DerivedArtifacts]] staleness contract). Snapshot
+    * (the [[Artifacts]] staleness contract). Snapshot
     * contents follow the `pipe_snapshot_diff` conventions so the oracle
     * can replay them from `documents` independently:
     *   v1 = doc_id % 10 ≠ 0;
@@ -512,32 +496,21 @@ object Curation extends QueryModule {
     *        produces different counts and fails the oracle hash.
     */
   private[operators] object VersionedFixture {
-    val wh = new graft.pipeline.Warehouse(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_versioned").getPath)
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    def tableName(s: SparkSession, d: String): String = {
-      val key = s"corpus_versions_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-      if (!built.contains(key)) {
-        if (wh.listVersions(key) != Seq(1, 2, 3)) {
-          wh.dropTable(key)
-          val docs = Tables.documents(s, d)
-          val v1 = docs.filter(col("doc_id") % 10 =!= 0)
-            .select(col("doc_id"), h60(col("text")).as("h"),
-              col("n_chars").cast("bigint").as("n_chars"))
-          val v2 = docs.filter(col("doc_id") % 23 =!= 0)
-            .select(col("doc_id"),
-              h60(when(col("doc_id") % 37 === 0, concat(col("text"), lit(" rev2")))
-                .otherwise(col("text"))).as("h"),
-              col("n_chars").cast("bigint").as("n_chars"))
-          wh.versionedWrite(v1, key)
-          wh.versionedWrite(v2, key)
-          wh.versionedWrite(v2.filter(col("doc_id") % 5 =!= 0), key)
-        }
-        built.add(key)
+    def tableName(s: SparkSession, d: String): String =
+      Artifacts.publish("corpus_versions", d) { scratch =>
+        val docs = Tables.documents(s, d)
+        val v1 = docs.filter(col("doc_id") % 10 =!= 0)
+          .select(col("doc_id"), h60(col("text")).as("h"),
+            col("n_chars").cast("bigint").as("n_chars"))
+        val v2 = docs.filter(col("doc_id") % 23 =!= 0)
+          .select(col("doc_id"),
+            h60(when(col("doc_id") % 37 === 0, concat(col("text"), lit(" rev2")))
+              .otherwise(col("text"))).as("h"),
+            col("n_chars").cast("bigint").as("n_chars"))
+        Artifacts.wh.versionedWrite(v1, scratch)
+        Artifacts.wh.versionedWrite(v2, scratch)
+        Artifacts.wh.versionedWrite(v2.filter(col("doc_id") % 5 =!= 0), scratch): Unit
       }
-      key
-    }
   }
 
   /** Morton (Z-order) bit-interleave of two `bits`-bit BIGINT columns as a
@@ -769,8 +742,7 @@ object Curation extends QueryModule {
 
     "pipe_export_shards" -> ((s, d) => {
       TextAnalysis.requireBpeCountable(s, d)
-      val t = ExportFixture.tableName(s, d)
-      ExportFixture.wh.read(s, t)
+      Artifacts.wh.read(s, ExportFixture.tableName(s, d))
         .groupBy(col("shard").cast("bigint").as("shard"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -805,9 +777,9 @@ object Curation extends QueryModule {
     // and the join is the same one the unpinned diff pays. ----
     "pipe_version_diff" -> ((s, d) => {
       val table = VersionedFixture.tableName(s, d)
-      val a = VersionedFixture.wh.readVersion(s, table, Some(1))
+      val a = Artifacts.wh.readVersion(s, table, Some(1))
         .select(col("doc_id"), col("h").as("h_a"), col("n_chars").as("chars_a"))
-      val b = VersionedFixture.wh.readVersion(s, table, Some(2))
+      val b = Artifacts.wh.readVersion(s, table, Some(2))
         .select(col("doc_id"), col("h").as("h_b"), col("n_chars").as("chars_b"))
       a.join(b, Seq("doc_id"), "full_outer")
         .withColumn("change_type",

@@ -175,110 +175,12 @@ object Dedup extends QueryModule {
   private def minhashSig(s: SparkSession, d: String): DataFrame =
     minhashSigNarrow(Tables.documents(s, d))
 
-  /** Derived lake artifacts — the "computed once, read by every consumer"
-    * contract a real lake runs for corpus-scale derived state (MinHash
-    * signature tables, ground-truth pair lists): built on first touch,
-    * written via [[graft.pipeline.Warehouse]], then READ back (parquet
-    * scan) on every later use instead of recomputed. Staleness: the table
-    * key embeds a fingerprint of the source parquet footprint (file
-    * names + lengths + mtimes), so regenerated source data silently
-    * invalidates the old artifact and rebuilds — DedupSpec pins this with
-    * an appended-corpus fixture. At 100 TB the artifact refresh is the
-    * ingest pipeline's job (per-doc signatures append with the batch, the
-    * pair list refreshes at config-change time); queries here inherit the
-    * read-don't-recompute shape exactly.
-    */
-  private[operators] object DerivedArtifacts {
-    private val wh = new graft.pipeline.Warehouse(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_derived").getPath)
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    private[operators] def fingerprint(d: String, source: String): String = {
-      val src = new java.io.File(d, s"$source.parquet")
-      val files =
-        if (src.isDirectory)
-          Option(src.listFiles()).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
-        else Array(src)
-      val desc = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-        .mkString("|")
-      // canonical path for the same reason as pathTag: path spelling must
-      // not change the identity of the same on-disk fixture
-      val path = try src.getCanonicalPath catch {
-        case _: java.io.IOException => src.getAbsolutePath
-      }
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s"$path|$desc".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(16)
-    }
-
-    /** Path-only tag (content-independent): scopes superseded-generation
-      * pruning to the SAME source directory, so two sessions working
-      * different scale-factor dirs concurrently never delete each
-      * other's live artifacts — only a regenerated fixture at the same
-      * path (new fingerprint, same tag) supersedes.
-      */
-    private[operators] def pathTag(d: String, source: String): String = {
-      val f = new java.io.File(d, s"$source.parquet")
-      // canonical, not absolute: "/data/./sf0.1", a relative spelling, or
-      // a symlink to the same dir must produce the SAME tag, or pruning
-      // and reuse both silently stop working for that dir
-      val path = try f.getCanonicalPath catch {
-        case _: java.io.IOException => f.getAbsolutePath
-      }
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    }
-
-    /** Read artifact `name` derived from `<d>/<source>.parquet`, building
-      * it with `build` only if no fresh copy exists. Builds are ATOMIC:
-      * the table is written under a scratch key and renamed into place
-      * only after the write (and its `_SUCCESS` marker) completed — a
-      * crash mid-build leaves scratch, never a half-written live key that
-      * later reads would silently trust; freshness checks require the
-      * `_SUCCESS` marker, not bare directory existence. Superseded
-      * fingerprints of the same artifact are pruned on rebuild so
-      * regenerated fixtures don't accumulate dead parquet in tmp.
-      */
-    def table(s: SparkSession, d: String, source: String, name: String)(
-        build: => DataFrame): DataFrame = {
-      val tag = pathTag(d, source)
-      val key = s"${name}_${tag}_${fingerprint(d, source)}"
-      if (!built.contains(key)) {
-        val live = new java.io.File(wh.tablePath(key))
-        def fresh = new java.io.File(live, "_SUCCESS").exists()
-        if (!fresh) {
-          val scratch = s"${key}__build${java.util.UUID.randomUUID.toString.take(8)}"
-          wh.truncateWrite(build, scratch)
-          if (!fresh) { // another process may have published while we built
-            wh.dropTable(key)
-            if (!new java.io.File(wh.tablePath(scratch)).renameTo(live) && !fresh)
-              throw new IllegalStateException(
-                s"could not publish derived artifact $key")
-          } else wh.dropTable(scratch)
-          // prune superseded generations of the SAME source dir only
-          // (same name + path tag, older fingerprint) — a concurrent
-          // session on a DIFFERENT dir keeps its artifacts; pre-tag
-          // legacy keys (name_<16hex>) are swept as one-time cleanup
-          val pat = java.util.regex.Pattern.compile(
-            java.util.regex.Pattern.quote(name) +
-              s"_(${tag}_[0-9a-f]{16}|[0-9a-f]{16})")
-          Option(new java.io.File(wh.root).listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(f => pat.matcher(f.getName).matches() && f.getName != key)
-            .foreach(f => wh.dropTable(f.getName))
-        }
-        built.add(key)
-      }
-      wh.read(s, key)
-    }
-  }
-
   /** Persisted corpus-side MinHash signature table (doc_id, mh0..mh7) —
     * the lake index dedup_incremental bands against instead of
     * recomputing corpus signatures per run.
     */
   private def corpusSigTable(s: SparkSession, d: String): DataFrame =
-    DerivedArtifacts.table(s, d, "documents", "corpus_minhash_sigs")(
+    Artifacts.table(s, d, "documents", "corpus_minhash_sigs")(
       minhashSigFrom(shingles(s, d).filter(col("doc_id") % 10 =!= 0)))
 
   /** Persisted corpus-side 60-bit shingle-hash table (doc_id, h) — the
@@ -286,7 +188,7 @@ object Dedup extends QueryModule {
     * dedup_prefix_join verify idiom as a stored table.
     */
   private def corpusHashTable(s: SparkSession, d: String): DataFrame =
-    DerivedArtifacts.table(s, d, "documents", "corpus_shingle_hashes")(
+    Artifacts.table(s, d, "documents", "corpus_shingle_hashes")(
       shingles(s, d).filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"),
           graft.functions.TextFunctions.md5Bits(col("shingle"), 15).as("h")))
@@ -351,7 +253,7 @@ object Dedup extends QueryModule {
     * queries instead of re-running the exact pipeline per eval.
     */
   private def exactPairList(s: SparkSession, d: String): DataFrame =
-    DerivedArtifacts.table(s, d, "documents", "exact_pairs")(
+    Artifacts.table(s, d, "documents", "exact_pairs")(
       queries("dedup_prefix_join")(s, d))
 
   /** 16-bit SimHash per doc: per-bit majority vote over md5 token hashes.
@@ -969,7 +871,7 @@ object Dedup extends QueryModule {
     "dedup_incremental" -> ((s, d) => {
       // today's batch is computed from its text — work scales with the
       // INGEST; the corpus side reads two PERSISTED lake artifacts
-      // ([[DerivedArtifacts]]): the per-doc MinHash signature table (for
+      // ([[Artifacts]]): the per-doc MinHash signature table (for
       // banding) and the 60-bit shingle-hash table (for exact verify) —
       // corpus TEXT is never re-read, and at 100 TB both artifacts are
       // maintained by appending each ingested batch's rows (signatures
@@ -1247,7 +1149,7 @@ object Dedup extends QueryModule {
     // (Lee et al. 2022 applied to new data): a NEW-batch word position is
     // duplicated iff its 8-gram already occurs in the EXISTING corpus.
     // The corpus side is a PERSISTED gram-count artifact (8-byte hashes —
-    // the DerivedArtifacts staleness contract, built once per corpus
+    // the Artifacts staleness contract, built once per corpus
     // fingerprint): per ingest batch the work is batch gram extraction +
     // one semi-join against the artifact + a per-batch-doc interval
     // merge — everything scales with the BATCH, the corpus text is never
@@ -1259,7 +1161,7 @@ object Dedup extends QueryModule {
     "dedup_span_incr" -> ((s, d) => {
       val w = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("w"))
-      val corpusGrams = DerivedArtifacts.table(s, d, "documents", "span_grams8")(
+      val corpusGrams = Artifacts.table(s, d, "documents", "span_grams8")(
         grams8(w.filter(col("doc_id") % 10 =!= 0))
           .groupBy(col("h")).agg(count(lit(1)).as("n")))
       val batch = w.filter(col("doc_id") % 10 === 0)

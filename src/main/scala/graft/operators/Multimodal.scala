@@ -3110,7 +3110,7 @@ object Multimodal extends QueryModule {
     // asymmetry applied to the image modality: the ingest BATCH
     // (doc_id%10 ∈ {8,9} — exactly the fixture's planted re-render/edit
     // slots) decodes and hashes LIVE, while the corpus side reads the
-    // PERSISTED dHash signature artifact (the DerivedArtifacts contract —
+    // PERSISTED dHash signature artifact (the Artifacts contract —
     // corpus pixels are never re-decoded). Candidates via the asymmetric
     // band equi-join (full recall at hamming ≤ 3 by pigeonhole; exact
     // duplicates collide in all four bands, so no separate equality
@@ -3121,7 +3121,7 @@ object Multimodal extends QueryModule {
     // ingest-bounded, so a hot corpus band value costs b·H — linear in
     // the lake. Work scales with the BATCH at any corpus size. ----
     "mm_dhash_incr" -> ((s, d) => {
-      val corpus = Dedup.DerivedArtifacts.table(s, d, "documents", "dhash_sigs")(
+      val corpus = Artifacts.table(s, d, "documents", "dhash_sigs")(
         dhashArrow(attachDhashMedia(
             Tables.documents(s, d).filter(col("doc_id") % 10 <= 7)))
           .filter(col("format") === "png")
@@ -3272,7 +3272,7 @@ object Multimodal extends QueryModule {
     // once: the ingest batch (doc_id % 10 = 0) byte-sniffs, decodes and
     // signs LIVE in one routed pass ([[mediaSigArrow]]); the corpus
     // side reads the PERSISTED per-modality signature artifact (the
-    // DerivedArtifacts contract — corpus pixels/samples are never
+    // Artifacts contract — corpus pixels/samples are never
     // re-decoded). Per modality, the asymmetric band match of
     // mm_dhash_incr (hamming ≤ 3 for image/video; maxHamming 0 = exact
     // 60-bit equality for audio — the over-merge rule the batch cut
@@ -3282,7 +3282,7 @@ object Multimodal extends QueryModule {
     // the BATCH at any corpus size; MediaDedupSpec pins the
     // corpus-never-redecoded asymmetry. ----
     "pipe_media_dedup_incr" -> ((s, d) => {
-      val corpus = Dedup.DerivedArtifacts.table(s, d, "documents",
+      val corpus = Artifacts.table(s, d, "documents",
         "media_corpus_sigs")(
         mediaSigArrow(attachPerceptualMixMedia(
             Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0)))
@@ -3472,46 +3472,24 @@ object Multimodal extends QueryModule {
 
   /** A REAL keep-only media export behind the manifest: the cut
     * verdicts ([[mediaCutVerdicts]]), keepers only, committed as an
-    * IMMUTABLE VERSIONED snapshot per corpus fingerprint
-    * ([[graft.pipeline.Warehouse.versionedWrite]]'s reservation CAS —
-    * concurrent builders land distinct `_v=N` dirs; readers pin one) as
-    * a modality-partitioned table — `pipe_media_export` computes its
-    * manifest from the READBACK of these files (the WAP readback
-    * principle: the manifest describes what a trainer will actually
-    * load, so writer-side loss, duplication, or mis-partitioning breaks
-    * the checksum), while the oracle recomputes every column from
-    * `documents` alone.
+    * immutable `_v=1` snapshot of a modality-partitioned table
+    * ([[graft.pipeline.Warehouse.versionedWrite]]) and published once
+    * per corpus fingerprint through [[Artifacts]] — `pipe_media_export`
+    * computes its manifest from the READBACK of these files (the WAP
+    * readback principle: the manifest describes what a trainer will
+    * actually load, so writer-side loss, duplication, or
+    * mis-partitioning breaks the checksum), while the oracle recomputes
+    * every column from `documents` alone.
     */
   private[graft] object MediaExportFixture {
-    val wh = new graft.pipeline.Warehouse(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_media_export_v").getPath)
-    // version PIN per key: the snapshot this JVM built or first observed
-    // — later commits by other builders never swap a reader mid-session
-    private val pinned =
-      new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-    def tableName(d: String): String =
-      s"media_keep_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-
-    /** The pinned keep-only export snapshot. Builds go through
-      * [[graft.pipeline.Warehouse.versionedWrite]]'s reservation CAS —
-      * two racing builder JVMs commit DISTINCT immutable `_v=N` dirs
-      * (never the old fixture's shared-path dropTable+overwrite, which
-      * could tear a concurrent writer's files) — and every read is
-      * version-PINNED, the pipe_version_diff contract.
-      */
-    def read(s: SparkSession, d: String): DataFrame = {
-      val key = tableName(d)
-      val v = pinned.computeIfAbsent(key, _ =>
-        wh.currentVersion(key).map(Integer.valueOf).getOrElse {
-          Integer.valueOf(wh.versionedWrite(
-            mediaCutVerdicts(s, d).filter(col("keep"))
-              .select(col("doc_id"), col("sig_hi"), col("sig_lo"),
-                col("modality")),
-            key, Seq("modality")))
-        })
-      wh.readVersion(s, key, Some(v.intValue))
-    }
+    def read(s: SparkSession, d: String): DataFrame =
+      Artifacts.wh.readVersion(s, Artifacts.publish("media_keep", d) { scratch =>
+        Artifacts.wh.versionedWrite(
+          mediaCutVerdicts(s, d).filter(col("keep"))
+            .select(col("doc_id"), col("sig_hi"), col("sig_lo"),
+              col("modality")),
+          scratch, Seq("modality")): Unit
+      })
   }
 
   /** The cross-modality dedup VERDICT body shared by the cut and the

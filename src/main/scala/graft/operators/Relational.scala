@@ -224,7 +224,7 @@ object Relational extends QueryModule {
 
   /** The PERSISTED ingest-time skew decision — [[saltFactorFor]]'s
     * histogram collapsed to its factor and stored as a 1-row
-    * DerivedArtifacts table keyed on the source's fingerprint. A fresh
+    * Artifacts table keyed on the source's fingerprint. A fresh
     * JVM (the driver's bench, a new cluster session) READS the decision
     * instead of re-scanning the probe side; the sizing scan runs once per
     * ingest generation, exactly when a lake would compute it (the
@@ -237,7 +237,7 @@ object Relational extends QueryModule {
     // memo key mirrors the artifact key exactly — (dir, source, key) —
     // so two sources sharing a key-column name never share a decision
     saltFactorCache.computeIfAbsent((d, s"$source:$key"), _ =>
-      Dedup.DerivedArtifacts.table(s, d, source, s"salt_factor_$key") {
+      Artifacts.table(s, d, source, s"salt_factor_$key") {
         import s.implicits._
         Seq(saltFactorFor(probe, key)).toDF("factor")
       }.collect()(0).getInt(0)) // 1-row metadata read
@@ -895,7 +895,7 @@ object Relational extends QueryModule {
     // decide; a planted hot key flips it to >1 (AqeSkewSpec pins both
     // branches). The decision is MEMOIZED per (dir, key) — the sizing
     // histogram is ingest-time table metadata, not a per-query cost (the
-    // DerivedArtifacts amortization precedent; at 100 TB it's the
+    // Artifacts amortization precedent; at 100 TB it's the
     // persisted q_skew_report output, via persistedSaltFactor). ----
     "q_join_salted" -> ((s, d) => {
       val li = Tables.lineitem(s, d)

@@ -591,7 +591,7 @@ object Similarity extends QueryModule {
   }
 
   private[graft] object SemanticLakeFixture extends StreamedFixture(
-    "sl", "graft_semlake", Seq(""), layout = "v1",
+    "sl", Seq(""), layout = "v1",
     extraPruneSuffixes = Seq("_serve", "_cells", "_cellsk")) {
     override protected def sourceTable: String = "embeddings"
     override protected def buildScratch(
@@ -671,7 +671,7 @@ object Similarity extends QueryModule {
     * the shared from-scratch replay oracle.
     */
   private[graft] object SemanticLakeHybridFixture extends StreamedFixture(
-    "slh", "graft_semlake_hyb", Seq("", "_serve"), layout = "v1",
+    "slh", Seq("", "_serve"), layout = "v1",
     extraPruneSuffixes = Seq("_cells")) {
     override protected def sourceTable: String = "embeddings"
     override protected def buildScratch(
@@ -714,7 +714,7 @@ object Similarity extends QueryModule {
     * sidecar id, never by guessing (sim_semdedup_topk_ivf_rt).
     */
   private[graft] object SemanticLakeRetrainFixture extends StreamedFixture(
-    "slr", "graft_semlake_rt", Seq("", "_serve", "_cells"), layout = "v1") {
+    "slr", Seq("", "_serve", "_cells"), layout = "v1") {
     override protected def sourceTable: String = "embeddings"
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
@@ -781,7 +781,7 @@ object Similarity extends QueryModule {
   }
 
   private[graft] object IvfLakeFixture extends StreamedFixture(
-    "il", "graft_ivflake", Seq(""), layout = "v1",
+    "il", Seq(""), layout = "v1",
     extraPruneSuffixes = Seq("_serve")) {
     override protected def sourceTable: String = "embeddings"
     override protected def buildScratch(
@@ -805,7 +805,7 @@ object Similarity extends QueryModule {
     * 2) is load-bearing and batches 0–1 exist only in the snapshot.
     */
   private[graft] object IvfLakeHybridFixture extends StreamedFixture(
-    "ilh", "graft_ivflake_hyb", Seq("", "_serve"), layout = "v1") {
+    "ilh", Seq("", "_serve"), layout = "v1") {
     override protected def sourceTable: String = "embeddings"
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
@@ -833,7 +833,7 @@ object Similarity extends QueryModule {
     * corpus fingerprint, read back as a parquet scan.
     */
   private def m16Slices(s: SparkSession, d: String): DataFrame =
-    Dedup.DerivedArtifacts.table(s, d, "embeddings", "m16_slices")(
+    Artifacts.table(s, d, "embeddings", "m16_slices")(
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         expr("slice(embedding, 1, 16)").as("m16")))
 
@@ -1786,7 +1786,7 @@ object Similarity extends QueryModule {
         .limit(10)),
 
     // ---- the SERVING path of PQ: codes are a PERSISTED lake artifact
-    // (built once per corpus fingerprint via the DerivedArtifacts
+    // (built once per corpus fingerprint via the Artifacts
     // contract — at 100 TB the ingest batch appends its own code rows),
     // and the probe reads ONLY the codes table: 4 small ints per vector,
     // raw embeddings never opened at query time. sim_topk_pq computes
@@ -1794,7 +1794,7 @@ object Similarity extends QueryModule {
     // query actually scans. Same oracle as sim_topk_pq — the artifact is
     // bit-deterministic. ----
     "sim_topk_pq_artifact" -> ((s, d) => {
-      val codes = Dedup.DerivedArtifacts.table(s, d, "embeddings", "pq_codes")(
+      val codes = Artifacts.table(s, d, "embeddings", "pq_codes")(
         pqCodes(s, d))
       pqAdcFrom(s, d, codes)
         .orderBy(col("adc_dist"), col("vec_id"))

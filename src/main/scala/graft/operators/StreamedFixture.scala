@@ -2,40 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Locked atomic publish for MULTI-TABLE streamed fixtures — the shared
-  * machinery behind [[Crawl.FrontierFixture]] (frontier lakes) and
-  * [[TextAnalysis.CorpusStatsFixture]] (dedup'd-corpus stats lake): a
+/** A MULTI-TABLE streamed fixture published through [[Artifacts]]: a
   * fixture whose content is a streaming ingest body replayed over
-  * deterministic slices of the dataset, built once per corpus
-  * fingerprint and then served read-only by oracle queries.
+  * deterministic slices of the dataset, built once per source
+  * fingerprint and then served read-only by oracle queries — frontier
+  * lakes ([[Crawl.FrontierFixture]]), corpus stats, semantic/IVF and
+  * postings lakes, and the lake-maintenance demos. A subclass supplies
+  * only its build body; the store owns keys, locking, the marker-last
+  * publish and pruning.
   *
-  * The publish contract (one copy, both fixtures inherit it):
-  *
-  *  - builds run under a per-build SCRATCH prefix (`__bld<uuid>`) and
-  *    publish by renaming every suffix'd table, with the done marker
-  *    created only AFTER all tables landed (the
-  *    [[Dedup.DerivedArtifacts]] atomic-publish rule); a failed rename
-  *    throws BEFORE the marker is written — never a marked-complete
-  *    missing fixture;
-  *  - the recheck-and-swap is serialized across PROCESSES by an OS file
-  *    lock: without it, a second process could pass the `!isDone`
-  *    recheck, watch the first complete its publish, and then drop the
-  *    completed tables mid-swap while readers already trust the marker;
-  *  - the done marker's CONTENT is the layout version, so a code change
-  *    that adds side tables forces a rebuild instead of serving a stale
-  *    shape;
-  *  - superseded fingerprint generations of the same source dir,
-  *    crashed `__bld` scratch, and stranded `__stage__`/`__quarantine__`
-  *    gate debris are pruned on rebuild — every deletion age-guarded
-  *    (entries younger than an hour may belong to a LIVE concurrent
-  *    builder) and `__LOCK` files never swept (deleting a lock file
-  *    another process holds lets a third process lock the recreated
-  *    path, silently breaking the cross-process serialization).
-  *
-  * @param kind     table-name tag prefix (`fs` frontier, `cs` corpus
-  *                 stats)
-  * @param whDir    tmp warehouse directory name (one per fixture
-  *                 variant)
+  * @param kind     key prefix, unique per fixture (`fs` frontier serve,
+  *                 `cs` corpus stats, ...)
   * @param suffixes the per-build table suffixes that must ALL land for
   *                 the fixture to be complete (`""` = the prefix table
   *                 itself)
@@ -46,15 +23,11 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] abstract class StreamedFixture(
     kind: String,
-    whDir: String,
     suffixes: Seq[String],
     layout: String,
     extraPruneSuffixes: Seq[String] = Nil) {
 
-  val wh = new graft.pipeline.Warehouse(
-    new java.io.File(sys.props("java.io.tmpdir"), whDir).getPath)
-
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val wh: graft.pipeline.Warehouse = Artifacts.wh
 
   private val compacted =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -69,7 +42,7 @@ private[graft] abstract class StreamedFixture(
     * (the non-quiesced no-trusted-tail path), and memoizing that would
     * permanently serve "no committed versions" — so only `true` lands in
     * the memo; a failed or commit-less run retries on the next call.
-    * Serialized on a PER-PREFIX lock, never the fixture
+    * Serialized on a PER-PREFIX lock, never the store's build
     * monitor — a long compaction must not block concurrent [[build]]
     * memo hits (read-only serve queries) or another prefix's compaction.
     */
@@ -89,83 +62,8 @@ private[graft] abstract class StreamedFixture(
     */
   protected def sourceTable: String = "documents"
 
-  /** True iff the done marker exists AND records the current layout
-    * version — an older session's fixture (different side-table set)
-    * reads as NOT done and rebuilds.
-    */
-  private def isDone(done: java.io.File): Boolean =
-    done.exists() && (try new String(
-      java.nio.file.Files.readAllBytes(done.toPath), "UTF-8") == layout
-    catch { case _: java.io.IOException => false })
-
   /** Build (if needed) and return the fixture's table prefix. */
-  def build(s: SparkSession, d: String): String = synchronized {
-    val tag = Dedup.DerivedArtifacts.pathTag(d, sourceTable)
-    val fp = Dedup.DerivedArtifacts.fingerprint(d, sourceTable)
-    val p = s"${kind}_${tag}_$fp"
-    if (!built.contains(p)) {
-      val done = new java.io.File(wh.root, s"${p}__DONE")
-      if (!isDone(done)) {
-        val scratch = s"${p}__bld${java.util.UUID.randomUUID.toString.take(8)}"
-        buildScratch(s, d, scratch)
-        val lockFile = new java.io.File(wh.root, s"${p}__LOCK")
-        lockFile.getParentFile.mkdirs()
-        val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val lk = ch.lock() // blocks until any concurrent publisher exits
-          try {
-            if (!isDone(done)) { // under the lock this recheck is final
-              suffixes.foreach { suf =>
-                wh.dropTable(s"$p$suf") // unmarked or stale-layout debris
-                if (!new java.io.File(wh.tablePath(s"$scratch$suf"))
-                    .renameTo(new java.io.File(wh.tablePath(s"$p$suf"))))
-                  throw new IllegalStateException(
-                    s"could not publish streamed fixture table $p$suf")
-              }
-              java.nio.file.Files.write(done.toPath,
-                layout.getBytes("UTF-8")): Unit
-            } else suffixes.foreach(suf => wh.dropTable(s"$scratch$suf"))
-          } finally lk.release()
-        } finally ch.close()
-        pruneDebris(tag, fp)
-      }
-      built.add(p)
-    }
-    p
-  }
-
-  /** Prune superseded generations of the same source dir (same tag,
-    * older fingerprint) and CRASHED build debris (`__bld` scratch and
-    * the gate's `__stage__`/`__quarantine__` leftovers a crash inside
-    * the publish gate strands). Regenerated fixtures must not
-    * accumulate dead parquet in tmp (the DerivedArtifacts rule).
-    */
-  private def pruneDebris(tag: String, fp: String): Unit = {
-    val staleMs = System.currentTimeMillis() - 60L * 60 * 1000
-    val sufAlt = ("__DONE" +: (suffixes ++ extraPruneSuffixes)
-        .filter(_.nonEmpty).distinct)
-      .map(java.util.regex.Pattern.quote).mkString("|")
-    // the suffix group is optional only when "" is a real table suffix
-    // (the fixture publishes its prefix directory itself)
-    val sufGroup =
-      if (suffixes.contains("")) s"($sufAlt)?" else s"($sufAlt)"
-    val pat = java.util.regex.Pattern.compile(
-      s"(__stage__|__quarantine__)?${kind}_${tag}_([0-9a-f]{16})" +
-        "(__bld[0-9a-f]{8})?" + sufGroup + "(_b[0-9]+)?")
-    Option(new java.io.File(wh.root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .foreach { f =>
-        val m = pat.matcher(f.getName)
-        val debris = m.matches() && f.lastModified < staleMs &&
-          (m.group(2) != fp || // superseded generation
-            m.group(3) != null || // crashed scratch (any fp)
-            m.group(1) != null) // stranded stage/quarantine
-        if (debris) {
-          if (f.isDirectory) wh.dropTable(f.getName)
-          else f.delete(): Unit
-        }
-      }
-  }
+  def build(s: SparkSession, d: String): String =
+    Artifacts.publish(kind, d, sourceTable, suffixes, layout,
+      extraPruneSuffixes)(buildScratch(s, d, _))
 }

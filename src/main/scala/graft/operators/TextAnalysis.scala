@@ -200,7 +200,7 @@ object TextAnalysis extends QueryModule {
   private val bpeCountableDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[operators] def requireBpeCountable(s: SparkSession, d: String): Unit = {
-    val key = Dedup.DerivedArtifacts.fingerprint(d, "documents")
+    val key = Artifacts.fingerprint(d, "documents")
     if (!bpeCountableDirs.contains(key)) {
       val tainted = Tables.documents(s, d)
         .filter(col("text").rlike(bpeTaintPattern)).limit(1).count()
@@ -241,8 +241,7 @@ object TextAnalysis extends QueryModule {
   }
 
   private[graft] object CorpusStatsFixture extends StreamedFixture(
-    "cs", "graft_corpus_stats",
-    Seq("", "_sigs", "_hashes", "_stats"), layout = "v1",
+    "cs", Seq("", "_sigs", "_hashes", "_stats"), layout = "v1",
     extraPruneSuffixes = Seq("_stats_serve", "_serve")) {
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
@@ -292,8 +291,7 @@ object TextAnalysis extends QueryModule {
     * multi-table publish.
     */
   private[graft] object CorpusStatsHybridFixture extends StreamedFixture(
-    "csh", "graft_corpus_stats_hyb",
-    Seq("", "_sigs", "_hashes", "_stats", "_stats_serve"), layout = "v1") {
+    "csh", Seq("", "_sigs", "_hashes", "_stats", "_stats_serve"), layout = "v1") {
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
       replaySlicedIngest(s, d, wh, scratch, afterBatch = i =>
@@ -312,8 +310,7 @@ object TextAnalysis extends QueryModule {
     * hybrid snapshot+tail read.
     */
   private[graft] object CorpusStatsVacuumFixture extends StreamedFixture(
-    "csg", "graft_corpus_stats_gc",
-    Seq("", "_sigs", "_hashes", "_stats", "_stats_serve"), layout = "v1") {
+    "csg", Seq("", "_sigs", "_hashes", "_stats", "_stats_serve"), layout = "v1") {
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
       replaySlicedIngest(s, d, wh, scratch, afterBatch = {
@@ -340,8 +337,7 @@ object TextAnalysis extends QueryModule {
     * double-read across the fold boundary all flip rows.
     */
   private[graft] object CorpusLakeHybridFixture extends StreamedFixture(
-    "clh", "graft_corpus_lake_hyb",
-    Seq("", "_sigs", "_hashes", "_stats", "_serve", "_sigs_serve",
+    "clh", Seq("", "_sigs", "_hashes", "_stats", "_serve", "_sigs_serve",
       "_hashes_serve"), layout = "v1") {
     override protected def buildScratch(
         s: SparkSession, d: String, scratch: String): Unit =
@@ -1628,7 +1624,7 @@ object TextAnalysis extends QueryModule {
     // ---- BM25 served from a PERSISTED inverted index: the same top-10
     // ranking as [[txt_bm25_topk]] (identical oracle — that hash-equality
     // IS the index-correctness proof), but the corpus text is never read.
-    // Build-once artifacts (DerivedArtifacts staleness contract): the
+    // Build-once artifacts (Artifacts staleness contract): the
     // postings list (word, doc_id, tf) and the doc-length table — exactly
     // what Lucene persists, in columnar form. Serving touches postings
     // only: query-term collection frequency is sum(tf) over postings (==
@@ -1639,11 +1635,11 @@ object TextAnalysis extends QueryModule {
     // index once, serve forever; the [[sim_topk_pq_artifact]] precedent
     // for the lexical side. ----
     "txt_bm25_artifact" -> ((s, d) => {
-      val postings = Dedup.DerivedArtifacts.table(s, d, "documents", "bm25_postings")(
+      val postings = Artifacts.table(s, d, "documents", "bm25_postings")(
         Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
           .groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf")))
-      val doclen = Dedup.DerivedArtifacts.table(s, d, "documents", "bm25_doclen")(
+      val doclen = Artifacts.table(s, d, "documents", "bm25_doclen")(
         Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
           .groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
@@ -1681,8 +1677,8 @@ object TextAnalysis extends QueryModule {
     // fragment per term — the cost the compacted generation amortizes to
     // one). ----
     "txt_postings_merge_plan" -> ((s, d) => {
-      val (wh, _, _) = PostingsLakeFixture.compacted(s, d)
-      wh.read(s, "lex_postings")
+      val p = PostingsLakeFixture.build(s, d)
+      PostingsLakeFixture.wh.read(s, s"${p}_postings")
         .groupBy(col("wb").cast("bigint").as("wb"))
         .agg(countDistinct(col("ingest_batch")).as("n_fragments"),
           count(lit(1)).as("n_rows"),
@@ -1693,9 +1689,9 @@ object TextAnalysis extends QueryModule {
     }),
 
     "txt_bm25_compacted" -> ((s, d) => {
-      val (wh, pv, dv) = PostingsLakeFixture.compacted(s, d)
-      val postings = wh.readVersion(s, "lex_postings_serve", Some(pv))
-      val doclen = wh.readVersion(s, "lex_doclen_serve", Some(dv))
+      val p = PostingsLakeFixture.build(s, d)
+      val postings = PostingsLakeFixture.wh.readVersion(s, s"${p}_postings_serve")
+      val doclen = PostingsLakeFixture.wh.readVersion(s, s"${p}_doclen_serve")
       val qterms = postings.filter(!col("word").isin(stop: _*))
         .groupBy(col("word")).agg(sum(col("tf")).as("cf"))
         .orderBy(desc("cf"), col("word")).limit(5).select(col("word"))
@@ -1713,11 +1709,12 @@ object TextAnalysis extends QueryModule {
     // txt_bm25_topk/artifact/compacted — hash equality across all four
     // serve layouts IS the layout-independence proof. ----
     "txt_bm25_hybrid" -> ((s, d) => {
-      val wh = PostingsLakeHybridFixture.warehouse(s, d)
+      val p = PostingsLakeHybridFixture.build(s, d)
+      val wh = PostingsLakeHybridFixture.wh
       val postings = graft.streaming.StreamRunner.hybridLakeRead(
-        s, wh, "lex_postings", "lex_postings_serve")
+        s, wh, s"${p}_postings", s"${p}_postings_serve")
       val doclen = graft.streaming.StreamRunner.hybridLakeRead(
-        s, wh, "lex_doclen", "lex_doclen_serve")
+        s, wh, s"${p}_doclen", s"${p}_doclen_serve")
       val qterms = postings.filter(!col("word").isin(stop: _*))
         .groupBy(col("word")).agg(sum(col("tf")).as("cf"))
         .orderBy(desc("cf"), col("word")).limit(5).select(col("word"))
@@ -1875,9 +1872,9 @@ object TextAnalysis extends QueryModule {
       // INVARIANT (oracle ORDER BY doc_id): the output's doc_id order
       // depends on Spark preserving row order through the projection chain
       // above the pushed-down sort — nothing between this orderBy and the
-      // final select may introduce an exchange. Any future operator added
-      // above piiPerDoc that shuffles breaks the ordered-output contract
-      // silently; re-add a top-level orderBy if that ever happens.
+      // final select may introduce an exchange. PiiSpec's plan-shape test
+      // fails if an operator added above piiPerDoc shuffles; re-add a
+      // top-level orderBy if that ever happens.
       // ORDER BY placed on the source key BELOW the regex projection (the
       // sh_raw_typed_load sampler pattern): a global sort's range-sampling
       // pass re-executes its child, so sorting first means the sampler
@@ -2192,116 +2189,71 @@ object TextAnalysis extends QueryModule {
         (col("w1") + coalesce(col("dw"), lit(0L))).cast("bigint").as("w2"))
   }
 
-  /** Fragmented → compacted postings lake, built once per corpus
-    * fingerprint: the batch postings matrix written as 8 synthetic ingest
-    * generations — the exact `(wb, ingest_batch)` leaf layout
-    * [[graft.streaming.StreamRunner.postingsIngestToWarehouse]]
-    * accumulates — then compacted by
-    * [[graft.streaming.StreamRunner.compactPostings]] into a versioned
-    * wb-partitioned serve generation. Returns the lake's warehouse plus
-    * the committed (postings, doclen) snapshot versions, so the serving
-    * query reads a PINNED generation (lineage-stable even if a later
-    * compaction commits).
+  /** Write the batch postings matrix under `prefix` as the synthetic
+    * ingest generations `ids` of the exact `(wb, ingest_batch)` leaf
+    * layout [[graft.streaming.StreamRunner.postingsIngestToWarehouse]]
+    * accumulates (`ingest_batch = doc_id % 8`), noting each landed id in
+    * the live-batch ledger.
     */
-  private object PostingsLakeFixture {
-    private val base =
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_postingslake")
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
-    def compacted(s: SparkSession, d: String): (graft.pipeline.Warehouse, Int, Int) = {
-      val key = s"lake_v1_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-      val wh = new graft.pipeline.Warehouse(new java.io.File(base, key).getPath)
-      val (pv, dv) = built.computeIfAbsent(key, _ =>
-        // the marker commits LAST, so a committed version implies the
-        // whole build (fragmented lake included) completed — a crashed
-        // prior build reruns here
-        (wh.currentVersion("lex_postings_serve"),
-          wh.currentVersion("lex_doclen_serve")) match {
-          case (Some(p), Some(dl)) => (p, dl)
-          case _ =>
-            val toks = Tables.documents(s, d)
-              .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-            wh.partitionedUpsertWrite(
-              toks.groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
-                .withColumn("wb",
-                  graft.functions.TextFunctions.md5Bits(col("word"), 1))
-                .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L))),
-              "lex_postings", Seq("wb", "ingest_batch"))
-            wh.partitionedUpsertWrite(
-              toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-                .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L))),
-              "lex_doclen", Seq("ingest_batch"))
-            graft.streaming.StreamRunner.compactPostings(s, wh, "lex")
-        })
-      (wh, pv, dv)
+  private def writePostingsFragments(s: SparkSession, d: String,
+      wh: graft.pipeline.Warehouse, prefix: String, ids: Seq[Long]): Unit = {
+    val toks = Tables.documents(s, d)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+    val cond = col("ingest_batch").isin(ids: _*)
+    wh.partitionedUpsertWrite(
+      toks.groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
+        .withColumn("wb", graft.functions.TextFunctions.md5Bits(col("word"), 1))
+        .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L)))
+        .filter(cond),
+      s"${prefix}_postings", Seq("wb", "ingest_batch"))
+    wh.partitionedUpsertWrite(
+      toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+        .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L)))
+        .filter(cond),
+      s"${prefix}_doclen", Seq("ingest_batch"))
+    ids.foreach { b =>
+      wh.noteLiveBatch(s"${prefix}_postings", b)
+      wh.noteLiveBatch(s"${prefix}_doclen", b)
     }
   }
 
-  /** The HYBRID postings-lake fixture: the same 8-synthetic-generation
-    * `(wb, ingest_batch)` layout as [[PostingsLakeFixture]], but the
-    * serve snapshots are folded over batches 0–5 ONLY and those
-    * fragments fully VACUUMED ([[graft.streaming.StreamRunner.gcLake]],
-    * slack 0) before batches 6–7 land — so `txt_bm25_hybrid`'s
-    * snapshot+tail read has a load-bearing tail AND a load-bearing
-    * snapshot (batches 0–5 exist nowhere else). A `__DONE` marker
-    * commits LAST (the StreamedFixture rule): the mid-build compaction
-    * means a committed `_serve` version alone no longer implies a
-    * complete build.
+  /** Fragmented → compacted postings lake: all 8 synthetic ingest
+    * generations written, then compacted by
+    * [[graft.streaming.StreamRunner.compactPostings]] into a versioned
+    * wb-partitioned serve generation before publish, so the published
+    * `_serve` snapshots are never re-committed.
     */
-  private object PostingsLakeHybridFixture {
-    private val base =
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_postingslake_hyb")
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private object PostingsLakeFixture extends StreamedFixture(
+    "pl", Seq("_postings", "_doclen", "_postings_serve", "_doclen_serve"),
+    layout = "v1") {
+    override protected def buildScratch(
+        s: SparkSession, d: String, scratch: String): Unit = {
+      writePostingsFragments(s, d, wh, scratch, 0L until 8L)
+      graft.streaming.StreamRunner.compactPostings(s, wh, scratch): Unit
+    }
+  }
 
-    def warehouse(s: SparkSession, d: String): graft.pipeline.Warehouse =
-      synchronized {
-        val key = s"lake_v1_${Dedup.DerivedArtifacts.fingerprint(d, "documents")}"
-        val wh = new graft.pipeline.Warehouse(
-          new java.io.File(base, key).getPath)
-        if (!built.contains(key)) {
-          val done = new java.io.File(wh.root, "__DONE")
-          if (!done.exists()) {
-            // a crashed prior build may have left partial tables — clean
-            // slate before rebuilding (content is deterministic)
-            Seq("lex_postings", "lex_doclen", "lex_postings_serve",
-              "lex_doclen_serve").foreach(wh.dropTable)
-            val toks = Tables.documents(s, d)
-              .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-            def writeFrags(ids: Seq[Long]): Unit = {
-              val cond = col("ingest_batch").isin(ids: _*)
-              wh.partitionedUpsertWrite(
-                toks.groupBy(col("word"), col("doc_id"))
-                  .agg(count(lit(1)).as("tf"))
-                  .withColumn("wb",
-                    graft.functions.TextFunctions.md5Bits(col("word"), 1))
-                  .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L)))
-                  .filter(cond),
-                "lex_postings", Seq("wb", "ingest_batch"))
-              wh.partitionedUpsertWrite(
-                toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-                  .withColumn("ingest_batch", pmod(col("doc_id"), lit(8L)))
-                  .filter(cond),
-                "lex_doclen", Seq("ingest_batch"))
-              // live-batch ledger markers for exactly the landed ids
-              ids.foreach { b =>
-                wh.noteLiveBatch("lex_postings", b)
-                wh.noteLiveBatch("lex_doclen", b)
-              }
-            }
-            writeFrags(0L until 6L)
-            graft.streaming.StreamRunner.compactPostings(s, wh, "lex")
-            graft.streaming.StreamRunner.gcLake(s, wh, "lex_postings",
-              "lex_postings_serve", slackGenerations = 0)
-            graft.streaming.StreamRunner.gcLake(s, wh, "lex_doclen",
-              "lex_doclen_serve", slackGenerations = 0)
-            writeFrags(Seq(6L, 7L))
-            java.nio.file.Files.write(done.toPath, "v1".getBytes("UTF-8")): Unit
-          }
-          built.add(key): Unit
-        }
-        wh
-      }
+  /** The HYBRID postings-lake fixture: the same layout as
+    * [[PostingsLakeFixture]], but the serve snapshots are folded over
+    * batches 0–5 ONLY and those fragments fully VACUUMED
+    * ([[graft.streaming.StreamRunner.gcLake]], slack 0) before batches
+    * 6–7 land — so `txt_bm25_hybrid`'s snapshot+tail read has a
+    * load-bearing tail AND a load-bearing snapshot (batches 0–5 exist
+    * nowhere else).
+    */
+  private object PostingsLakeHybridFixture extends StreamedFixture(
+    "plh", Seq("_postings", "_doclen", "_postings_serve", "_doclen_serve"),
+    layout = "v1") {
+    override protected def buildScratch(
+        s: SparkSession, d: String, scratch: String): Unit = {
+      writePostingsFragments(s, d, wh, scratch, 0L until 6L)
+      graft.streaming.StreamRunner.compactPostings(s, wh, scratch)
+      graft.streaming.StreamRunner.gcLake(s, wh, s"${scratch}_postings",
+        s"${scratch}_postings_serve", slackGenerations = 0)
+      graft.streaming.StreamRunner.gcLake(s, wh, s"${scratch}_doclen",
+        s"${scratch}_doclen_serve", slackGenerations = 0)
+      writePostingsFragments(s, d, wh, scratch, Seq(6L, 7L))
+    }
   }
 
   /** The trained perceptron SERVED from a persisted 17-row model artifact
@@ -2317,7 +2269,7 @@ object TextAnalysis extends QueryModule {
     * one broadcast join.
     */
   private def perceptronModel(s: SparkSession, d: String): DataFrame =
-    Dedup.DerivedArtifacts.table(s, d, "documents", "perceptron_w")(
+    Artifacts.table(s, d, "documents", "perceptron_w")(
       perceptronWeights(s, d))
 
   /** Probe keys for the CMS audit: seven corpus words + one absent word

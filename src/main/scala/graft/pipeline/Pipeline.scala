@@ -412,8 +412,8 @@ class Warehouse(val root: String, val format: String = "parquet") {
 
   /** A snapshot dir counts ONLY with its writer-completion `_SUCCESS`
     * marker — bare directory existence may be crash debris from a write
-    * that died before the marker flip (the same rule DerivedArtifacts
-    * enforces for derived tables).
+    * that died before the marker flip (the rule
+    * [[graft.operators.Artifacts]] enforces with its done marker).
     */
   private def versionCommitted(name: String, v: Int): Boolean =
     new java.io.File(new java.io.File(tablePath(name), s"_v=$v"), "_SUCCESS").exists()

@@ -106,11 +106,11 @@ class AqeSkewSpec extends SparkSuiteBase {
     assert(persisted == direct)
     // the artifact landed on disk, fingerprint-keyed (a fresh JVM would
     // READ this instead of re-scanning the probe side)
-    val derivedRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_derived")
-    val artifact = Option(derivedRoot.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("salt_factor_l_orderkey_"))
-    assert(artifact.nonEmpty, "the decision must persist as a DerivedArtifacts table")
-    assert(artifact.forall(f => new java.io.File(f, "_SUCCESS").exists()))
+    val store = graft.operators.Artifacts
+    val artifact = store.published("salt_factor_l_orderkey")
+    assert(artifact.nonEmpty, "the decision must persist as a store artifact")
+    assert(artifact.forall(k =>
+      new java.io.File(store.wh.tablePath(k), "_SUCCESS").exists()))
     // a probe that would EXPLODE if scanned proves the re-read path: the
     // memo serves the second call without touching the probe expression
     val second = Relational.persistedSaltFactor(

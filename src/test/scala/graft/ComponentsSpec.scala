@@ -77,9 +77,7 @@ class ComponentsSpec extends SparkSuiteBase {
     val dirA = mkDir(Seq(10L, 21L, 32L))
     val dirB = mkDir(Seq(10L, 43L, 54L))
     assert(Dedup.queries("dedup_incremental")(spark, dirA).collect() != null)
-    val derivedRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_derived")
-    def sigDirs = Option(derivedRoot.listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("corpus_minhash_sigs_")).toSet
+    def sigDirs = graft.operators.Artifacts.published("corpus_minhash_sigs").toSet
     val afterA = sigDirs
     assert(afterA.nonEmpty)
     // building dir B's artifact must leave dir A's on disk

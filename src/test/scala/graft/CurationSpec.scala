@@ -386,7 +386,7 @@ class CurationSpec extends SparkSuiteBase {
     assert(manifest.map(_.getAs[Long]("shard")).toSet.subsetOf((0L until 8L).toSet))
     // a one-shard read prunes at the partition level of the real export
     val t = graft.operators.Curation.ExportFixture.tableName(spark, sf0001)
-    val one = graft.operators.Curation.ExportFixture.wh.read(spark, t)
+    val one = graft.operators.Artifacts.wh.read(spark, t)
       .filter(col("shard") === 3)
     val scan = one.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f

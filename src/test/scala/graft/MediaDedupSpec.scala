@@ -188,7 +188,7 @@ class MediaDedupSpec extends SparkSuiteBase {
   test("media export is versioned: racing builders commit DISTINCT snapshots, both readable") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import org.apache.spark.sql.Row
-    val wh = Multimodal.MediaExportFixture.wh
+    val wh = graft.operators.Artifacts.wh
     val key = "media_keep_spec_race"
     wh.dropTable(key)
     val schema = StructType(Seq(StructField("doc_id", LongType),

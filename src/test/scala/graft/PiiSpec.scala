@@ -171,4 +171,36 @@ class PiiSpec extends SparkSuiteBase {
     assert(gotMulti === expMulti.toLong)
     assert(expMulti > 0)
   }
+
+  test("txt_pii_scrub: no exchange sits above the pushed-down sort in the executed plan") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val df = SparkEntry.queries("txt_pii_scrub")(spark, sf0001)
+    val ids = df.collect().map(_.getLong(0)).toSeq
+    assert(ids.nonEmpty && ids == ids.sorted, "output must arrive in doc_id order")
+    // the final AQE plan (stages unwrapped), walked from the root down
+    // to the global sort
+    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    def exchangesAbove(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: SortExec if s.global => Nil
+      case e: Exchange => e +: unwrap(e).flatMap(exchangesAbove)
+      case other => unwrap(other).flatMap(exchangesAbove)
+    }
+    def globalSorts(p: SparkPlan): Seq[SortExec] = p match {
+      case s: SortExec if s.global => s +: unwrap(s).flatMap(globalSorts)
+      case other => unwrap(other).flatMap(globalSorts)
+    }
+    val plan = df.queryExecution.executedPlan
+    val sorts = globalSorts(plan)
+    assert(sorts.size == 1, s"expected one global sort, got ${sorts.size}")
+    assert(sorts.head.sortOrder.map(_.child.toString).exists(_.contains("doc_id")))
+    val above = exchangesAbove(plan)
+    assert(above.isEmpty, "an exchange above the doc_id sort breaks the " +
+      s"ordered output: ${above.map(_.simpleStringWithNodeId()).mkString("; ")}")
+  }
 }

@@ -473,12 +473,11 @@ class SimilaritySpec extends SparkSuiteBase {
     val served = SparkEntry.queries("sim_topk_pq_artifact")(spark, sf0001).collect().map(_.toSeq).toSeq
     assert(served == inline)
     // the codes table genuinely exists as a lake artifact on disk
-    val derived = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_derived").getPath)
-    val tables = Option(derived.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("pq_codes_"))
+    val store = graft.operators.Artifacts
+    val tables = store.published("pq_codes")
     assert(tables.nonEmpty, "pq_codes artifact missing from the derived lake")
-    assert(tables.forall(t => new java.io.File(t, "_SUCCESS").exists()))
+    assert(tables.forall(t =>
+      new java.io.File(store.wh.tablePath(t), "_SUCCESS").exists()))
   }
 
   test("sim_topk_ivfpq equals a Scala replay: cell probe, then ADC over only that cell's codes") {
