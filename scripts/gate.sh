@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -11,6 +11,16 @@ stray=$(grep -rln 'java.io.tmpdir' src/main \
   | grep -vx 'src/main/scala/graft/operators/Artifacts.scala' || true)
 if [[ -n "$stray" ]]; then
   echo "java.io.tmpdir outside graft.operators.Artifacts:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+
+echo "== query lifecycle guard =="
+# per-query cleanup and work counting live in the one harness
+stray=$(grep -rlE 'catalog\.clearCache|getPersistentRDDs|addSparkListener' src/main \
+  | grep -vx 'src/main/scala/graft/QueryRun.scala' || true)
+if [[ -n "$stray" ]]; then
+  echo "query lifecycle code outside graft.QueryRun:" >&2
   echo "$stray" >&2
   exit 1
 fi

@@ -15,45 +15,23 @@ object Bench {
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // optional comma-separated name filter for local outlier re-measurement
     // (the driver sets no filter and times the full suite)
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benchQueries = nameFilter match {
-      case Some(f) =>
-        // fail fast on unknown names: a typo'd filter would silently omit
-        // the query and misread as "removed/improved" when re-measuring
-        val unknown = f.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_FILTER names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(f).toMap
-      case None => SparkEntry.queries
-    }
+    val benchQueries = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(QueryRun.select)
+      .getOrElse(QueryRun.queries.keys.toSeq)
     val spark = Sessions.fromEnv()
     // Warm the JVM + codegen + parquet footer cache with the tiny smoke
     // query so one-time session costs aren't billed to the first timed query.
-    try { SparkEntry.entry(spark).write.format("noop").mode("overwrite").save() }
-    catch { case _: Throwable => () }
+    QueryRun.run(spark, "entry", SparkEntry.entry(spark), QueryRun.noop)
     // Per run, per query: elapsed seconds, or None on failure. Failures land
     // in `errors` and are EXCLUDED from totals — silently-swallowed failures
     // previously made a fast-failing query "improve" the headline number.
     val runs: Seq[Map[String, Option[Double]]] = (1 to nRuns).map { _ =>
-      benchQueries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop sink: every column is computed and serialized, nothing is
-        // written — unlike count(), which lets Catalyst prune the whole
-        // projection and would time only the scan.
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // free this query's cached/checkpointed RDDs so 50+ queries in one
-        // session don't squeeze each other's execution memory
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        name -> (if (ok) Some(elapsed) else None)
-      }
+      benchQueries.map { name =>
+        val r = QueryRun.runQuery(spark, sfDir, name, QueryRun.noop)
+        r.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+        name -> Option.when(r.ok)(r.seconds)
+      }.toMap
     }
-    val names = benchQueries.keys.toSeq.sorted
+    val names = benchQueries.sorted
     val samples: Map[String, Seq[Double]] =
       names.map(n => n -> runs.flatMap(_.getOrElse(n, None))).toMap
     val med = samples.collect { case (n, xs) if xs.nonEmpty => n -> median(xs) }

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-
-/** Dumps formatted physical plans for the headline queries to PLANS.md —
-  * the audit trail for the scale review: broadcast placement, pushed
-  * filters, read schemas, exchange count, codegen spans.
+/** The query lists whose formatted physical plans make up PLANS.md
+  * (`runMain graft.QueryRun plans <sfDir> headline,audit`) — the audit
+  * trail for the scale review: broadcast placement, pushed filters, read
+  * schemas, exchange count, codegen spans.
   */
 object PlanDump {
   val headline: Seq[String] = Seq(
@@ -24,6 +22,12 @@ object PlanDump {
     * top-k + broadcast, partial aggs.
     */
   val audit: Seq[String] = Seq(
+    // the bucketed lake layout: lineitem/orders bucketed+sorted on the
+    // join key, so the fact-fact join AND the per-orderkey aggregation
+    // plan with NO Exchange on either join input (`Bucketed: true`,
+    // `SelectedBucketsCount` in the scans); the only exchange-like node
+    // left is the top-k gather
+    "q3_join_bucketed",
     "q6_selective", "q4_exists", "q_histogram", "q_multi_distinct",
     "q10_returned", "evt_latest_by_key", "evt_retention",
     "evt_scd2_intervals", "evt_time_to_convert", "evt_daily_gapfill",
@@ -453,48 +457,4 @@ object PlanDump {
     // LocalTableScan of post-pass health rows — the maintenance ran at
     // fixture-build time; the pass itself is metadata-driven)
     "pipe_warehouse_maintain")
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = Sessions.base("local[8]", 8)
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# Physical plans (headline queries, " + sfDir + ")\n\n")
-    sb.append("Generated by `graft.PlanDump`. Things to check per plan: " +
-      "broadcasts on dimension sides, PushedFilters reaching the scan, " +
-      "ReadSchema pruned to used columns, one exchange per semantic shuffle.\n")
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
-    }
-    // Bucketed-layout query (backlog #8, now a first-class oracle-checked
-    // query): q3_join_bucketed reads lineitem/orders bucketed+sorted on the
-    // join key — the fact-fact join AND the per-orderkey aggregation plan
-    // with NO Exchange on either join input (`Bucketed: true`,
-    // `SelectedBucketsCount` in the scans). The lake layout that turns the
-    // star join's fact-fact shuffle into a local merge at 100 TB.
-    sb.append("\n## q3_join_bucketed (exchange-free bucketed fact-fact join)\n\n")
-    sb.append("The JOIN reads both bucketed tables co-located — no Exchange on " +
-      "either join input, and the groupBy(o_orderkey, ...) reuses the same " +
-      "partitioning, so the only exchange-like node left is the top-k gather.\n\n```\n")
-    val bktQ = SparkEntry.queries("q3_join_bucketed")(spark, sfDir)
-    sb.append(bktQ.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    sb.append("```\n")
-    sb.append("\n# Plan audit — round-4 queries (not in the fixed headline set)\n")
-    audit.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
-    }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plandump] wrote $out")
-    spark.stop()
-  }
 }

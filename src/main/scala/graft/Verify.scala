@@ -5,25 +5,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
-      case Array(s, o) => (s, o, Set.empty[String])
-      case Array(s, o, names) => (s, o, names.split(',').toSet) // local iteration filter
+      case Array(s, o) => (s, o, None)
+      case Array(s, o, names) => (s, o, Some(QueryRun.select(names))) // local iteration filter
     }
     val spark = Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        // free per-query cached/checkpointed RDDs (memory hygiene across
-        // the full query sweep)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+    val sink = QueryRun.parquet(outDir)
+    only.getOrElse(QueryRun.queries.keys.toSeq).foreach { name =>
+      QueryRun.runQuery(spark, sfDir, name, sink).error
+        .foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -43,7 +33,7 @@ object Verify {
     // which form it uses — round 1 reported no_oracle for all queries because
     // only the bare key was written.
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

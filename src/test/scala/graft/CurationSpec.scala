@@ -398,7 +398,6 @@ class CurationSpec extends SparkSuiteBase {
   }
 
   test("pipe_warehouse_maintain: a second idle pass over all eleven real lakes acts on nothing and launches no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.streaming.StreamRunner
     val p = Curation.WarehouseMaintFixture.build(spark, sf0001)
     val wh = Curation.WarehouseMaintFixture.wh
@@ -425,22 +424,13 @@ class CurationSpec extends SparkSuiteBase {
         () => StreamRunner.compactFrontier(spark, wh, s"${p}_fr")._1),
       ("frontier_settled", s"${p}_fr_settled", s"${p}_fr_settled_serve",
         () => wh.currentVersion(s"${p}_fr_settled_serve").getOrElse(0)))
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        seen.add(js.jobId): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    QueryRun.watch(spark) { c =>
       val acts = StreamRunner.maintainLakes(spark, wh, lakes)
-      val lb = classOf[org.apache.spark.SparkContext]
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-      assert(seen.isEmpty,
-        s"an idle warehouse-wide pass must launch no Spark job, saw $seen")
+      val jobs = c.total.jobs
+      assert(jobs == 0,
+        s"an idle warehouse-wide pass must launch no Spark job, saw $jobs")
       assert(acts.forall(a => !a._2 && a._3 == 0L && a._4 == 0L),
         s"an idle pass must act on nothing: $acts")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

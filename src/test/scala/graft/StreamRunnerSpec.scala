@@ -826,7 +826,6 @@ class StreamRunnerSpec extends SparkSuiteBase {
   }
 
   test("persisted fold watermark: hybrid reads resolve the boundary from the sidecar with NO Spark job at plan time") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.Row
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val wh = new Warehouse(tmpDir("thrumeta"))
@@ -844,23 +843,10 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // scans' own resolution (footer/listing) jobs: the watermark is a
     // metadata read, not a max(ingest_batch) scan of the snapshot —
     // measured DIFFERENTIALLY against constructing the two plain reads
-    def jobsDuring(body: => Unit): Int = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          seen.add(js.jobId): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // flush the listener bus so any construction-time job is visible
-        val lb = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-        seen.size
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    // (reading the counters flushes the listener bus first, so any
+    // construction-time job is visible)
+    def jobsDuring(body: => Unit): Long =
+      QueryRun.watch(spark) { c => body; c.total.jobs }
     val baseline = jobsDuring {
       wh.readVersion(spark, "lk_serve", None)
       wh.read(spark, "lk"): Unit
@@ -887,26 +873,16 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // an IDLE maintenance pass is metadata-only: the lake is folded and
     // vacuumed (no tail, nothing reclaimable), so the policy must
     // launch NO Spark job and report no actions
-    val seen2 = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val idleListener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        seen2.add(js.jobId): Unit
-      }
+    val acts = QueryRun.watch(spark) { c =>
+      val a = StreamRunner.maintainLakes(spark, wh, Seq(
+        ("lk", "lk", "lk_serve",
+          () => StreamRunner.foldForward(spark, wh, "lk", "lk_serve",
+            t => Right(t), Nil))))
+      val jobs = c.total.jobs
+      assert(jobs == 0,
+        s"an idle maintenance pass must launch no Spark job, saw $jobs")
+      a
     }
-    spark.sparkContext.addSparkListener(idleListener)
-    val acts =
-      try {
-        val a = StreamRunner.maintainLakes(spark, wh, Seq(
-          ("lk", "lk", "lk_serve",
-            () => StreamRunner.foldForward(spark, wh, "lk", "lk_serve",
-              t => Right(t), Nil))))
-        val lb = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-        assert(seen2.isEmpty,
-          s"an idle maintenance pass must launch no Spark job, saw $seen2")
-        a
-      } finally spark.sparkContext.removeSparkListener(idleListener)
     assert(acts === Seq(("lk", false, 0L, 0L, 2L)),
       "idle pass: no fold, no vacuum, no prune, version kept")
     // LEGACY SELF-HEAL: strip the current generation's sidecar (a
@@ -1015,7 +991,6 @@ class StreamRunnerSpec extends SparkSuiteBase {
 
 
   test("in-loop maintenance cadence: the postings stream folds itself; idle ticks are metadata-only; replay cannot double-fold") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val landing = tmpDir("cadl")
     val wh = new Warehouse(tmpDir("cadw"))
@@ -1054,22 +1029,13 @@ class StreamRunnerSpec extends SparkSuiteBase {
     assert(served === expected)
     // an IDLE cadence tick (nothing foldable, nothing reclaimable) is
     // metadata-only — zero Spark jobs
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        seen.add(js.jobId): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    QueryRun.watch(spark) { c =>
       val acts = StreamRunner.maintainPostings(spark, wh, "cad")
-      val lb = classOf[org.apache.spark.SparkContext]
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-      assert(seen.isEmpty, s"idle cadence tick must launch no job: $seen")
+      val jobs = c.total.jobs
+      assert(jobs == 0, s"idle cadence tick must launch no job: $jobs")
       assert(acts.map(a => (a._1, a._2, a._3, a._4)) ===
         Seq(("postings", false, 0L, 0L), ("doclen", false, 0L, 0L)))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // REPLAY safety: re-running the stream over the same checkpoint
     // fires no batches and changes nothing; two more drops advance the
     // fold exactly once (no double-fold from the re-fired cadence)
@@ -1124,7 +1090,6 @@ class StreamRunnerSpec extends SparkSuiteBase {
   }
 
   test("partition-scoped fold: untouched partitions carry forward by manifest, prune keeps referenced carriers") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.Row
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val wh = new Warehouse(tmpDir("pscope"))
@@ -1171,22 +1136,8 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // resolving the manifest must launch NO job beyond the per-directory
     // scans' own setup — measured differentially against raw loads of
     // the same physical directories
-    def jobsDuring(body: => Unit): Int = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          seen.add(js.jobId): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        val lb = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-        seen.size
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsDuring(body: => Unit): Long =
+      QueryRun.watch(spark) { c => body; c.total.jobs }
     val baseline = jobsDuring {
       spark.read.parquet(s"${wh.tablePath("lk_serve")}/_v=1")
       spark.read.parquet(s"${wh.tablePath("lk_serve")}/_v=2"): Unit
