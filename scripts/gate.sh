@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> query lifecycle guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -22,6 +22,22 @@ stray=$(grep -rlE 'catalog\.clearCache|getPersistentRDDs|addSparkListener' src/m
 if [[ -n "$stray" ]]; then
   echo "query lifecycle code outside graft.QueryRun:" >&2
   echo "$stray" >&2
+  exit 1
+fi
+
+echo "== lake lifecycle guard =="
+# one streaming sink in the library, one partition-scoped fold commit
+# in StreamRunner
+sinks=$(grep -roF '.writeStream' src/main | wc -l)
+if [[ "$sinks" -gt 1 ]]; then
+  echo ".writeStream appears $sinks times in src/main (one sink allowed):" >&2
+  grep -rnF '.writeStream' src/main >&2
+  exit 1
+fi
+manifests=$(grep -oF 'manifestMeta(' src/main/scala/graft/streaming/StreamRunner.scala | wc -l)
+if [[ "$manifests" -gt 1 ]]; then
+  echo "manifestMeta( appears $manifests times in StreamRunner.scala (one fold allowed):" >&2
+  grep -nF 'manifestMeta(' src/main/scala/graft/streaming/StreamRunner.scala >&2
   exit 1
 fi
 

@@ -40,13 +40,25 @@ object StreamRunner {
       partitionCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    transformed.writeStream
-      .outputMode("update")
+    sink(transformed, checkpointDir, trigger, "update") { (batch, _) =>
+      if (!batch.isEmpty) wh.partitionedUpsertWrite(batch, table, partitionCol)
+    }
+
+  /** The one streaming sink every entry point here starts: the stream's
+    * micro-batches run `body` inside foreachBatch under `checkpointDir`,
+    * the unit of recovery.
+    */
+  private def sink(
+      stream: DataFrame,
+      checkpointDir: String,
+      trigger: Trigger,
+      outputMode: String = "append")(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) wh.partitionedUpsertWrite(batch, table, partitionCol)
-      }
+      .foreachBatch(body)
       .start()
 
   /** The streaming form of [[graft.pipeline.Warehouse.writeAuditPublish]]:
@@ -75,14 +87,9 @@ object StreamRunner {
       audit: DataFrame => Option[String],
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    transformed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        gatedPublish(batch, batchId, wh, table, Seq(partitionCol), audit): Unit
-      }
-      .start()
+    sink(transformed, checkpointDir, trigger, "update") { (batch, batchId) =>
+      gatedPublish(batch, batchId, wh, table, Seq(partitionCol), audit): Unit
+    }
 
   /** The per-micro-batch stage → audit-readback → publish/quarantine body
     * shared by every audited streaming sink (factored so new sinks reuse
@@ -226,14 +233,9 @@ object StreamRunner {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       minJaccard: Double = 0.5): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupPublishBatch(batch, batchId, wh, table, audit, minJaccard)
-      }
-      .start()
+    sink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      dedupPublishBatch(batch, batchId, wh, table, audit, minJaccard)
+    }
 
   /** The per-micro-batch dedup'd-publish body shared by
     * [[dedupIngestToWarehouse]] (documents arrive as rows) and
@@ -392,163 +394,59 @@ object StreamRunner {
     * the newest may still be mid-write (dynamic partition overwrite is
     * not directory-atomic). The id probe is a ledger-sized collect.
     */
-  /** The single-table quiesced=false trust rule shared by
-    * [[compactStats]] and [[compactBlockedLake]]: only batch ids
-    * STRICTLY OLDER than the newest are trusted — the newest may be a
-    * mid-publish partition upsert (not directory-atomic); every older
-    * id's publish completed before the serialized foreachBatch began
-    * the next. `Left(v)` means nothing is trustworthy yet (a
-    * single-batch history excludes itself as the newest — publishing
-    * would point `_serve` at an EMPTY generation) and `v` is the
-    * currently-serving version to keep; `Right(df)` is the trusted
-    * subset. The id probe is a ledger-sized collect.
-    */
-  private def trustedOrCurrent(
-      all: DataFrame,
-      wh: Warehouse,
-      serveName: String): Either[Int, DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val ids = all.select(col("ingest_batch").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val committed = ids.toSet -- ids.maxOption
-    if (committed.isEmpty) Left(wh.currentVersion(serveName).getOrElse(0))
-    else Right(all.filter(col("ingest_batch").isin(committed.toSeq: _*)))
-  }
-
   def compactStats(
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
       table: String,
       quiesced: Boolean = true): Int = {
-    import org.apache.spark.sql.functions.{col, max, sum}
+    import org.apache.spark.sql.functions.{col, max}
     val serveName = s"${table}_stats_serve"
-    // a fully-vacuumed lake (schema-less dir after [[gcStats]]) means
-    // "no tail": with a committed snapshot this fold is a no-op; with
-    // none there is nothing to fold at all
-    if (!wh.hasData(s"${table}_stats"))
-      return wh.currentVersion(serveName).getOrElse(
-        throw new IllegalStateException(
-          s"compactStats($table): no stats data and no committed snapshot"))
-    val lake = wh.read(spark, s"${table}_stats")
-    // FOLD-FORWARD: with a committed prior generation, the new fold is
-    // prior snapshot ∪ tail (live partitions above the prior watermark)
-    // — |sources| + tail rows instead of the whole lake, and, crucially,
-    // correct AFTER [[gcStats]] has vacuumed the already-folded
-    // fragments (a whole-lake refold would silently lose their mass).
-    // Rows are normalized to a common shape: a snapshot row's
-    // `folded_thru` and a tail row's `ingest_batch` both mean "the
-    // newest batch this row's mass covers", so one union + groupBy
-    // computes both the sums and the new per-source watermark.
-    val current = wh.currentVersion(serveName)
-    val priorThru = current.map(v => statsThru(spark, wh, serveName, v))
-    val (base, tailAll) = current match {
-      case Some(v) =>
-        val snap = wh.readVersion(spark, serveName, Some(v))
-        (Some(snap.withColumnRenamed("folded_thru", "covers_thru")),
-          lake.filter(col("ingest_batch") > priorThru.get))
-      case None => (None, lake)
-    }
-    val tail =
-      if (quiesced) tailAll
-      else trustedOrCurrent(tailAll, wh, serveName) match {
-        case Left(cv) => return cv
-        case Right(df) => df
-      }
-    // one tail-sized job is both the emptiness probe and the new
-    // watermark; an empty trusted tail never commits (an identical
-    // generation churns retention; an empty FIRST generation would
-    // poison every later watermark read)
-    val tailMax = maxBatch(tail)
-    if (tailMax == Long.MinValue)
-      return current.getOrElse(0)
-    val cols = Seq("source", "n_docs", "total_chars", "n_tokens_bpe",
-      "n_tainted")
-    val tailNorm = tail.select(
-      (cols.map(col) :+ col("ingest_batch").cast("long").as("covers_thru")): _*)
-    val in = base.map(b => b.select((cols.map(col) :+ col("covers_thru")): _*)
-      .unionByName(tailNorm)).getOrElse(tailNorm)
-    val folded = in.groupBy(col("source")).agg(
-      sum(col("n_docs")).cast("bigint").as("n_docs"),
-      sum(col("total_chars")).cast("bigint").as("total_chars"),
-      sum(col("n_tokens_bpe")).cast("bigint").as("n_tokens_bpe"),
-      sum(col("n_tainted")).cast("bigint").as("n_tainted"),
-      max(col("covers_thru")).cast("bigint").as("folded_thru"))
-    // |sources|-sized report frame: one file, not 32 near-empty ones;
-    // the sidecar carries the global fold boundary so the hybrid serve
-    // and the vacuum resolve it without a snapshot read
-    wh.versionedWrite(folded.coalesce(1), serveName, Nil,
-      Map("thru" -> math.max(priorThru.getOrElse(Long.MinValue), tailMax).toString))
+    // FOLD-FORWARD: |sources| + tail rows instead of the whole lake. A
+    // tail row's `ingest_batch` and a snapshot row's `folded_thru` both
+    // mean "the newest batch this row's mass covers", so one union +
+    // groupBy computes both the sums and the new per-source watermark.
+    foldForward(spark, wh, s"${table}_stats", serveName,
+      newestExcluded(wh, serveName, quiesced), Nil,
+      merge = (base, tail) => {
+        val in = tail.select((("source" +: StatsCols).map(col) :+
+          col("ingest_batch").cast("long").as("folded_thru")): _*)
+        base.fold(in)(_.select(in.columns.map(col): _*).unionByName(in))
+          .groupBy(col("source"))
+          .agg(statsSums.head, (statsSums.tail :+
+            max(col("folded_thru")).cast("bigint").as("folded_thru")): _*)
+          // |sources|-sized report frame: one file, not 32 near-empty ones
+          .coalesce(1)
+      })
   }
 
-  /** The stats lake's fold boundary: sidecar-first (one metadata read),
-    * falling back to the |sources|-row `max(folded_thru)` scan for
-    * generations committed before the sidecar existed.
-    */
-  private def statsThru(
-      spark: org.apache.spark.sql.SparkSession,
-      wh: Warehouse,
-      serveName: String,
-      v: Int): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max}
-    // same null-safety and self-healing backfill as [[lakeThru]]
-    wh.versionMeta(serveName, v).get("thru").map(_.toLong).getOrElse {
-      val t = wh.readVersion(spark, serveName, Some(v))
-        .agg(coalesce(max(col("folded_thru")), lit(Long.MinValue)).as("t"))
-        .collect()(0).getLong(0)
-      wh.writeVersionMeta(serveName, v, Map("thru" -> t.toString))
-      t
-    }
+  /** The stats lake's additive metric columns and their folded sums. */
+  private val StatsCols =
+    Seq("n_docs", "total_chars", "n_tokens_bpe", "n_tainted")
+
+  private def statsSums: Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, sum}
+    StatsCols.map(c => sum(col(c)).cast("bigint").as(c))
   }
 
-  /** Stats-lake VACUUM — the GC that makes the accounting lake BOUNDED
-    * in a perpetual ingest: live `ingest_batch` partitions whose mass is
-    * already folded into a retained snapshot are deleted, leaving the
-    * lake |tail| fragments regardless of ingest age. Safe because the
-    * stats lake is PURELY DERIVED: once folded, nothing reads an old
-    * fragment — the hybrid serve reads `> thru`, and [[compactStats]]
-    * folds forward from the snapshot (never the vacuumed fragments).
-    * This asymmetry is why the semantic/IVF lakes have NO vacuum: their
-    * fragments ARE the match corpus the ingest joins against, so they
-    * compact for read layout but retain until a base∪delta ingest shape
-    * exists.
-    *
-    * `slackGenerations` is reader safety: only fragments at or below
-    * the watermark of the (current − slack)-th retained generation are
-    * deleted, so a reader pinned up to `slack` generations behind still
-    * finds every fragment its snapshot does not cover. With the default
-    * slack 1 a single-generation table vacuums nothing. Slack 0 is the
-    * quiesced maintenance-window form (no concurrent readers — the
-    * fixture/build case). Returns the deleted batch ids.
+  /** Stats-lake VACUUM — [[gcLake]] over the accounting lake, which
+    * keeps it BOUNDED in a perpetual ingest. Safe because the stats lake
+    * is PURELY DERIVED: once folded, nothing reads an old fragment — the
+    * hybrid serve reads `> thru`, and [[compactStats]] folds forward
+    * from the snapshot (never the vacuumed fragments). Returns the
+    * deleted batch ids.
     */
   def gcStats(
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
       table: String,
-      slackGenerations: Int = 1): Seq[Long] = {
-    val serveName = s"${table}_stats_serve"
-    val versions = wh.listVersions(serveName)
-    if (versions.size <= slackGenerations) return Nil
-    val boundaryVersion = versions(versions.size - 1 - slackGenerations)
-    val boundary = statsThru(spark, wh, serveName, boundaryVersion)
-    val lakeDir = new java.io.File(wh.tablePath(s"${table}_stats"))
-    Option(lakeDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.isDirectory)
-      .flatMap { f =>
-        val n = f.getName
-        if (!n.startsWith("ingest_batch=")) None
-        else scala.util.Try(n.stripPrefix("ingest_batch=").toLong)
-          .toOption.filter(_ <= boundary).map { k =>
-            graft.pipeline.Warehouse.deleteRecursively(f)
-            wh.dropLiveBatchNote(s"${table}_stats", k)
-            k
-          }
-      }.toSeq.sorted
-  }
+      slackGenerations: Int = 1): Seq[Long] =
+    gcLake(spark, wh, s"${table}_stats", s"${table}_stats_serve",
+      slackGenerations)
 
   /** The snapshot-PLUS-TAIL stats serve — how a mix query reads the
     * accounting while ingest keeps running: the folded `_stats_serve`
     * snapshot covers everything up to the global fold boundary
-    * (max `folded_thru` over the snapshot — a |sources|-row read), and
+    * ([[lakeThru]] — the generation's `thru` sidecar), and
     * the live lake contributes only the partitions STRICTLY ABOVE it
     * (`ingest_batch` is the partition column, so the tail read is
     * directory-pruned to batches the fold never saw). No loss and no
@@ -563,26 +461,21 @@ object StreamRunner {
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
       table: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.col
     val serveName = s"${table}_stats_serve"
     val snap = wh.readVersion(spark, serveName)
-    val thru = statsThru(spark, wh, serveName,
+    val thru = lakeThru(spark, wh, serveName,
       wh.currentVersion(serveName).get)
-    val cols = Seq("source", "n_docs", "total_chars", "n_tokens_bpe",
-      "n_tainted")
+    val cols = ("source" +: StatsCols).map(col)
     // hasData, not a bare read: a fully-vacuumed lake ([[gcStats]]) is a
     // schema-less directory — semantically an EMPTY tail, not an error
     val tail =
-      if (!wh.hasData(s"${table}_stats")) snap.select(cols.map(col): _*).limit(0)
+      if (!wh.hasData(s"${table}_stats")) snap.select(cols: _*).limit(0)
       else wh.read(spark, s"${table}_stats")
         .filter(col("ingest_batch") > thru)
-        .select(cols.map(col): _*)
-    snap.select(cols.map(col): _*).unionByName(tail)
-      .groupBy(col("source")).agg(
-        sum(col("n_docs")).cast("bigint").as("n_docs"),
-        sum(col("total_chars")).cast("bigint").as("total_chars"),
-        sum(col("n_tokens_bpe")).cast("bigint").as("n_tokens_bpe"),
-        sum(col("n_tainted")).cast("bigint").as("n_tainted"))
+        .select(cols: _*)
+    snap.select(cols: _*).unionByName(tail)
+      .groupBy(col("source")).agg(statsSums.head, statsSums.tail: _*)
   }
 
   /** The END-TO-END crawl ingestion sink — raw `.warc.gz` shard FILES
@@ -634,25 +527,20 @@ object StreamRunner {
       .schema(binaryFileSchema)
       .load(landingDir)
       .select(col("path"), col("length")) // content pruned at the scan
-    fileStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch is file METADATA (one row per shard file) — this
-        // collect is bounded by files-per-trigger, never data-sized
-        val paths = batch.select("path").collect().map(_.getString(0)).toSeq
-        // salvage mode: a corrupt member ends its FILE's contribution at
-        // the last verified boundary (crawlTexts' typed-degrade contract).
-        // Loud-fail would be a PERMANENT poison pill here — the checkpoint
-        // replays the same batch against the same corrupt shard forever.
-        if (paths.nonEmpty)
-          dedupPublishBatch(
-            graft.operators.Crawl.crawlTextsFromFiles(spark, paths,
-              salvage = true),
-            batchId, wh, table, audit, minJaccard)
-      }
-      .start()
+    sink(fileStream, checkpointDir, trigger) { (batch, batchId) =>
+      // the batch is file METADATA (one row per shard file) — this
+      // collect is bounded by files-per-trigger, never data-sized
+      val paths = batch.select("path").collect().map(_.getString(0)).toSeq
+      // salvage mode: a corrupt member ends its FILE's contribution at
+      // the last verified boundary (crawlTexts' typed-degrade contract).
+      // Loud-fail would be a PERMANENT poison pill here — the checkpoint
+      // replays the same batch against the same corrupt shard forever.
+      if (paths.nonEmpty)
+        dedupPublishBatch(
+          graft.operators.Crawl.crawlTextsFromFiles(spark, paths,
+            salvage = true),
+          batchId, wh, table, audit, minJaccard)
+    }
   }
 
   /** Streaming IMAGE ingest with perceptual dedup — the multimodal twin
@@ -786,14 +674,9 @@ object StreamRunner {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       retryMaxAge: Option[Long] = DefaultRetryMaxAge): StreamingQuery =
-    mediaStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        frontierPublishBatch(batch, batchId, wh, table, audit, retryMaxAge)
-      }
-      .start()
+    sink(mediaStream, checkpointDir, trigger) { (batch, batchId) =>
+      frontierPublishBatch(batch, batchId, wh, table, audit, retryMaxAge)
+    }
 
   /** Default dangling-retry bound: a source whose last state CHANGE is
     * more than this many batches old stops re-walking and settles
@@ -1087,14 +970,6 @@ object StreamRunner {
       else Some(hybridLakeRead(spark, wh, ledgerName, s"${ledgerName}_serve")
         .select(col("ingest_batch").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet)
-    def trust(serveName: String)(tail: DataFrame): Either[Int, DataFrame] =
-      committed match {
-        case None => Right(tail)
-        case Some(ids) if ids.isEmpty =>
-          Left(wh.currentVersion(serveName).getOrElse(0))
-        case Some(ids) =>
-          Right(tail.filter(col("ingest_batch").isin(ids.toSeq: _*)))
-      }
     // a legacy record lake (pre-db layout) snapshots unpartitioned; the
     // bucketed layout keeps db so the snapshot stays retry-prunable
     val recsName = s"${table}_records"
@@ -1110,9 +985,9 @@ object StreamRunner {
       foldForward(spark, wh, ledgerName, s"${ledgerName}_serve",
         tail => Right(tail), Nil): Unit
     (foldForward(spark, wh, recsName, s"${recsName}_serve",
-        trust(s"${recsName}_serve"), recsParts),
+        trusted(wh, s"${recsName}_serve", committed), recsParts),
       foldForward(spark, wh, s"${table}_settled", s"${table}_settled_serve",
-        trust(s"${table}_settled_serve"), Nil))
+        trusted(wh, s"${table}_settled_serve", committed), Nil))
   }
 
   /** [[frontierSettled]] served from the COMPACTED snapshot — the same
@@ -1186,14 +1061,9 @@ object StreamRunner {
       audit: DataFrame => Option[String],
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    mediaStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaPublishBatch(batch, batchId, wh, tablePrefix, audit)
-      }
-      .start()
+    sink(mediaStream, checkpointDir, trigger) { (batch, batchId) =>
+      mediaPublishBatch(batch, batchId, wh, tablePrefix, audit)
+    }
 
   /** One micro-batch of the routed ingest: decode + route + sign ONCE
     * (localCheckpoint — the RDD-backed router feeds three branches),
@@ -1231,15 +1101,10 @@ object StreamRunner {
       okFormat: String,
       trigger: Trigger,
       maxHamming: Int = 3): StreamingQuery =
-    mediaStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        perceptualPublishBatch(batch, batchId, wh, table, audit,
-          hashArrow, okFormat, maxHamming)
-      }
-      .start()
+    sink(mediaStream, checkpointDir, trigger) { (batch, batchId) =>
+      perceptualPublishBatch(batch, batchId, wh, table, audit,
+        hashArrow, okFormat, maxHamming)
+    }
 
   /** Hash-bucket count of the perceptual signature index's FOLDED
     * generations ([[compactPerceptual]]'s `sb` partitioning) — fixed, so
@@ -1270,10 +1135,9 @@ object StreamRunner {
     *    a delta insert IS its partition id) excluded — the previous
     *    attempt's rows can never drop the replay's docs;
     *  - [[compactPerceptual]] periodically folds base ∪ deltas into a
-    *    NEW `sb`-bucketed generation through
-    *    [[graft.pipeline.Warehouse.versionedWrite]] carrying the fold
-    *    watermark sidecar, and [[gcLake]] then deletes folded delta
-    *    partitions; a crash between the fold commit and the GC can
+    *    NEW `sb`-bucketed generation through [[foldForward]] carrying
+    *    the fold watermark sidecar, and [[gcLake]] then deletes folded
+    *    delta partitions; a crash between the fold commit and the GC can
     *    never double-count — deltas at or below the watermark are
     *    simply never trusted again.
     *
@@ -1414,16 +1278,15 @@ object StreamRunner {
     }
   }
 
-  /** The perceptual index's (base generation, deltas-above-watermark,
-    * current version, prior watermark) — the raw ingredients every
-    * index read composes. An absent base means "never folded" (all
-    * deltas); a vacuumed-empty live lake means "no deltas" (typed empty
-    * frame).
+  /** The perceptual index's (base generation, deltas-above-watermark) —
+    * the raw ingredients every index read composes. An absent base
+    * means "never folded" (all deltas); a vacuumed-empty live lake means
+    * "no deltas" (typed empty frame).
     */
   private def perceptualParts(
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
-      table: String): (Option[DataFrame], DataFrame, Option[Int], Option[Long]) = {
+      table: String): (Option[DataFrame], DataFrame) = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
     val sigsName = s"${table}_sigs"
@@ -1441,7 +1304,7 @@ object StreamRunner {
           StructField("hash_hi", LongType), StructField("hash_lo", LongType),
           StructField("add_n", LongType), StructField("is_insert", BooleanType),
           StructField("ingest_batch", LongType))))
-    (base, deltas, current, priorThru)
+    (base, deltas)
   }
 
   /** Delta INSERT rows lifted to the logical index-row shape. */
@@ -1492,7 +1355,7 @@ object StreamRunner {
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
       table: String): DataFrame = {
-    val (base, deltas, _, _) = perceptualParts(spark, wh, table)
+    val (base, deltas) = perceptualParts(spark, wh, table)
     perceptualRows(base, deltas)
   }
 
@@ -1506,20 +1369,23 @@ object StreamRunner {
       spark: org.apache.spark.sql.SparkSession,
       wh: Warehouse,
       table: String): DataFrame = {
-    val (base, deltas, _, _) = perceptualParts(spark, wh, table)
+    val (base, deltas) = perceptualParts(spark, wh, table)
     perceptualApplyAdds(perceptualRows(base, deltas), deltas)
   }
 
   /** Perceptual-index FOLD — materialize base ∪ deltas as the next
     * `sb`-bucketed generation (the LSM compaction): inserts become
     * rows, count-adds merge into their keepers, and the committed
-    * sidecar watermark hands [[gcLake]] its delete boundary. Unlike
-    * [[foldForward]] this fold is NOT rows-unchanged (adds mutate
-    * n_copies/last_batch), but it shares every other contract: empty
-    * trusted deltas are a no-op, `quiesced = false` trusts only batch
-    * ids strictly older than the newest, and a crash between commit and
-    * GC cannot double-count (deltas at or below the watermark are never
-    * trusted again). Returns the committed (or kept) version.
+    * sidecar watermark hands [[gcLake]] its delete boundary. A crash
+    * between commit and GC cannot double-count (deltas at or below the
+    * watermark are never trusted again). `quiesced = false` trusts only
+    * batch ids strictly older than the newest. The fold is
+    * PARTITION-SCOPED: an insert lands in its own signature's bucket,
+    * and a count-add carries its KEEPER's hash_lo (functionally
+    * determined by the keeper id — the addRows `max` picker), so
+    * `pmod(hash_lo, SigBuckets)` over the deltas is a complete census
+    * of every bucket this fold can change. Returns the committed (or
+    * kept) version.
     */
   def compactPerceptual(
       spark: org.apache.spark.sql.SparkSession,
@@ -1527,58 +1393,12 @@ object StreamRunner {
       table: String,
       quiesced: Boolean = true): Int = {
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val sigsName = s"${table}_sigs"
-    val serveName = s"${sigsName}_serve"
-    if (!wh.hasData(sigsName))
-      return wh.currentVersion(serveName).getOrElse(
-        throw new IllegalStateException(
-          s"compactPerceptual($table): no delta data and no committed snapshot"))
-    val (base, deltasAll, current, priorThru) =
-      perceptualParts(spark, wh, table)
-    val deltas =
-      if (quiesced) deltasAll
-      else trustedOrCurrent(deltasAll, wh, serveName) match {
-        case Left(cv) => return cv
-        case Right(df) => df
-      }
-    // PARTITION-SCOPED, like [[foldForward]]'s single-block-column arm:
-    // one delta-sized probe enumerates the touched `sb` buckets — an
-    // insert lands in its own signature's bucket, and a count-add
-    // carries its KEEPER's hash_lo (functionally determined by the
-    // keeper id — the addRows `max` picker), so pmod over the deltas is
-    // a complete census of every bucket this fold can change. Only
-    // those buckets' base rows are re-merged and rewritten; untouched
-    // buckets carry forward by manifest reference.
-    import org.apache.spark.sql.functions.{coalesce, collect_set, max => fmax}
-    val sbOf = pmod(col("hash_lo"), lit(SigBuckets))
-    val probe = deltas.agg(
-      coalesce(fmax(col("ingest_batch").cast("long")),
-        lit(Long.MinValue)).as("t"),
-      collect_set(sbOf.cast("string")).as("touched")).collect()(0)
-    val tailMax = probe.getLong(0)
-    if (tailMax == Long.MinValue)
-      return current.getOrElse(0)
-    val touched = probe.getSeq[String](1).sorted
-    val priorMap: Map[String, Int] = current match {
-      case None => Map.empty
-      case Some(v) => wh.manifestOf(serveName, v) match {
-        case Some((_, m)) => m
-        case None => wh.partitionValuesOf(serveName, v, "sb").map(_ -> v).toMap
-      }
-    }
-    val baseT = base.map { b =>
-      // predicate on the PARTITION column when the generation carries it
-      // (directory-level pruning); a pmod fallback stays correct for any
-      // legacy unpartitioned generation
-      val key = if (b.columns.contains("sb")) col("sb") else sbOf
-      b.filter(touched.map(s => key === lit(s).cast("long")).reduce(_ || _))
-    }
-    val merged = perceptualApplyAdds(perceptualRows(baseT, deltas), deltas)
-      .withColumn("sb", sbOf)
-    wh.versionedWriteWith(merged.repartition(col("sb")), serveName, Seq("sb"),
-      nv => Map("thru" ->
-        math.max(priorThru.getOrElse(Long.MinValue), tailMax).toString) ++
-        wh.manifestMeta("sb", priorMap ++ touched.map(_ -> nv)))
+    val serveName = s"${table}_sigs_serve"
+    foldForward(spark, wh, s"${table}_sigs", serveName,
+      newestExcluded(wh, serveName, quiesced), Seq("sb"),
+      merge = (base, deltas) =>
+        perceptualApplyAdds(perceptualRows(base, deltas), deltas),
+      bucketOf = _ => pmod(col("hash_lo"), lit(SigBuckets)))
   }
 
   /** Streaming IVF index ingest — the foreachBatch twin of
@@ -1612,14 +1432,9 @@ object StreamRunner {
     val (cellCol, csCol) =
       graft.operators.Similarity.cellAssignExpr(embStream.sparkSession, centroids)
     val assigned = embStream.select(col("vec_id"), col("embedding"), cellCol, csCol)
-    assigned.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfPublishBatch(batch, batchId, wh, table, audit)
-      }
-      .start()
+    sink(assigned, checkpointDir, trigger) { (batch, batchId) =>
+      ivfPublishBatch(batch, batchId, wh, table, audit)
+    }
   }
 
   /** The per-micro-batch publish body of [[ivfIngestToWarehouse]] (the
@@ -1682,17 +1497,12 @@ object StreamRunner {
       trigger: Trigger = Trigger.AvailableNow(),
       minCos: Double = 0.25,
       maintainEvery: Int = 0): StreamingQuery =
-    embStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticPublishBatch(batch, batchId, planes, wh, table, audit, minCos)
-        // the same in-loop cadence as [[postingsIngestToWarehouse]]
-        if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
-          maintainSemantic(batch.sparkSession, wh, table): Unit
-      }
-      .start()
+    sink(embStream, checkpointDir, trigger) { (batch, batchId) =>
+      semanticPublishBatch(batch, batchId, planes, wh, table, audit, minCos)
+      // the same in-loop cadence as [[postingsIngestToWarehouse]]
+      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
+        maintainSemantic(batch.sparkSession, wh, table): Unit
+    }
 
   /** The per-micro-batch body of [[semanticIngestToWarehouse]] —
     * `private[graft]` so the semantic-lake fixture can replay the REAL
@@ -1824,20 +1634,10 @@ object StreamRunner {
 
   /** The shared body: a `(blockCol, ingest_batch)`-appended lake
     * rewritten as ONE blockCol-partitioned versioned `_serve`
-    * generation, rows unchanged. Every streamed lake that appends one
-    * leaf per (block, batch) compacts through here — the semantic lake
-    * on `code`, the IVF lake on `cell`, the corpus lake on `source`.
-    *
-    * FOLD-FORWARD, like [[compactStats]]: with a committed prior
-    * generation, the new generation is prior snapshot ∪ live tail
-    * (partitions strictly above the prior watermark = the snapshot's max
-    * `ingest_batch`, kept as a data column exactly for this). Required
-    * for correctness once [[gcLake]] vacuums folded fragments — a
-    * whole-lake refold would silently lose their rows — and it is also
-    * the no-op guard: an empty trusted tail over an existing snapshot
-    * returns the current version instead of churning an identical
-    * generation (which would burn pruneVersions retention out from
-    * under pinned readers).
+    * generation, rows unchanged ([[foldForward]]). Every streamed lake
+    * that appends one leaf per (block, batch) compacts through here —
+    * the semantic lake on `code`, the IVF lake on `cell`, the corpus
+    * lake on `source`.
     */
   private def compactBlockedLake(
       spark: org.apache.spark.sql.SparkSession,
@@ -1846,22 +1646,43 @@ object StreamRunner {
       blockCol: String,
       quiesced: Boolean): Int =
     foldForward(spark, wh, table, s"${table}_serve",
-      trust = tail =>
-        if (quiesced) Right(tail)
-        else trustedOrCurrent(tail, wh, s"${table}_serve"),
-      partitionCols = Seq(blockCol))
+      newestExcluded(wh, s"${table}_serve", quiesced), Seq(blockCol))
 
-  /** The one fold-forward implementation every rows-unchanged lake
-    * compaction shares ([[compactBlockedLake]], [[compactDedupIndex]],
-    * [[compactFrontier]]): new generation = prior snapshot ∪ trusted
-    * live tail (partitions strictly above the prior watermark), rows
-    * unchanged, published as a versioned snapshot. `trust` is each
-    * lake's mid-publish guard over the TAIL — `Right` the trustable
-    * subset, `Left` the version to keep serving when nothing in the
-    * tail can be trusted yet. An empty trusted tail over an existing
-    * snapshot is a NO-OP (returns the current version): committing an
-    * identical generation would only churn the retention window out
-    * from under pinned readers.
+  /** The one fold every lake compaction shares, and the only code here
+    * that commits a snapshot generation: new generation = `merge`(prior
+    * snapshot, trusted live tail), the tail being the live partitions
+    * strictly above the prior watermark. FOLD-FORWARD is required for
+    * correctness once [[gcLake]] vacuums folded fragments — a whole-lake
+    * refold would silently lose their rows. The default merge passes
+    * rows through unchanged ([[compactBlockedLake]],
+    * [[compactDedupIndex]], [[compactFrontier]], [[compactPostings]]);
+    * [[compactStats]] sums per source and [[compactPerceptual]] applies
+    * count-adds. `trust` is each lake's mid-publish guard over the TAIL
+    * ([[trusted]]) — `Right` the trustable subset, `Left` the version to
+    * keep serving when nothing in the tail can be trusted yet.
+    *
+    * An empty trusted tail is ALWAYS a no-op (returns the current
+    * version): with a snapshot, committing an identical generation
+    * would only churn the retention window out from under pinned
+    * readers; with none (live data exists but nothing in it is trusted
+    * yet), an EMPTY first generation would poison every later watermark
+    * read. The committed generation CARRIES its fold watermark (the
+    * `thru` sidecar), so hybrid readers and the vacuum boundary resolve
+    * it without re-scanning the snapshot on every read.
+    *
+    * With one partition column `bc` the fold is PARTITION-SCOPED — the
+    * write is ∝ TAIL-TOUCHED partition mass, not lake mass: the new
+    * generation physically rewrites only the partitions holding tail
+    * rows (prior rows of those partitions ∪ tail), while every
+    * untouched partition carries forward by MANIFEST reference to the
+    * older generation's directory
+    * ([[graft.pipeline.Warehouse.manifestOf]] — resolved by readVersion
+    * with zero extra jobs; pruneVersions refcounts the referenced
+    * carriers). `bucketOf(bc)` is a tail row's partition value — the
+    * column itself, or an expression when the partition is derived
+    * (the perceptual index's `sb`). At 100 TB this is the difference
+    * between a nightly maintenance job whose bill tracks the day's
+    * ingest and a full-lake rewrite per fold.
     */
   private[graft] def foldForward(
       spark: org.apache.spark.sql.SparkSession,
@@ -1869,8 +1690,13 @@ object StreamRunner {
       liveName: String,
       serveName: String,
       trust: DataFrame => Either[Int, DataFrame],
-      partitionCols: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.col
+      partitionCols: Seq[String],
+      merge: (Option[DataFrame], DataFrame) => DataFrame = unionRows,
+      bucketOf: String => org.apache.spark.sql.Column =
+        org.apache.spark.sql.functions.col): Int = {
+    import org.apache.spark.sql.functions.{coalesce, col, collect_set, lit, max, sum, when}
+    require(partitionCols.size <= 1,
+      s"foldForward($liveName): at most one partition column")
     // a fully-vacuumed live lake (schema-less dir after [[gcLake]]) means
     // "no tail": with a committed snapshot this fold is a no-op; with
     // none there is nothing to fold at all
@@ -1881,104 +1707,109 @@ object StreamRunner {
     val lake = wh.read(spark, liveName)
     val current = wh.currentVersion(serveName)
     val priorThru = current.map(v => lakeThru(spark, wh, serveName, v))
-    val (base, tailAll) = current match {
-      case Some(v) =>
-        (Some(wh.readVersion(spark, serveName, Some(v))),
-          lake.filter(col("ingest_batch") > priorThru.get))
-      case None => (None, lake)
-    }
-    val tail = trust(tailAll) match {
-      case Left(cv) => return cv
-      case Right(df) => df
-    }
-    partitionCols match {
-      case Seq(bc) =>
-        // PARTITION-SCOPED fold — the write is ∝ TAIL-TOUCHED partition
-        // mass, not lake mass. ONE tail-sized job doubles as the
-        // emptiness probe, the new watermark, AND the touched-partition
-        // census; the new generation physically rewrites only the
-        // partitions holding tail rows (prior rows of those partitions ∪
-        // tail), while every untouched partition carries forward by
-        // MANIFEST reference to the older generation's directory
-        // ([[graft.pipeline.Warehouse.manifestOf]] — resolved by
-        // readVersion with zero extra jobs; pruneVersions refcounts the
-        // referenced carriers). At 100 TB this is the difference between
-        // a nightly maintenance job whose bill tracks the day's ingest
-        // and a full-lake rewrite per fold.
-        import org.apache.spark.sql.functions.{coalesce, collect_set, lit, max, sum, when}
-        val probe = tail.agg(
-          coalesce(max(col("ingest_batch").cast("long")),
-            lit(Long.MinValue)).as("t"),
-          collect_set(col(bc).cast("string")).as("touched"),
-          coalesce(sum(when(col(bc).isNull, 1L).otherwise(0L)), lit(0L))
-            .as("nulls")).collect()(0)
-        val tailMax = probe.getLong(0)
-        if (tailMax == Long.MinValue)
-          return current.getOrElse(0)
+    val base = current.map(v => wh.readVersion(spark, serveName, Some(v)))
+    val tail =
+      trust(priorThru.fold(lake)(t => lake.filter(col("ingest_batch") > t))) match {
+        case Left(cv) => return cv
+        case Right(df) => df
+      }
+    val scoped = partitionCols.headOption.map(bc => bc -> bucketOf(bc))
+    // ONE tail-sized job is the emptiness probe, the new watermark AND
+    // (partition-scoped) the touched-partition census
+    val probe = tail.agg(
+      coalesce(max(col("ingest_batch").cast("long")), lit(Long.MinValue)),
+      scoped.toSeq.flatMap { case (_, b) => Seq(
+        collect_set(b.cast("string")),
+        coalesce(sum(when(b.isNull, 1L).otherwise(0L)), lit(0L))) }: _*)
+      .collect()(0)
+    val tailMax = probe.getLong(0)
+    if (tailMax == Long.MinValue)
+      return current.getOrElse(0)
+    val thru = Map("thru" ->
+      math.max(priorThru.getOrElse(Long.MinValue), tailMax).toString)
+    val (out, manifest) = scoped match {
+      case None => (merge(base, tail), (_: Int) => Map.empty[String, String])
+      case Some((bc, bucket)) =>
         // a NULL block value would land in the default partition but
         // fall out of the manifest census — fail loudly rather than
         // silently losing a partition at the next carry-forward
         require(probe.getLong(2) == 0L,
           s"foldForward($liveName): null $bc values cannot fold partition-scoped")
         val touched = probe.getSeq[String](1).sorted
+        // a base generation WITHOUT the partition column (a legacy
+        // unpartitioned layout) has no partition directories to carry:
+        // it is rewritten whole, and the new generation commits
+        // manifest-less (every value it serves in its own dirs)
+        val flatBase = base.exists(b => !b.columns.contains(bc))
         val priorMap: Map[String, Int] = current match {
-          case None => Map.empty
-          case Some(v) => wh.manifestOf(serveName, v) match {
-            case Some((_, m)) => m
-            // legacy full generation: every partition value it serves is
-            // physically in its own dir (one flat listing)
-            case None => wh.partitionValuesOf(serveName, v, bc)
-              .map(_ -> v).toMap
+          case Some(v) if !flatBase =>
+            wh.manifestOf(serveName, v).map(_._2).getOrElse(
+              // legacy full generation: every partition value it serves
+              // is physically in its own dir (one flat listing)
+              wh.partitionValuesOf(serveName, v, bc).map(_ -> v).toMap)
+          case _ => Map.empty
+        }
+        val touchedBase = base.map { b =>
+          if (flatBase) b
+          else {
+            val dt = b.schema(bc).dataType
+            b.filter(touched.map(s => col(bc) === lit(s).cast(dt)).reduce(_ || _))
           }
         }
-        val in = base match {
-          case None => tail
-          case Some(b) =>
-            val dt = b.schema(bc).dataType
-            val bT = b.filter(
-              touched.map(s => col(bc) === lit(s).cast(dt)).reduce(_ || _))
-            bT.unionByName(tail.select(bT.columns.map(col): _*))
-        }
-        wh.versionedWriteWith(in.repartition(col(bc)), serveName,
-          partitionCols, nv =>
-            Map("thru" -> math.max(priorThru.getOrElse(Long.MinValue),
-              tailMax).toString) ++
-              wh.manifestMeta(bc, priorMap ++ touched.map(_ -> nv)))
-      case _ =>
-        // ONE tail-sized job doubles as the emptiness probe AND the new
-        // generation's watermark: an empty trusted tail is ALWAYS a
-        // no-op — with a snapshot, committing an identical generation
-        // churns retention; with none (live data exists but nothing in
-        // it is trusted yet, e.g. every row belongs to a mid-publish
-        // batch), committing an EMPTY first generation would poison
-        // every later watermark read (its max(ingest_batch) is NULL)
-        val tailMax = maxBatch(tail)
-        if (tailMax == Long.MinValue)
-          return current.getOrElse(0)
-        val in = base
-          .map(b => b.unionByName(tail.select(b.columns.map(col): _*)))
-          .getOrElse(tail)
-        val out =
-          if (partitionCols.nonEmpty)
-            in.repartition(partitionCols.map(col): _*)
-          else in
-        // the committed generation CARRIES its fold watermark — hybrid
-        // readers and the vacuum boundary resolve it from the sidecar
-        // instead of re-scanning the snapshot on every read
-        wh.versionedWrite(out, serveName, partitionCols,
-          Map("thru" -> math.max(priorThru.getOrElse(Long.MinValue),
-            tailMax).toString))
+        (merge(touchedBase, tail).withColumn(bc, bucket).repartition(col(bc)),
+          (nv: Int) =>
+            if (flatBase) Map.empty[String, String]
+            else wh.manifestMeta(bc, priorMap ++ touched.map(_ -> nv)))
+    }
+    wh.versionedWriteWith(out, serveName, partitionCols,
+      nv => thru ++ manifest(nv))
+  }
+
+  /** [[foldForward]]'s default merge: prior snapshot ∪ tail, rows
+    * unchanged (the tail projected to the snapshot's columns).
+    */
+  private def unionRows(base: Option[DataFrame], tail: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    base.fold(tail)(b => b.unionByName(tail.select(b.columns.map(col): _*)))
+  }
+
+  /** The one trust rule of a fold over a live lake: the tail limited to
+    * the `committed` batch ids, or `Left` with the version to keep
+    * serving when none is committed yet (publishing would point
+    * `_serve` at an EMPTY generation). `None` is the quiesced fold — no
+    * publish in flight, the whole tail is trusted.
+    */
+  private def trusted(
+      wh: Warehouse,
+      serveName: String,
+      committed: Option[Set[Long]])(tail: DataFrame): Either[Int, DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    committed match {
+      case None => Right(tail)
+      case Some(ids) if ids.isEmpty =>
+        Left(wh.currentVersion(serveName).getOrElse(0))
+      case Some(ids) =>
+        Right(tail.filter(col("ingest_batch").isin(ids.toSeq: _*)))
     }
   }
 
-  /** Max `ingest_batch` of a frame, `Long.MinValue` when empty — the
-    * shared emptiness-probe-plus-watermark job.
+  /** [[trusted]] under the single-table rule: with `quiesced = false`
+    * only batch ids STRICTLY OLDER than the tail's newest are committed
+    * — the newest may be a mid-publish partition upsert (not
+    * directory-atomic); every older id's publish completed before the
+    * serialized foreachBatch began the next, and a single-batch history
+    * excludes itself. The id probe is a ledger-sized collect.
     */
-  private def maxBatch(df: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max}
-    df.agg(coalesce(max(col("ingest_batch").cast("long")),
-        lit(Long.MinValue)).as("t"))
-      .collect()(0).getLong(0)
+  private def newestExcluded(
+      wh: Warehouse,
+      serveName: String,
+      quiesced: Boolean)(tail: DataFrame): Either[Int, DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    trusted(wh, serveName, Option.when(!quiesced) {
+      val ids = tail.select(col("ingest_batch").cast("long")).distinct()
+        .collect().map(_.getLong(0))
+      ids.toSet -- ids.maxOption
+    })(tail)
   }
 
   /** The fold watermark of a committed generation: the `thru` sidecar
@@ -2021,27 +1852,23 @@ object StreamRunner {
       quiesced: Boolean = true): (Int, Int) = {
     def one(liveName: String): Int =
       foldForward(spark, wh, liveName, s"${liveName}_serve",
-        trust = tail =>
-          if (quiesced) Right(tail)
-          else trustedOrCurrent(tail, wh, s"${liveName}_serve"),
-        partitionCols = Nil)
+        newestExcluded(wh, s"${liveName}_serve", quiesced), Nil)
     (one(s"${table}_sigs"), one(s"${table}_hashes"))
   }
 
-  /** Watermark of a rows-unchanged snapshot generation: the max
-    * `ingest_batch` it covers (the column rides every compacted lake as
-    * DATA precisely so fold-forward, hybrid serves, and vacuum can agree
-    * on one boundary). A 1-row collect of a |snapshot|-sized agg.
+  /** Watermark of a snapshot generation: the max batch id it covers —
+    * one boundary that fold-forward, hybrid serves and vacuum all agree
+    * on. A 1-row collect of a |snapshot|-sized agg.
     */
   private def snapshotThru(snap: DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, max}
-    // the perceptual index's generations carry the fold boundary as
-    // last_batch (merged rows have no single ingest_batch, and a
-    // count-add can postdate every insert); every rows-unchanged lake
-    // carries ingest_batch itself
-    val batchCol =
-      if (snap.columns.contains("ingest_batch")) "ingest_batch"
-      else "last_batch"
+    // every rows-unchanged lake carries `ingest_batch` itself as DATA;
+    // folded rows have no single batch id, so the perceptual index
+    // carries `last_batch` (a count-add can postdate every insert) and
+    // the stats lake `folded_thru` (each source's newest batch — every
+    // folded batch wrote at least one source row)
+    val batchCol = Seq("ingest_batch", "last_batch", "folded_thru")
+      .find(snap.columns.contains).getOrElse("ingest_batch")
     // null-safe: an empty snapshot (a legacy generation committed before
     // foldForward's empty-tail guard) means "no watermark — the whole
     // live lake is tail", not a crash on every later read
@@ -2229,25 +2056,28 @@ object StreamRunner {
       serveName: String): Boolean =
     wh.hasData(liveName) || wh.currentVersion(serveName).isDefined
 
-  /** Lake VACUUM — [[gcStats]]' bounded-lake GC generalized to every
-    * rows-unchanged streamed lake: live `ingest_batch` leaf partitions
-    * whose rows are already carried by a retained snapshot generation
-    * are deleted, leaving the live table |tail| fragments regardless of
-    * ingest age. Safe ONLY because every reader of these lakes goes
-    * through the snapshot+tail shape ([[hybridLakeRead]] — including the
-    * ingest-side match joins) and the compactor folds FORWARD
-    * ([[compactBlockedLake]] / [[compactFrontier]]): once folded,
-    * nothing re-reads a vacuumed fragment. Unlike [[gcStats]] the leaf
-    * dirs may sit UNDER block directories (`code=X/ingest_batch=Y`), so
-    * the sweep recurses; a block directory left empty is removed with
-    * its last leaf (partition discovery tolerates it, but debris-free
-    * listings are the Warehouse convention).
+  /** Lake VACUUM — the GC that keeps every streamed lake BOUNDED in a
+    * perpetual ingest: live `ingest_batch` leaf partitions whose rows
+    * are already carried by a retained snapshot generation are deleted,
+    * leaving the live table |tail| fragments regardless of ingest age.
+    * Safe ONLY because every reader of these lakes goes through the
+    * snapshot+tail shape ([[hybridLakeRead]] — including the ingest-side
+    * match joins — or [[statsServeHybrid]]) and every compactor folds
+    * FORWARD ([[foldForward]]): once folded, nothing re-reads a vacuumed
+    * fragment. The leaf dirs may sit UNDER block directories
+    * (`code=X/ingest_batch=Y`), so the sweep recurses; a block directory
+    * left empty is removed with its last leaf (partition discovery
+    * tolerates it, but debris-free listings are the Warehouse
+    * convention).
     *
-    * `slackGenerations` is the same reader-safety dial as [[gcStats]]:
-    * only leaves at or below the (current − slack)-th retained
-    * generation's watermark are deleted, so a reader pinned up to
-    * `slack` generations behind still finds every fragment its snapshot
-    * does not cover. Returns the deleted batch ids (distinct, sorted).
+    * `slackGenerations` is reader safety: only leaves at or below the
+    * (current − slack)-th retained generation's watermark are deleted,
+    * so a reader pinned up to `slack` generations behind still finds
+    * every fragment its snapshot does not cover. With the default slack
+    * 1 a single-generation table vacuums nothing; slack 0 is the
+    * quiesced maintenance-window form (no concurrent readers — the
+    * fixture/build case). Returns the deleted batch ids (distinct,
+    * sorted).
     */
   def gcLake(
       spark: org.apache.spark.sql.SparkSession,
@@ -2375,19 +2205,11 @@ object StreamRunner {
         // postings-only id is a torn publish — neither may be frozen in
         Some((pb intersect db) -- (pb ++ db).maxOption)
       }
-    def trust(serveName: String)(tail: DataFrame): Either[Int, DataFrame] =
-      committed match {
-        case None => Right(tail)
-        case Some(ids) if ids.isEmpty =>
-          Left(wh.currentVersion(serveName).getOrElse(0))
-        case Some(ids) =>
-          Right(tail.filter(col("ingest_batch").isin(ids.toSeq: _*)))
-      }
     (foldForward(spark, wh, s"${table}_postings",
         s"${table}_postings_serve",
-        trust(s"${table}_postings_serve"), Seq("wb")),
+        trusted(wh, s"${table}_postings_serve", committed), Seq("wb")),
       foldForward(spark, wh, s"${table}_doclen", s"${table}_doclen_serve",
-        trust(s"${table}_doclen_serve"), Nil))
+        trusted(wh, s"${table}_doclen_serve", committed), Nil))
   }
 
   def postingsIngestToWarehouse(
@@ -2399,44 +2221,39 @@ object StreamRunner {
       trigger: Trigger = Trigger.AvailableNow(),
       maintainEvery: Int = 0): StreamingQuery = {
     import org.apache.spark.sql.functions.{col, count, explode, lit, split}
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two aggregations branch off the tokenize; cache the narrow
-        // token projection so the batch source is read once
-        val toks = batch
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-          .cache()
-        try {
-          val postings = toks.groupBy(col("word"), col("doc_id"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("wb", graft.functions.TextFunctions.md5Bits(col("word"), 1))
-            .withColumn("ingest_batch", lit(batchId))
-          val doclen = toks.groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("dl"))
-            .withColumn("ingest_batch", lit(batchId))
-          // ONE gate over both index tables: stage both, audit both,
-          // publish both or quarantine both — a postings-only commit
-          // would silently drop the batch's docs from BM25 (no doc
-          // lengths) with the checkpoint already marked done
-          gatedPublishAll(Seq(
-              (postings, s"${table}_postings", Seq("wb", "ingest_batch")),
-              (doclen, s"${table}_doclen", Seq("ingest_batch"))),
-            batchId, wh, audit): Unit
-        } finally toks.unpersist(): Unit
-        // MAINTENANCE CADENCE (VERDICT r17 #4): with `maintainEvery` N,
-        // every Nth committed batch runs the policy pass over this
-        // index IN the ingest loop — no external scheduler has to
-        // remember the lake exists. The pass is replay-safe (a replayed
-        // cadence tick's fold sees an already-folded tail and no-ops,
-        // versions unchanged) and an idle tick is metadata-only (the
-        // health reads — zero Spark jobs; spec-pinned).
-        if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
-          maintainPostings(batch.sparkSession, wh, table): Unit
-      }
-      .start()
+    sink(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      // two aggregations branch off the tokenize; cache the narrow
+      // token projection so the batch source is read once
+      val toks = batch
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+        .cache()
+      try {
+        val postings = toks.groupBy(col("word"), col("doc_id"))
+          .agg(count(lit(1)).as("tf"))
+          .withColumn("wb", graft.functions.TextFunctions.md5Bits(col("word"), 1))
+          .withColumn("ingest_batch", lit(batchId))
+        val doclen = toks.groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("dl"))
+          .withColumn("ingest_batch", lit(batchId))
+        // ONE gate over both index tables: stage both, audit both,
+        // publish both or quarantine both — a postings-only commit
+        // would silently drop the batch's docs from BM25 (no doc
+        // lengths) with the checkpoint already marked done
+        gatedPublishAll(Seq(
+            (postings, s"${table}_postings", Seq("wb", "ingest_batch")),
+            (doclen, s"${table}_doclen", Seq("ingest_batch"))),
+          batchId, wh, audit): Unit
+      } finally toks.unpersist(): Unit
+      // MAINTENANCE CADENCE (VERDICT r17 #4): with `maintainEvery` N,
+      // every Nth committed batch runs the policy pass over this
+      // index IN the ingest loop — no external scheduler has to
+      // remember the lake exists. The pass is replay-safe (a replayed
+      // cadence tick's fold sees an already-folded tail and no-ops,
+      // versions unchanged) and an idle tick is metadata-only (the
+      // health reads — zero Spark jobs; spec-pinned).
+      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
+        maintainPostings(batch.sparkSession, wh, table): Unit
+    }
   }
 
   /** The policy pass ([[maintainLakes]]) over the streamed inverted

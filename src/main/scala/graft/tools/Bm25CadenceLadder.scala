@@ -25,7 +25,7 @@ object Bm25CadenceLadder {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.base("local[32]", 32)
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val toks = graft.Tables.documents(spark, d)

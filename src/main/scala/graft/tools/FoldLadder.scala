@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object FoldLadder {
   def main(args: Array[String]): Unit = {
     val baseMass = if (args.nonEmpty) args(0).toInt else 20000
-    val spark = Sessions.base("local[32]", 32)
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     for (mult <- Seq(1, 4, 12)) {

@@ -30,7 +30,7 @@ object PerceptualLadder {
   def main(args: Array[String]): Unit = {
     val nBatches = if (args.nonEmpty) args(0).toInt else 12
     val batchRows = if (args.length > 1) args(1).toInt else 20000
-    val spark = Sessions.base("local[32]", 32)
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val root = java.nio.file.Files.createTempDirectory("plad").toString

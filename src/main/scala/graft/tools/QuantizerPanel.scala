@@ -16,7 +16,7 @@ object QuantizerPanel {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Sessions.base("local[32]", 32)
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val rows = graft.operators.Similarity

@@ -990,6 +990,99 @@ class StreamRunnerSpec extends SparkSuiteBase {
   }
 
 
+  test("maintainLakes heals a sidecar-less stats boundary from folded_thru and vacuums it") {
+    import org.apache.spark.sql.Row
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val wh = new Warehouse(tmpDir("maintstats"))
+    def docs(rows: Seq[(Long, String, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, t, s) => Row(i, t, s) }),
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType), StructField("source", StringType))))
+    StreamRunner.dedupPublishBatch(docs(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today", "web"),
+      (3L, "unrelated stream state store content here", "books"))),
+      0L, wh, "c", _ => None, 0.5)
+    assert(StreamRunner.compactStats(spark, wh, "c") === 1)
+    StreamRunner.dedupPublishBatch(docs(Seq(
+      (11L, "entirely new web words for the second batch window", "web"))),
+      1L, wh, "c", _ => None, 0.5)
+    assert(StreamRunner.compactStats(spark, wh, "c") === 2)
+    def hybrid: Set[Row] = StreamRunner.statsServeHybrid(spark, wh, "c")
+      .collect().toSet
+    val before = hybrid
+    // a stats generation carries its boundary as `folded_thru`, not
+    // `ingest_batch`: the backfill must derive it from that column
+    assert(new java.io.File(wh.tablePath("c_stats_serve"), "_v=1.meta").delete())
+    val acts = StreamRunner.maintainLakes(spark, wh,
+      Seq(("stats", "c_stats", "c_stats_serve",
+        () => StreamRunner.compactStats(spark, wh, "c", quiesced = false))))
+    assert(acts === Seq(("stats", false, 1L, 0L, 2L)),
+      "the pass must backfill the boundary watermark and vacuum batch 0")
+    assert(wh.versionMeta("c_stats_serve", 1).get("thru") === Some("0"),
+      "the derived boundary watermark must persist as the sidecar")
+    assert(wh.read(spark, "c_stats").select(col("ingest_batch").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSet === Set(1L))
+    assert(hybrid === before, "the healed stats lake serves the same sums")
+  }
+
+  test("perceptual fold over a legacy unpartitioned, manifest-less base equals a fold from scratch") {
+    import org.apache.spark.sql.Row
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val deltaSchema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("hash_hi", LongType), StructField("hash_lo", LongType),
+      StructField("add_n", LongType), StructField("is_insert", BooleanType),
+      StructField("ingest_batch", LongType)))
+    // (doc_id, hash_hi, hash_lo, add_n, is_insert); hash_lo picks the
+    // sb bucket (pmod 64): 1, 2, 3 and 6
+    def delta(wh: Warehouse, t: String, b: Long,
+        rows: Seq[(Long, java.lang.Long, Long, Long, Boolean)]): Unit =
+      wh.partitionedUpsertWrite(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (d, hi, lo, n, ins) =>
+          Row(d, hi, lo, n, ins, b) }), deltaSchema), s"${t}_sigs",
+        Seq("ingest_batch"))
+    def view(wh: Warehouse, t: String): Set[(Long, Long, Long, Long, Long, Long)] =
+      StreamRunner.perceptualSigsView(spark, wh, t).collect().map(r =>
+        (r.getAs[Long]("doc_id"), r.getAs[Long]("hash_hi"),
+          r.getAs[Long]("hash_lo"), r.getAs[Long]("n_copies"),
+          r.getAs[Long]("first_batch"), r.getAs[Long]("last_batch"))).toSet
+    val batch2 = Seq[(Long, java.lang.Long, Long, Long, Boolean)](
+      (5L, 50L, 65L, 1L, true), // new keeper in bucket 1
+      (2L, null, 2L, 4L, false)) // count-add onto keeper 2, bucket 2
+    val batch3 = Seq[(Long, java.lang.Long, Long, Long, Boolean)](
+      (6L, 60L, 131L, 1L, true), // bucket 3
+      (4L, null, 70L, 2L, false)) // bucket 6
+    // the same history folded from scratch: deltas only
+    val scratch = new Warehouse(tmpDir("plegacy_scratch"))
+    delta(scratch, "lg", 0L, Seq((1L, 10L, 1L, 2L, true), (2L, 20L, 2L, 1L, true),
+      (3L, 30L, 3L, 1L, true), (4L, 40L, 70L, 2L, true)))
+    delta(scratch, "lg", 1L, Seq((4L, null, 70L, 1L, false)))
+    delta(scratch, "lg", 2L, batch2)
+    assert(StreamRunner.compactPerceptual(spark, scratch, "lg") === 1)
+    // the legacy layout: batches 0-1 folded into ONE unpartitioned
+    // generation with no `sb` column, no manifest and no sidecar
+    val wh = new Warehouse(tmpDir("plegacy"))
+    wh.versionedWrite(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, 10L, 1L, 2L, 0L, 0L), Row(2L, 20L, 2L, 1L, 0L, 0L),
+      Row(3L, 30L, 3L, 1L, 0L, 0L), Row(4L, 40L, 70L, 3L, 0L, 1L))),
+      StructType(Seq("doc_id", "hash_hi", "hash_lo", "n_copies",
+        "first_batch", "last_batch").map(StructField(_, LongType)))),
+      "lg_sigs_serve")
+    delta(wh, "lg", 2L, batch2)
+    val composed = view(wh, "lg")
+    assert(composed === view(scratch, "lg"))
+    assert(StreamRunner.compactPerceptual(spark, wh, "lg") === 2)
+    assert(view(wh, "lg") === composed,
+      "the fold keeps every legacy row, touched bucket or not")
+    // the next fold carries partitions forward from the rewritten
+    // generation and still agrees with the from-scratch lake
+    delta(wh, "lg", 3L, batch3)
+    delta(scratch, "lg", 3L, batch3)
+    assert(StreamRunner.compactPerceptual(spark, wh, "lg") === 3)
+    assert(StreamRunner.compactPerceptual(spark, scratch, "lg") === 2)
+    assert(view(wh, "lg") === view(scratch, "lg"))
+    assert(view(wh, "lg").size === 6)
+  }
+
   test("in-loop maintenance cadence: the postings stream folds itself; idle ticks are metadata-only; replay cannot double-fold") {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val landing = tmpDir("cadl")
