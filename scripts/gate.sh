@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -40,6 +40,18 @@ if [[ "$manifests" -gt 1 ]]; then
   grep -nF 'manifestMeta(' src/main/scala/graft/streaming/StreamRunner.scala >&2
   exit 1
 fi
+
+echo "== aggregate plumbing guard =="
+# one Catalyst aggregate class (graft.plans.SketchAggregate) owns the
+# TypedImperativeAggregate plumbing; sketch families supply only buffers
+for pat in 'extends TypedImperativeAggregate' 'withNewMutableAggBufferOffset'; do
+  n=$(grep -roF "$pat" src/main | wc -l)
+  if [[ "$n" -gt 1 ]]; then
+    echo "$pat appears $n times in src/main (one aggregate class allowed):" >&2
+    grep -rnF "$pat" src/main >&2
+    exit 1
+  fi
+done
 
 echo "== compile + unit specs =="
 sbt -batch test

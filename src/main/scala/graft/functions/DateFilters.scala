@@ -29,9 +29,6 @@ object DateFilters {
   /** to_date(ts) > day */
   def after(ts: Column, day: String): Column = ts >= nextDayTs(day)
 
-  /** to_date(ts) >= day */
-  def onOrAfter(ts: Column, day: String): Column = ts >= dayTs(day)
-
   /** to_date(ts) BETWEEN d1 AND d2 (inclusive both ends) */
   def betweenDays(ts: Column, d1: String, d2: String): Column =
     ts >= dayTs(d1) && ts < nextDayTs(d2)

@@ -1,15 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `graft_bloom(hash)` — a Bloom filter over a caller-supplied 60-bit
-  * md5-derived hash (feed `TextFunctions.md5Bits(key, 15)`), as a typed
-  * imperative aggregate with CONSTANT 4 KB state. Returns the bitmap as
+  * md5-derived hash (feed `TextFunctions.md5Bits(key, 15)`), as a
+  * [[DenseCells]] family with CONSTANT 4 KB state. Returns the bitmap as
   * `ARRAY<BIGINT>` of exactly 512 words (m = 32768 bits).
   *
   * Probe positions are the four disjoint 15-bit lanes of the SAME 60-bit
@@ -31,71 +27,26 @@ import org.apache.spark.sql.types._
   * few GB — summary ships to the ingest job instead of the corpus
   * itself).
   */
-case class BloomAggregate(
-    hashExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  import BloomAggregate._
-
-  override def prettyName: String = "graft_bloom"
-  override def children: Seq[Expression] = Seq(hashExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hashExpr.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom expects BIGINT, got ${hashExpr.dataType.catalogString}")
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Words)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val h = hashExpr.eval(input)
-    if (h != null) {
-      val hv = h.asInstanceOf[Long]
-      var i = 0
-      while (i < Lanes) {
-        val p = ((hv >>> (15 * i)) & 32767L).toInt
-        buf(p >>> 6) |= (1L << (p & 63))
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < Words) { a(i) |= b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bytes = new Array[Byte](Words * 8)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    buf.foreach(bb.putLong)
-    bytes
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(Words)(bb.getLong())
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomAggregate =
-    copy(hashExpr = newChildren(0))
-}
-
-object BloomAggregate {
+case object BloomAggregate extends DenseCells {
   /** m = 32768 bits. */
   val Words: Int = 512
   val Lanes: Int = 4
+
+  override def base: String = "graft_bloom"
+  override def cells: Int = Words
+  override def merging: Boolean = false
+  override def entryType: StructType = null // dense result, no `_merge` twin
+  override def dataType(in: Seq[DataType]): DataType = ArrayType(LongType, containsNull = false)
+  override def combine(a: Long, b: Long): Long = a | b
+
+  override def add(buf: Array[Long], h: Long): Unit = {
+    var i = 0
+    while (i < Lanes) {
+      val p = ((h >>> (15 * i)) & 32767L).toInt
+      buf(p >>> 6) |= (1L << (p & 63))
+      i += 1
+    }
+  }
+
+  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
 }

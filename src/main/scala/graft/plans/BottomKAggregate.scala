@@ -3,15 +3,13 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `graft_bottomk(hash, value, k)` — per group, the k SMALLEST DISTINCT
-  * hashes with an attached payload value, as a bounded typed imperative
-  * aggregate. Returns `ARRAY<STRUCT<h BIGINT, v DOUBLE>>` sorted by h ASC.
+  * hashes with an attached payload value, as a bounded [[SketchAggregate]]
+  * family. Returns `ARRAY<STRUCT<h BIGINT, v DOUBLE>>` sorted by h ASC.
   *
   * This is the state of two classic mergeable sketches:
   *  - **KMV distinct-count**: feed a uniform hash of the key; the estimate is
@@ -30,31 +28,19 @@ import org.apache.spark.sql.types._
   * mapper, and merge is a bounded sorted-merge. Same machinery as
   * [[TopKAggregate]] with the opposite ordering plus distinct-on-hash.
   */
-case class BottomKAggregate(
-    hashExpr: Expression,
-    valExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BottomKBuffer] {
+case class BottomKAggregate(k: Int) extends SketchFamily[BottomKBuffer] {
 
-  override def prettyName: String = "graft_bottomk"
-  override def children: Seq[Expression] = Seq(hashExpr, valExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(BottomKAggregate.entryType, containsNull = false)
+  override def name: String = "graft_bottomk"
+  override def params: Seq[Any] = Seq(k)
+  override def inputTypes: Seq[DataType] = Seq(LongType, DoubleType)
+  override def dataType(in: Seq[DataType]): DataType =
+    ArrayType(BottomKAggregate.entryType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hashExpr.dataType == LongType && valExpr.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bottomk expects (BIGINT, DOUBLE), got " +
-        s"(${hashExpr.dataType.catalogString}, ${valExpr.dataType.catalogString})")
+  override def create(): BottomKBuffer = new BottomKBuffer(k)
 
-  override def createAggregationBuffer(): BottomKBuffer = new BottomKBuffer(k)
-
-  override def update(buf: BottomKBuffer, input: InternalRow): BottomKBuffer = {
-    val h = hashExpr.eval(input)
-    val v = valExpr.eval(input)
+  override def update(buf: BottomKBuffer, in: Array[Expression], row: InternalRow): BottomKBuffer = {
+    val h = in(0).eval(row)
+    val v = in(1).eval(row)
     if (h != null && v != null) buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Double])
     buf
   }
@@ -92,14 +78,6 @@ case class BottomKAggregate(
     while (i < n) { buf.insert(in.readLong(), in.readDouble()); i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BottomKAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BottomKAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BottomKAggregate =
-    copy(hashExpr = newChildren(0), valExpr = newChildren(1))
 }
 
 object BottomKAggregate {

@@ -5,9 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -31,34 +29,30 @@ import org.apache.spark.sql.types._
   * the collection of an over-k group. Deterministic consumers filter on the
   * accompanying count first.
   */
-case class BoundedCollectAggregate(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BoundedRowsBuffer] {
+case class BoundedCollectAggregate(k: Int, rowType: StructType = null)
+  extends SketchFamily[BoundedRowsBuffer] {
 
-  override def prettyName: String = "graft_bounded_collect"
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
+  override def name: String = "graft_bounded_collect"
+  override def params: Seq[Any] = Seq(k)
+  override def accepts(in: Seq[DataType]): Boolean = in match {
+    case Seq(s: StructType) => s.fields.nonEmpty
+    case _ => false
+  }
+  override def expects: String = "a non-empty STRUCT"
+  override def dataType(in: Seq[DataType]): DataType = ArrayType(in.head, containsNull = false)
 
-  private def structType: StructType = child.dataType.asInstanceOf[StructType]
-
-  override def dataType: DataType =
-    ArrayType(child.dataType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.fields.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bounded_collect expects a non-empty STRUCT, got ${other.catalogString}")
+  // the codec needs the row layout, known only once the child resolves
+  override def bind(in: Seq[DataType]): BoundedCollectAggregate = in.head match {
+    case s: StructType => copy(rowType = s)
+    case _ => this
   }
 
-  override def createAggregationBuffer(): BoundedRowsBuffer =
-    new BoundedRowsBuffer(k)
+  override def create(): BoundedRowsBuffer = new BoundedRowsBuffer(k)
 
-  override def update(buf: BoundedRowsBuffer, input: InternalRow): BoundedRowsBuffer = {
+  override def update(
+      buf: BoundedRowsBuffer, in: Array[Expression], row: InternalRow): BoundedRowsBuffer = {
     if (buf.rows.length < k) {
-      val v = child.eval(input)
+      val v = in(0).eval(row)
       if (v != null) buf.rows += v.asInstanceOf[InternalRow].copy()
     }
     buf
@@ -79,7 +73,7 @@ case class BoundedCollectAggregate(
   // serialization crosses the partial/final boundary (and the sort-based
   // aggregation fallback): rows go through an UnsafeProjection so the bytes
   // are self-contained regardless of the incoming row representation
-  @transient private lazy val toUnsafe = UnsafeProjection.create(structType)
+  @transient private lazy val toUnsafe = UnsafeProjection.create(rowType)
 
   override def serialize(buf: BoundedRowsBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -99,7 +93,7 @@ case class BoundedCollectAggregate(
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val n = in.readInt()
     val buf = new BoundedRowsBuffer(k)
-    val nFields = structType.fields.length
+    val nFields = rowType.fields.length
     var i = 0
     while (i < n) {
       val sz = in.readInt()
@@ -112,14 +106,6 @@ case class BoundedCollectAggregate(
     }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BoundedCollectAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BoundedCollectAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BoundedCollectAggregate =
-    copy(child = newChildren(0))
 }
 
 /** At most k collected rows; plain append, truncation handled by callers. */

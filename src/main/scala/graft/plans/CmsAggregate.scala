@@ -1,21 +1,16 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** `graft_cms(hash)` — a Count-Min sketch over a caller-supplied 60-bit
-  * md5-derived hash (feed `TextFunctions.md5Bits(key, 15)`), as a typed
-  * imperative aggregate with CONSTANT 2 KB state per group (d = 4 rows ×
+  * md5-derived hash (feed `TextFunctions.md5Bits(key, 15)`), as a
+  * [[DenseCells]] family with CONSTANT 2 KB state per group (d = 4 rows ×
   * w = 64 buckets of BIGINT). Returns the sketch itself as a sparse
   * `ARRAY<STRUCT<cell INT, cnt BIGINT>>` sorted by cell id ASC (cell =
   * row·64 + bucket), one entry per non-zero cell — the persistable summary
-  * [[CmsMergeAggregate]] re-aggregates without touching raw rows.
+  * `graft_cms_merge` (`merging = true`) re-aggregates without touching raw
+  * rows. CMS cells are plain sums, so that rollup is bit-identical to
+  * sketching the union of the raw rows.
   *
   * Cell map: the 60-bit hash is split into four 15-bit lanes (the same
   * lanes `graft_bloom` uses); row i's bucket is the LOW 6 BITS of lane i:
@@ -41,70 +36,21 @@ import org.apache.spark.sql.types._
   * group per mapper; the direct `GROUP BY token` alternative shuffles the
   * full vocabulary.
   */
-case class CmsAggregate(
-    hashExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+case class CmsAggregate(merging: Boolean = false) extends DenseCells {
+  import CmsAggregate.{D, W}
 
-  import CmsAggregate._
+  override def base: String = "graft_cms"
+  override def cells: Int = CmsAggregate.Cells
+  override def entryType: StructType = CmsAggregate.entryType
+  override def combine(a: Long, b: Long): Long = a + b
 
-  override def prettyName: String = "graft_cms"
-  override def children: Seq[Expression] = Seq(hashExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(entryType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hashExpr.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cms expects BIGINT, got ${hashExpr.dataType.catalogString}")
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Cells)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val h = hashExpr.eval(input)
-    if (h != null) {
-      val hv = h.asInstanceOf[Long]
-      var i = 0
-      while (i < D) {
-        buf(i * W + ((hv >>> (15 * i)) & 63L).toInt) += 1L
-        i += 1
-      }
+  override def add(buf: Array[Long], h: Long): Unit = {
+    var i = 0
+    while (i < D) {
+      buf(i * W + ((h >>> (15 * i)) & 63L).toInt) += 1L
+      i += 1
     }
-    buf
   }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < Cells) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = CmsAggregate.evalBuffer(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(Cells * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < Cells) { out.writeLong(buf(i)); i += 1 }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](Cells)
-    var i = 0
-    while (i < Cells) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsAggregate =
-    copy(hashExpr = newChildren(0))
 }
 
 object CmsAggregate {
@@ -116,101 +62,4 @@ object CmsAggregate {
   val entryType: StructType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
     StructField("cnt", LongType, nullable = false)))
-
-  def evalBuffer(buf: Array[Long]): GenericArrayData = {
-    var n = 0
-    var i = 0
-    while (i < Cells) { if (buf(i) != 0L) n += 1; i += 1 }
-    val rows = new Array[Any](n)
-    var j = 0
-    i = 0
-    while (i < Cells) {
-      if (buf(i) != 0L) { rows(j) = InternalRow(i, buf(i)); j += 1 }
-      i += 1
-    }
-    new GenericArrayData(rows)
-  }
-}
-
-/** `graft_cms_merge(sketch)` — element-wise sum of already-built
-  * [[CmsAggregate]] summaries (the `ARRAY<STRUCT<cell,cnt>>` they emit,
-  * e.g. read back from a per-shard summary table). CMS cells are plain
-  * sums, so re-aggregating persisted sketches is bit-identical to
-  * sketching the union of the raw rows — the rollup-without-raw-data path
-  * at 100 TB (same contract as `graft_hll_merge` / `graft_qsketch_merge`).
-  */
-case class CmsMergeAggregate(
-    sketchExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  import CmsAggregate._
-
-  override def prettyName: String = "graft_cms_merge"
-  override def children: Seq[Expression] = Seq(sketchExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(entryType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = sketchExpr.dataType match {
-    case ArrayType(s: StructType, _)
-        if s.length == 2 && s(0).dataType == IntegerType && s(1).dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_cms_merge expects ARRAY<STRUCT<cell INT, cnt BIGINT>> (a " +
-        s"graft_cms result), got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Cells)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = sketchExpr.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        val row = arr.getStruct(i, 2)
-        val cell = row.getInt(0)
-        val cnt = row.getLong(1)
-        require(cell >= 0 && cell < Cells && cnt >= 0L,
-          s"graft_cms_merge: entry (cell=$cell, cnt=$cnt) outside sketch domain")
-        buf(cell) += cnt
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < Cells) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = CmsAggregate.evalBuffer(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(Cells * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < Cells) { out.writeLong(buf(i)); i += 1 }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](Cells)
-    var i = 0
-    while (i < Cells) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsMergeAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsMergeAggregate =
-    copy(sketchExpr = newChildren(0))
 }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** Session extension wiring for graft's native expressions.
+/** Session extension wiring for graft's native expressions and
+  * aggregates, the `VectorFoldRewrite` optimizer rule and the as-of join
+  * planner strategy.
   *
   * Two ways in:
   *  - at session build time: `SparkSession.builder.withExtensions(new
@@ -15,7 +17,9 @@ import org.apache.spark.sql.types.IntegerType
   *    used by query modules so they work against ANY caller-provided session
   *    (the driver contract hands us a session we didn't build).
   *
-  * After either, `graft_dot` / `graft_cosine` resolve in SQL text and via
+  * After either, every `graft_*` function in [[GraftExtensions.descriptors]]
+  * (vector, SimHash, HTML and UTF-8 expressions, and the bounded-state
+  * [[SketchAggregate]]s) resolves in SQL text and via
   * `functions.call_function`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -29,176 +33,109 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   private type Builder = Seq[Expression] => Expression
 
-  private def binary(name: String, usage: String, mk: (Expression, Expression) => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Builder) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
-      { args =>
-        require(args.length == 2, s"$name expects 2 arguments, got ${args.length}")
-        mk(args(0), args(1))
-      })
+  /** One registered function: `arity` counts every argument; `kArg` is the
+    * index of the argument (if any) that carries `k`, a literal positive INT
+    * which `build` receives separately from the other arguments.
+    */
+  private final case class Fn(
+      name: String, usage: String, arity: Int, kArg: Option[Int],
+      build: (Seq[Expression], Int) => Expression)
 
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
-    binary("graft_dot", "graft_dot(a, b) - double dot product of two numeric arrays",
-      DotProduct(_, _)),
-    binary("graft_cosine", "graft_cosine(a, b) - cosine similarity of two numeric arrays",
-      CosineSimilarity(_, _)),
-    (new FunctionIdentifier("graft_simhash16"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_simhash16",
-        "graft_simhash16(text) - one-pass 16-bit SimHash of whitespace-tokenized text"),
-      { args =>
-        require(args.length == 1, s"graft_simhash16 expects 1 argument, got ${args.length}")
-        SimHash16(args.head)
-      }),
-    (new FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_simhash60",
-        "graft_simhash60(text) - one-pass 60-bit SimHash of whitespace-tokenized text"),
-      { args =>
-        require(args.length == 1, s"graft_simhash60 expects 1 argument, got ${args.length}")
-        SimHash60(args.head)
-      }),
-    (new FunctionIdentifier("graft_html_stats"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_html_stats",
-        "graft_html_stats(html) - one-pass visible-text extraction: " +
-          "STRUCT<text, n_links, n_scripts, n_tags>"),
-      { args =>
-        require(args.length == 1, s"graft_html_stats expects 1 argument, got ${args.length}")
-        HtmlStats(args.head)
-      }),
-    (new FunctionIdentifier("graft_html_links"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_html_links",
-        "graft_html_links(html) - one-pass anchor-href outlink extraction: " +
-          "ARRAY<STRING> in document order"),
-      { args =>
-        require(args.length == 1, s"graft_html_links expects 1 argument, got ${args.length}")
-        HtmlLinks(args.head)
-      }),
-    (new FunctionIdentifier("graft_utf8_stats"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_utf8_stats",
-        "graft_utf8_stats(bytes) - one-pass UTF-8 well-formedness audit: " +
-          "STRUCT<n_valid_chars, n_invalid_bytes, n_multibyte, n_control, is_valid>"),
-      { args =>
-        require(args.length == 1, s"graft_utf8_stats expects 1 argument, got ${args.length}")
-        Utf8Stats(args.head)
-      }),
-    (new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_topk",
-        "graft_topk(score, id, k) - bounded per-group top-k aggregate, (score DESC, id ASC)"),
-      { args =>
-        require(args.length == 3, s"graft_topk expects 3 arguments, got ${args.length}")
-        val k = args(2) match {
+  private def fn(name: String, usage: String, arity: Int)(build: Seq[Expression] => Expression) =
+    Fn(name, usage, arity, None, (args, _) => build(args))
+
+  private def agg(name: String, usage: String, arity: Int, kArg: Option[Int] = None)(
+      family: Int => SketchFamily[_]) =
+    Fn(name, usage, arity, kArg, (args, k) => SketchAggregate(family(k), args))
+
+  private val table: Seq[Fn] = Seq(
+    fn("graft_dot", "graft_dot(a, b) - double dot product of two numeric arrays", 2)(
+      a => DotProduct(a(0), a(1))),
+    fn("graft_cosine", "graft_cosine(a, b) - cosine similarity of two numeric arrays", 2)(
+      a => CosineSimilarity(a(0), a(1))),
+    fn("graft_simhash16",
+      "graft_simhash16(text) - one-pass 16-bit SimHash of whitespace-tokenized text", 1)(
+      a => SimHash16(a.head)),
+    fn("graft_simhash60",
+      "graft_simhash60(text) - one-pass 60-bit SimHash of whitespace-tokenized text", 1)(
+      a => SimHash60(a.head)),
+    fn("graft_html_stats",
+      "graft_html_stats(html) - one-pass visible-text extraction: " +
+        "STRUCT<text, n_links, n_scripts, n_tags>", 1)(a => HtmlStats(a.head)),
+    fn("graft_html_links",
+      "graft_html_links(html) - one-pass anchor-href outlink extraction: " +
+        "ARRAY<STRING> in document order", 1)(a => HtmlLinks(a.head)),
+    fn("graft_utf8_stats",
+      "graft_utf8_stats(bytes) - one-pass UTF-8 well-formedness audit: " +
+        "STRUCT<n_valid_chars, n_invalid_bytes, n_multibyte, n_control, is_valid>", 1)(
+      a => Utf8Stats(a.head)),
+    agg("graft_topk",
+      "graft_topk(score, id, k) - bounded per-group top-k aggregate, (score DESC, id ASC)",
+      3, Some(2))(TopKAggregate(_)),
+    agg("graft_bottomk",
+      "graft_bottomk(hash, value, k) - k smallest distinct hashes with payload, " +
+        "ARRAY<STRUCT<h,v>> ASC by h (KMV sketch / deterministic bottom-k sample)",
+      3, Some(2))(BottomKAggregate(_)),
+    agg("graft_qsketch",
+      "graft_qsketch(value) - mergeable log-linear quantile sketch over " +
+        "non-negative BIGINT units, ARRAY<STRUCT<b,cnt>> ASC by bucket " +
+        "(constant ~8KB state per group, <= 1/32 relative error)", 1)(
+      _ => QuantileSketchAggregate()),
+    agg("graft_qsketch_merge",
+      "graft_qsketch_merge(sketch) - merge already-built graft_qsketch " +
+        "summaries (rollup without re-reading raw rows; bit-identical to " +
+        "sketching the union)", 1)(_ => QuantileSketchAggregate(merging = true)),
+    agg("graft_hll",
+      "graft_hll(hash) - HyperLogLog registers (p=8, constant 256B state) " +
+        "over a 60-bit md5-derived hash, ARRAY<STRUCT<b,r>> ASC by bucket", 1)(
+      _ => HllAggregate()),
+    agg("graft_hll_merge",
+      "graft_hll_merge(sketch) - element-wise-max union of graft_hll " +
+        "register sets (rollup without re-reading raw rows; bit-identical " +
+        "to sketching the union)", 1)(_ => HllAggregate(merging = true)),
+    agg("graft_bloom",
+      "graft_bloom(hash) - 32768-bit Bloom filter (the four 15-bit lanes " +
+        "of a 60-bit md5 hash) as ARRAY<BIGINT>[512]; merge is bitwise OR", 1)(
+      _ => BloomAggregate),
+    agg("graft_cms",
+      "graft_cms(hash) - Count-Min sketch (4 rows x 64 buckets, constant " +
+        "2KB state) over a 60-bit md5-derived hash, ARRAY<STRUCT<cell,cnt>> " +
+        "ASC by cell; estimates never undercount", 1)(_ => CmsAggregate()),
+    agg("graft_cms_merge",
+      "graft_cms_merge(sketch) - element-wise sum of graft_cms summaries " +
+        "(rollup without re-reading raw rows; bit-identical to sketching " +
+        "the union)", 1)(_ => CmsAggregate(merging = true)),
+    agg("graft_bounded_collect",
+      "graft_bounded_collect(row_struct, k) - per-group row collection with " +
+        "a hard k-entry buffer bound (map-side AND merge); groups of <= k " +
+        "rows are collected losslessly, larger groups are truncated " +
+        "arbitrarily (callers decide by a count riding the same aggregate)",
+      2, Some(1))(BoundedCollectAggregate(_)),
+    agg("graft_mgsketch",
+      "graft_mgsketch(item, k) - Misra-Gries heavy-hitters summary, at " +
+        "most k counters; every item with frequency > n/(k+1) is present",
+      2, Some(1))(MisraGriesAggregate(_)))
+
+  /** The one argument check every function shares. */
+  private def builder(f: Fn): Builder = { args =>
+    require(args.length == f.arity,
+      s"${f.name} expects ${f.arity} argument${if (f.arity == 1) "" else "s"}, got ${args.length}")
+    f.kArg match {
+      case None => f.build(args, 0)
+      case Some(i) =>
+        val k = args(i) match {
           case Literal(v: Int, IntegerType) if v > 0 => v
           case other => throw new IllegalArgumentException(
-            s"graft_topk k must be a positive INT literal, got $other")
+            s"${f.name} k must be a positive INT literal, got $other")
         }
-        TopKAggregate(args(0), args(1), k)
-      }),
-    (new FunctionIdentifier("graft_bottomk"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_bottomk",
-        "graft_bottomk(hash, value, k) - k smallest distinct hashes with payload, " +
-          "ARRAY<STRUCT<h,v>> ASC by h (KMV sketch / deterministic bottom-k sample)"),
-      { args =>
-        require(args.length == 3, s"graft_bottomk expects 3 arguments, got ${args.length}")
-        val k = args(2) match {
-          case Literal(v: Int, IntegerType) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"graft_bottomk k must be a positive INT literal, got $other")
-        }
-        BottomKAggregate(args(0), args(1), k)
-      }),
-    (new FunctionIdentifier("graft_qsketch"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_qsketch",
-        "graft_qsketch(value) - mergeable log-linear quantile sketch over " +
-          "non-negative BIGINT units, ARRAY<STRUCT<b,cnt>> ASC by bucket " +
-          "(constant ~8KB state per group, <= 1/32 relative error)"),
-      { args =>
-        require(args.length == 1, s"graft_qsketch expects 1 argument, got ${args.length}")
-        QuantileSketchAggregate(args(0))
-      }),
-    (new FunctionIdentifier("graft_qsketch_merge"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_qsketch_merge",
-        "graft_qsketch_merge(sketch) - merge already-built graft_qsketch " +
-          "summaries (rollup without re-reading raw rows; bit-identical to " +
-          "sketching the union)"),
-      { args =>
-        require(args.length == 1,
-          s"graft_qsketch_merge expects 1 argument, got ${args.length}")
-        QuantileSketchMergeAggregate(args(0))
-      }),
-    (new FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_hll",
-        "graft_hll(hash) - HyperLogLog registers (p=8, constant 256B state) " +
-          "over a 60-bit md5-derived hash, ARRAY<STRUCT<b,r>> ASC by bucket"),
-      { args =>
-        require(args.length == 1, s"graft_hll expects 1 argument, got ${args.length}")
-        HllAggregate(args(0))
-      }),
-    (new FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_hll_merge",
-        "graft_hll_merge(sketch) - element-wise-max union of graft_hll " +
-          "register sets (rollup without re-reading raw rows; bit-identical " +
-          "to sketching the union)"),
-      { args =>
-        require(args.length == 1,
-          s"graft_hll_merge expects 1 argument, got ${args.length}")
-        HllMergeAggregate(args(0))
-      }),
-    (new FunctionIdentifier("graft_bloom"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_bloom",
-        "graft_bloom(hash) - 32768-bit Bloom filter (the four 15-bit lanes " +
-          "of a 60-bit md5 hash) as ARRAY<BIGINT>[512]; merge is bitwise OR"),
-      { args =>
-        require(args.length == 1, s"graft_bloom expects 1 argument, got ${args.length}")
-        BloomAggregate(args(0))
-      }),
-    (new FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_cms",
-        "graft_cms(hash) - Count-Min sketch (4 rows x 64 buckets, constant " +
-          "2KB state) over a 60-bit md5-derived hash, ARRAY<STRUCT<cell,cnt>> " +
-          "ASC by cell; estimates never undercount"),
-      { args =>
-        require(args.length == 1, s"graft_cms expects 1 argument, got ${args.length}")
-        CmsAggregate(args.head)
-      }),
-    (new FunctionIdentifier("graft_cms_merge"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_cms_merge",
-        "graft_cms_merge(sketch) - element-wise sum of graft_cms summaries " +
-          "(rollup without re-reading raw rows; bit-identical to sketching " +
-          "the union)"),
-      { args =>
-        require(args.length == 1,
-          s"graft_cms_merge expects 1 argument, got ${args.length}")
-        CmsMergeAggregate(args.head)
-      }),
-    (new FunctionIdentifier("graft_bounded_collect"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_bounded_collect",
-        "graft_bounded_collect(row_struct, k) - per-group row collection with " +
-          "a hard k-entry buffer bound (map-side AND merge); groups of <= k " +
-          "rows are collected losslessly, larger groups are truncated " +
-          "arbitrarily (callers decide by a count riding the same aggregate)"),
-      { args =>
-        require(args.length == 2,
-          s"graft_bounded_collect expects 2 arguments, got ${args.length}")
-        val k = args(1) match {
-          case Literal(v: Int, IntegerType) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"graft_bounded_collect k must be a positive INT literal, got $other")
-        }
-        BoundedCollectAggregate(args(0), k)
-      }),
-    (new FunctionIdentifier("graft_mgsketch"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_mgsketch",
-        "graft_mgsketch(item, k) - Misra-Gries heavy-hitters summary, at " +
-          "most k counters; every item with frequency > n/(k+1) is present"),
-      { args =>
-        require(args.length == 2, s"graft_mgsketch expects 2 arguments, got ${args.length}")
-        val k = args(1) match {
-          case Literal(v: Int, IntegerType) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"graft_mgsketch k must be a positive INT literal, got $other")
-        }
-        MisraGriesAggregate(args(0), k)
-      }))
+        f.build(args.patch(i, Nil, 1), k)
+    }
+  }
+
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = table.map(f =>
+    (new FunctionIdentifier(f.name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, f.name, f.usage),
+      builder(f)))
 
   /** Idempotently register the functions + the HOF→native rewrite on an
     * existing session (builder-time extensions can't be added post-hoc;

@@ -1,20 +1,15 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** `graft_hll(hash)` — HyperLogLog registers over a caller-supplied 60-bit
-  * hash (feed `TextFunctions.md5Bits(key, 15)`), as a typed imperative
-  * aggregate with CONSTANT 256-byte state per group. Returns the register
-  * set itself: `ARRAY<STRUCT<b INT, r INT>>` sorted by bucket id ASC, one
-  * row per non-zero register — the persistable summary [[HllMergeAggregate]]
-  * re-aggregates without touching raw rows.
+  * hash (feed `TextFunctions.md5Bits(key, 15)`), as a [[DenseCells]]
+  * family with CONSTANT 256-byte serialized state per group. Returns the
+  * register set itself: `ARRAY<STRUCT<b INT, r INT>>` sorted by bucket id
+  * ASC, one row per non-zero register — the persistable summary
+  * `graft_hll_merge` (`merging = true`) re-aggregates without touching raw
+  * rows. Union of HLLs over disjoint-or-not inputs is exact register max,
+  * so the rollup is bit-identical to sketching the union of the raw rows.
   *
   * Register map (p = 8, m = 256 buckets):
   *  - bucket `b = h & 255` (low 8 bits);
@@ -45,57 +40,23 @@ import org.apache.spark.sql.types._
   * constant bytes per group per mapper (partial aggregation), vs
   * COUNT(DISTINCT)'s full distinct-key shuffle.
   */
-case class HllAggregate(
-    hashExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
+case class HllAggregate(merging: Boolean = false) extends DenseCells {
+  override def base: String = "graft_hll"
+  override def cells: Int = HllAggregate.M
+  override def entryType: StructType = HllAggregate.entryType
+  override def maxValue: Long = 53L
+  override def combine(a: Long, b: Long): Long = math.max(a, b)
 
-  import HllAggregate._
-
-  override def prettyName: String = "graft_hll"
-  override def children: Seq[Expression] = Seq(hashExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(entryType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hashExpr.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hll expects BIGINT, got ${hashExpr.dataType.catalogString}")
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val h = hashExpr.eval(input)
-    if (h != null) {
-      val hv = h.asInstanceOf[Long]
-      val b = (hv & 255L).toInt
-      val w = hv >>> 8
-      val rho = if (w == 0L) 53 else java.lang.Long.numberOfLeadingZeros(w) - 11
-      if (rho > buf(b)) buf(b) = rho.toByte
-    }
-    buf
+  override def add(buf: Array[Long], h: Long): Unit = {
+    val b = (h & 255L).toInt
+    val w = h >>> 8
+    val rho = if (w == 0L) 53 else java.lang.Long.numberOfLeadingZeros(w) - 11
+    if (rho > buf(b)) buf(b) = rho
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < M) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Byte]): Any = HllAggregate.evalBuffer(buf)
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllAggregate =
-    copy(hashExpr = newChildren(0))
+  // one byte per register on the wire (rho <= 53)
+  override def serialize(buf: Array[Long]): Array[Byte] = buf.map(_.toByte)
+  override def deserialize(bytes: Array[Byte]): Array[Long] = bytes.map(_.toLong)
 }
 
 object HllAggregate {
@@ -105,90 +66,4 @@ object HllAggregate {
   val entryType: StructType = StructType(Seq(
     StructField("b", IntegerType, nullable = false),
     StructField("r", IntegerType, nullable = false)))
-
-  def evalBuffer(buf: Array[Byte]): GenericArrayData = {
-    var n = 0
-    var i = 0
-    while (i < M) { if (buf(i) != 0) n += 1; i += 1 }
-    val rows = new Array[Any](n)
-    var j = 0
-    i = 0
-    while (i < M) {
-      if (buf(i) != 0) { rows(j) = InternalRow(i, buf(i).toInt); j += 1 }
-      i += 1
-    }
-    new GenericArrayData(rows)
-  }
-}
-
-/** `graft_hll_merge(sketch)` — element-wise-max union of already-built
-  * [[HllAggregate]] register sets (the `ARRAY<STRUCT<b,r>>` they emit, e.g.
-  * read back from a per-day summary table). Union of HLLs over disjoint-or-
-  * not inputs is exact register max, so re-aggregating persisted sketches
-  * is bit-identical to sketching the union of the raw rows — the rollup-
-  * without-raw-data path at 100 TB (same contract as
-  * `graft_qsketch_merge`).
-  */
-case class HllMergeAggregate(
-    sketchExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
-
-  import HllAggregate._
-
-  override def prettyName: String = "graft_hll_merge"
-  override def children: Seq[Expression] = Seq(sketchExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(entryType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = sketchExpr.dataType match {
-    case ArrayType(s: StructType, _)
-        if s.length == 2 && s(0).dataType == IntegerType && s(1).dataType == IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_hll_merge expects ARRAY<STRUCT<b INT, r INT>> (a graft_hll " +
-        s"result), got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = sketchExpr.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        val row = arr.getStruct(i, 2)
-        val b = row.getInt(0)
-        val r = row.getInt(1)
-        require(b >= 0 && b < M && r >= 0 && r <= 53,
-          s"graft_hll_merge: entry (b=$b, r=$r) outside register domain")
-        if (r > buf(b)) buf(b) = r.toByte
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < M) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Byte]): Any = HllAggregate.evalBuffer(buf)
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllMergeAggregate =
-    copy(sketchExpr = newChildren(0))
 }

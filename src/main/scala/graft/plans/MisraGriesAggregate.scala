@@ -3,9 +3,7 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,27 +37,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * mass that arrivals paid in; implemented as a single sweep when the map
   * is full and a new item misses.
   */
-case class MisraGriesAggregate(
-    itemExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgBuffer] {
+case class MisraGriesAggregate(k: Int) extends SketchFamily[MgBuffer] {
 
-  override def prettyName: String = "graft_mgsketch"
-  override def children: Seq[Expression] = Seq(itemExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(MisraGriesAggregate.entryType, containsNull = false)
+  override def name: String = "graft_mgsketch"
+  override def params: Seq[Any] = Seq(k)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType(in: Seq[DataType]): DataType =
+    ArrayType(MisraGriesAggregate.entryType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (itemExpr.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_mgsketch expects STRING, got ${itemExpr.dataType.catalogString}")
+  override def create(): MgBuffer = new MgBuffer(k)
 
-  override def createAggregationBuffer(): MgBuffer = new MgBuffer(k)
-
-  override def update(buf: MgBuffer, input: InternalRow): MgBuffer = {
-    val v = itemExpr.eval(input)
+  override def update(buf: MgBuffer, in: Array[Expression], row: InternalRow): MgBuffer = {
+    val v = in(0).eval(row)
     if (v != null) buf.add(v.asInstanceOf[UTF8String].toString, 1L)
     buf
   }
@@ -94,14 +83,6 @@ case class MisraGriesAggregate(
     while (i < n) { val t = in.readUTF(); val c = in.readLong(); buf.add(t, c); i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MisraGriesAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MisraGriesAggregate =
-    copy(itemExpr = newChildren(0))
 }
 
 object MisraGriesAggregate {

@@ -2,18 +2,23 @@ package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `graft_qsketch(value)` — a MERGEABLE quantile sketch with CONSTANT
-  * per-group state, as a typed imperative aggregate over non-negative
+  * per-group state, as a [[DenseCells]] family over non-negative
   * BIGINT values (callers feed exact integer units, e.g. cents). Returns
   * the sketch itself: `ARRAY<STRUCT<b INT, cnt BIGINT>>` sorted by bucket
   * id ASC, one row per non-empty bucket.
+  *
+  * `graft_qsketch_merge` (`merging = true`) re-aggregates already-built
+  * sketches — the half of the mergeable-sketch contract that makes it worth
+  * having at 100 TB: sketch ONCE per fine partition at ingest (per day ×
+  * source, per (flag, status), ...), persist the ~8 KB summaries, and
+  * answer any coarser rollup later by merging summaries — never re-reading
+  * the raw rows. Because the bucket map is fixed and merge is element-wise
+  * addition, a rollup of per-group sketches is BIT-IDENTICAL to sketching
+  * the union raw (`q_percentiles_rollup` oracle-checks exactly that;
+  * QuantileSketchSpec pins it as a property).
   *
   * Bucketing is DDSketch-style log-linear, but integer-exact (no libm, so
   * another engine reproduces it bit-for-bit — the DuckDB oracle does):
@@ -42,53 +47,38 @@ import org.apache.spark.sql.types._
   * the right trade for an oracle-gated engine (same reasoning as
   * `graft_bottomk`'s deterministic bottom-k sample).
   */
-case class QuantileSketchAggregate(
-    valExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+case class QuantileSketchAggregate(merging: Boolean = false) extends DenseCells {
+  import QuantileSketchAggregate.NumBuckets
 
-  import QuantileSketchAggregate._
+  override def base: String = "graft_qsketch"
+  override def cells: Int = NumBuckets
+  override def entryType: StructType = QuantileSketchAggregate.entryType
+  override def combine(a: Long, b: Long): Long = a + b
 
-  override def prettyName: String = "graft_qsketch"
-  override def children: Seq[Expression] = Seq(valExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(entryType, containsNull = false)
+  override def add(buf: Array[Long], v: Long): Unit =
+    buf(QuantileSketchAggregate.bucketOf(v)) += 1L
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (valExpr.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_qsketch expects BIGINT, got ${valExpr.dataType.catalogString}")
+  // count-prefixed sparse (bucket INT, count BIGINT) pairs
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeInt(buf.count(_ != 0L))
+    var i = 0
+    while (i < NumBuckets) {
+      if (buf(i) != 0L) { out.writeInt(i); out.writeLong(buf(i)) }
+      i += 1
+    }
+    out.flush(); bos.toByteArray
+  }
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](NumBuckets)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = valExpr.eval(input)
-    if (v != null) buf(bucketOf(v.asInstanceOf[Long])) += 1L
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val buf = new Array[Long](NumBuckets)
+    val n = in.readInt()
+    var i = 0
+    while (i < n) { val b = in.readInt(); buf(b) = in.readLong(); i += 1 }
     buf
   }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < NumBuckets) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = QuantileSketchAggregate.evalBuffer(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] =
-    QuantileSketchAggregate.serializeBuffer(buf)
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] =
-    QuantileSketchAggregate.deserializeBuffer(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QuantileSketchAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QuantileSketchAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): QuantileSketchAggregate =
-    copy(valExpr = newChildren(0))
 }
 
 object QuantileSketchAggregate {
@@ -119,44 +109,4 @@ object QuantileSketchAggregate {
       val s = b % 16
       (33L + 2L * s) << (bitLen - 6)
     }
-
-  // buffer codecs shared with graft_qsketch_merge (same state shape)
-
-  def evalBuffer(buf: Array[Long]): GenericArrayData = {
-    var n = 0
-    var i = 0
-    while (i < NumBuckets) { if (buf(i) != 0L) n += 1; i += 1 }
-    val rows = new Array[Any](n)
-    var j = 0
-    i = 0
-    while (i < NumBuckets) {
-      if (buf(i) != 0L) { rows(j) = InternalRow(i, buf(i)); j += 1 }
-      i += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  def serializeBuffer(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    var n = 0
-    var i = 0
-    while (i < NumBuckets) { if (buf(i) != 0L) n += 1; i += 1 }
-    out.writeInt(n)
-    i = 0
-    while (i < NumBuckets) {
-      if (buf(i) != 0L) { out.writeInt(i); out.writeLong(buf(i)) }
-      i += 1
-    }
-    out.flush(); bos.toByteArray
-  }
-
-  def deserializeBuffer(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](NumBuckets)
-    val n = in.readInt()
-    var i = 0
-    while (i < n) { val b = in.readInt(); buf(b) = in.readLong(); i += 1 }
-    buf
-  }
 }

@@ -3,14 +3,12 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** `graft_topk(score, id, k)` — grouped top-k as a typed imperative
-  * aggregate: each group keeps a BOUNDED buffer of its k best
+/** `graft_topk(score, id, k)` — grouped top-k as a [[SketchAggregate]]
+  * family: each group keeps a BOUNDED buffer of its k best
   * (score DESC, id ASC) pairs.
   *
   * Why not `row_number() OVER (PARTITION BY g ORDER BY ...) <= k`? The
@@ -29,31 +27,19 @@ import org.apache.spark.sql.types._
   * for small k (top-3/top-10) this beats a heap's constant factor; swap in
   * a bounded heap for large k.
   */
-case class TopKAggregate(
-    scoreExpr: Expression,
-    idExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKBuffer] {
+case class TopKAggregate(k: Int) extends SketchFamily[TopKBuffer] {
 
-  override def prettyName: String = "graft_topk"
-  override def children: Seq[Expression] = Seq(scoreExpr, idExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(TopKAggregate.entryType, containsNull = false)
+  override def name: String = "graft_topk"
+  override def params: Seq[Any] = Seq(k)
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
+  override def dataType(in: Seq[DataType]): DataType =
+    ArrayType(TopKAggregate.entryType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (scoreExpr.dataType == DoubleType && idExpr.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_topk expects (DOUBLE, BIGINT), got " +
-        s"(${scoreExpr.dataType.catalogString}, ${idExpr.dataType.catalogString})")
+  override def create(): TopKBuffer = new TopKBuffer(k)
 
-  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
-
-  override def update(buf: TopKBuffer, input: InternalRow): TopKBuffer = {
-    val s = scoreExpr.eval(input)
-    val i = idExpr.eval(input)
+  override def update(buf: TopKBuffer, in: Array[Expression], row: InternalRow): TopKBuffer = {
+    val s = in(0).eval(row)
+    val i = in(1).eval(row)
     if (s != null && i != null) buf.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
     buf
   }
@@ -91,14 +77,6 @@ case class TopKAggregate(
     while (i < n) { buf.insert(in.readDouble(), in.readLong()); i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKAggregate =
-    copy(scoreExpr = newChildren(0), idExpr = newChildren(1))
 }
 
 object TopKAggregate {

@@ -1428,7 +1428,7 @@ object StreamRunner {
       audit: DataFrame => Option[String],
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val (cellCol, csCol) =
       graft.operators.Similarity.cellAssignExpr(embStream.sparkSession, centroids)
     val assigned = embStream.select(col("vec_id"), col("embedding"), cellCol, csCol)

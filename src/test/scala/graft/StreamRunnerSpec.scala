@@ -1624,11 +1624,11 @@ class StreamRunnerSpec extends SparkSuiteBase {
     val wh = new Warehouse(tmpDir("imgingest"))
     val cp = tmpDir("imgingest_cp")
     val ms = MemoryStream[(Long, Array[Byte])]
+    // batch 0: three distinct images
+    ms.addData(Seq(0L, 1L, 2L).map(i => i -> pay(i)))
     val q = StreamRunner.imageIngestToWarehouse(
       ms.toDF().toDF("doc_id", "payload"), wh, "imgs", _ => None,
       cp, Trigger.AvailableNow())
-    // batch 0: three distinct images
-    ms.addData(Seq(0L, 1L, 2L).map(i => i -> pay(i)))
     q.processAllAvailable(); q.stop()
     assert(wh.read(spark, "imgs").count() === 3L)
     // batch 1 (SAME checkpoint — the continuation, so only the new data
@@ -1714,10 +1714,10 @@ class StreamRunnerSpec extends SparkSuiteBase {
     val wh = new Warehouse(tmpDir("audingest"))
     val cp = tmpDir("audingest_cp")
     val ms = MemoryStream[(Long, Array[Byte])]
+    ms.addData(Seq(1L, 4L, 7L).map(i => i -> pay(i)))
     val q = StreamRunner.audioIngestToWarehouse(
       ms.toDF().toDF("doc_id", "payload"), wh, "auds", _ => None,
       cp, Trigger.AvailableNow())
-    ms.addData(Seq(1L, 4L, 7L).map(i => i -> pay(i)))
     q.processAllAvailable(); q.stop()
     assert(wh.read(spark, "auds").count() === 3L)
     ms.addData(Seq(22L, 25L, 46L, 49L).map(i => i -> pay(i)))
@@ -1997,9 +1997,9 @@ class StreamRunnerSpec extends SparkSuiteBase {
     val wh = new Warehouse(tmpDir("medingest"))
     val cp = tmpDir("medingest_cp")
     val ms = MemoryStream[(Long, Array[Byte])]
+    ms.addData(b0.map(i => i -> pay(i)))
     val q = StreamRunner.mediaIngestToWarehouse(
       ms.toDF().toDF("doc_id", "payload"), wh, "med", _ => None, cp)
-    ms.addData(b0.map(i => i -> pay(i)))
     q.processAllAvailable(); q.stop()
     ms.addData(b1.map(i => i -> pay(i)))
     val q2 = StreamRunner.mediaIngestToWarehouse(
@@ -2027,9 +2027,9 @@ class StreamRunnerSpec extends SparkSuiteBase {
       val twh = new Warehouse(tmpDir(s"twin$m"))
       val tcp = tmpDir(s"twin${m}_cp")
       val tms = MemoryStream[(Long, Array[Byte])]
+      tms.addData(b0.filter(_ % 3 == m).map(i => i -> pay(i)))
       val tq = run(tms.toDF().toDF("doc_id", "payload"), twh, table,
         _ => None, tcp, Trigger.AvailableNow())
-      tms.addData(b0.filter(_ % 3 == m).map(i => i -> pay(i)))
       tq.processAllAvailable(); tq.stop()
       tms.addData(b1.filter(_ % 3 == m).map(i => i -> pay(i)))
       val tq2 = run(tms.toDF().toDF("doc_id", "payload"), twh, table,
@@ -2249,10 +2249,10 @@ class StreamRunnerSpec extends SparkSuiteBase {
     val wh = new Warehouse(tmpDir("vidingest"))
     val cp = tmpDir("vidingest_cp")
     val ms = MemoryStream[(Long, Array[Byte])]
+    ms.addData(Seq(0L, 1L).map(i => i -> pay(i)))
     val q = StreamRunner.videoIngestToWarehouse(
       ms.toDF().toDF("doc_id", "payload"), wh, "vids", _ => None,
       cp, Trigger.AvailableNow())
-    ms.addData(Seq(0L, 1L).map(i => i -> pay(i)))
     q.processAllAvailable(); q.stop()
     // batch 1: 8 re-renders 0 exactly, 9 is 1's one-cell keyframe edit
     // (hamming 1-2), 30 is new
