@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> schema inference guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -52,6 +52,18 @@ for pat in 'extends TypedImperativeAggregate' 'withNewMutableAggBufferOffset'; d
     exit 1
   fi
 done
+
+echo "== schema inference guard =="
+# every parquet read goes through graft.sources.ParquetSource, whose format
+# reads the one footer Spark's inference would pick on the driver instead
+# of in a one-task Spark job
+stray=$(grep -rnE 'read\.parquet\(|format\("parquet"\)|read\.format\(format\)' src/main \
+  | grep -vE '^src/main/scala/(graft/sources/ParquetSource|org/apache/spark/sql/execution/datasources/parquet/DriverFooterParquetFileFormat)\.scala:' || true)
+if [[ -n "$stray" ]]; then
+  echo "parquet read outside graft.sources.ParquetSource:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 
 echo "== compile + unit specs =="
 sbt -batch test

@@ -1,12 +1,16 @@
 package graft
 
+import graft.sources.ParquetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
 /** Readers for the driver-generated parquet fixtures (TESTDATA.md /
-  * FIXTURES.md §A). Parquet carries its own schema; we do NOT infer.
+  * FIXTURES.md §A). Each table's schema is the one in its parquet footer:
+  * [[graft.sources.ParquetSource]] reads that one footer on the driver,
+  * giving the schema `spark.read.parquet` infers without its one-task
+  * schema job.
   *
-  * Scale posture: these are plain `spark.read.parquet` scans — at 100 TB the
+  * Scale posture: these are plain parquet scans — at 100 TB the
   * same call reads a date/key-partitioned parquet lake and Catalyst does
   * partition pruning + predicate pushdown for free, because every operator in
   * this library keeps filters and projections declarative.
@@ -28,7 +32,7 @@ object Tables {
       // every downstream query was written against: integer div for nanos
       // (exact), ntz→ltz cast for micros (identity instant under the UTC
       // session zone Sessions pins).
-      val raw = spark.read.parquet(path(dir, name))
+      val raw = ParquetSource.read(spark, path(dir, name))
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
@@ -37,7 +41,7 @@ object Tables {
         case _ => raw
       }
     } else {
-      spark.read.parquet(path(dir, name))
+      ParquetSource.read(spark, path(dir, name))
     }
 
   /** Register every fixture table as a temp view so the full engine surface

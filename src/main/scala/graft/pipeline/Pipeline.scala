@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import graft.sources.ParquetSource
+
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
@@ -46,7 +48,7 @@ class Warehouse(val root: String, val format: String = "parquet") {
   def tablePath(name: String): String = s"$root/$name"
 
   def read(spark: SparkSession, name: String): DataFrame =
-    spark.read.format(format).load(tablePath(name))
+    ParquetSource.read(spark, tablePath(name), format)
 
   def exists(name: String): Boolean =
     new java.io.File(tablePath(name)).exists()
@@ -440,7 +442,7 @@ class Warehouse(val root: String, val format: String = "parquet") {
     require(versionCommitted(name, v),
       s"version $v of $name does not exist (pruned or never written)")
     def loadGen(g: Int): DataFrame =
-      spark.read.format(format).load(s"${tablePath(name)}/_v=$g")
+      ParquetSource.read(spark, s"${tablePath(name)}/_v=$g", format)
     manifestOf(name, v) match {
       case None => loadGen(v)
       case Some((bc, map)) =>
@@ -630,7 +632,7 @@ class Warehouse(val root: String, val format: String = "parquet") {
       audit: DataFrame => Option[String]): Either[String, Unit] = {
     val stagePath = tablePath(s"__stage__$name")
     df.write.mode(SaveMode.Overwrite).format(format).save(stagePath)
-    audit(spark.read.format(format).load(stagePath)) match {
+    audit(ParquetSource.read(spark, stagePath, format)) match {
       case Some(reason) => Left(reason)
       case None =>
         val live = new java.io.File(tablePath(name))

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Sessions
+import graft.sources.ParquetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,7 +55,7 @@ object GenScale {
 
   def scaleAll(spark: SparkSession, src: String, out: String, factor: Int,
       growBlocks: Boolean = false): Unit = {
-    def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String): DataFrame = ParquetSource.read(spark, s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
 

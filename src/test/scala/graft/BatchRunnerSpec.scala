@@ -86,7 +86,6 @@ class BatchRunnerSpec extends SparkSuiteBase {
   }
 
   test("missingDates: an interrupted backfill resumes with exactly the unwritten days") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val w = new Warehouse(tmpDir("brcatchup"))
     val schedule = BatchRunner.dateRange(

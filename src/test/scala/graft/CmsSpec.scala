@@ -10,7 +10,6 @@ import org.apache.spark.sql.Row
 class CmsSpec extends SparkSuiteBase {
 
   private def hashed(n: Int) = {
-    import spark.implicits._
     spark.range(n).select(
       (col("id") % 5).cast("int").as("g"),
       // id % 100 → 100 distinct keys with n/100 true frequency each,

@@ -40,7 +40,6 @@ class ComponentsSpec extends SparkSuiteBase {
   }
 
   test("derived artifacts rebuild when the source fixture changes (staleness contract)") {
-    import org.apache.spark.sql.functions._
     val dir = tmpDir("graft_stale")
     val base = Seq(
       (10L, "alpha beta gamma delta epsilon zeta", "web"),  // new batch (id % 10 == 0)
@@ -63,7 +62,6 @@ class ComponentsSpec extends SparkSuiteBase {
   }
 
   test("derived artifacts of DIFFERENT source dirs coexist (concurrent-session isolation)") {
-    import org.apache.spark.sql.functions._
     // two sessions working different scale-factor dirs must never prune
     // each other's live artifacts — superseded-generation pruning is
     // scoped by the path tag to the SAME source dir
@@ -152,7 +150,6 @@ class ComponentsSpec extends SparkSuiteBase {
   }
 
   test("dedup_winnow_pairs equals a sequential winnowing replay") {
-    import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.01"
     def h60(str: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")

@@ -565,7 +565,6 @@ class CrawlSpec extends SparkSuiteBase {
   }
 
   test("crawl pipeline: layer failures degrade to the failing layer's class; Arrow == row") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf0001)
     val media = Crawl.attachWarcGzMedia(docs)
     // parity across the whole fixture

@@ -10,7 +10,6 @@ import org.apache.spark.sql.Row
 class HllSpec extends SparkSuiteBase {
 
   private def hashed(n: Int) = {
-    import spark.implicits._
     spark.range(n).select(
       (col("id") % 7).cast("int").as("g"),
       graft.functions.TextFunctions.md5Bits(col("id").cast("string"), 15).as("h"))

@@ -122,7 +122,6 @@ class PropertySpec extends SparkSuiteBase {
     } yield (math.min(a, b), math.max(a, b))
     check(Prop.forAll(Gen.listOfN(15, edgeGen)) { edges =>
       edges.isEmpty || {
-        import org.apache.spark.sql.functions.col
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(edges.map { case (a, b) => Row(a, b) }, 2),
           StructType(Seq(StructField("doc_a", LongType), StructField("doc_b", LongType))))

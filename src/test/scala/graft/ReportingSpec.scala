@@ -94,7 +94,6 @@ class ReportingSpec extends SparkSuiteBase {
   }
 
   test("skylineFrontier: partial-union decomposition equals brute force across partitionings") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // deterministic pseudo-random point cloud; dominated points everywhere,
     // frontier points scattered across partitions

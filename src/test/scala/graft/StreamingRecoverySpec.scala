@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.streaming.EventStreams
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Checkpoint recovery: a streaming query stopped and restarted from the

@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.pipeline.{BatchRunner, TransactionsPipeline, Warehouse}
-import org.apache.spark.sql.functions._
 
 /** End-to-end run of reference pipeline 2 over FIXTURES.md §B2-shaped
   * events: full-length arrays, a short (len-2) array, an empty array,
