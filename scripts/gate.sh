@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> schema inference guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> schema inference guard -> session definition guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -61,6 +61,17 @@ stray=$(grep -rnE 'read\.parquet\(|format\("parquet"\)|read\.format\(format\)' s
   | grep -vE '^src/main/scala/(graft/sources/ParquetSource|org/apache/spark/sql/execution/datasources/parquet/DriverFooterParquetFileFormat)\.scala:' || true)
 if [[ -n "$stray" ]]; then
   echo "parquet read outside graft.sources.ParquetSource:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+
+echo "== session definition guard =="
+# every session, specs included, comes from graft.Sessions.base: the codegen
+# class cache is sized once per JVM by the first session that compiles
+stray=$(grep -rnF 'SparkSession.builder' src \
+  | grep -v '^src/main/scala/graft/Sessions\.scala:' || true)
+if [[ -n "$stray" ]]; then
+  echo "SparkSession.builder outside graft.Sessions:" >&2
   echo "$stray" >&2
   exit 1
 fi

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.{GraftSparkBridge, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -22,7 +23,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Usage: runMain graft.QueryRun <mode> <sfDir> <names> [out]
   *  - `profile`: per query, one warm run, then per-job and per-stage rows
-  *    of a second run (which operator the time goes to, with the UI off);
+  *    of a second run (which operator the time goes to, with the UI off)
+  *    and the number of classes that run compiled, 0 when the codegen
+  *    cache still holds everything the warm run generated;
   *  - `shuffle`: one markdown row per query of shuffle write/read and spill
   *    MB from real task metrics (SCALE.md "Measured shuffle volumes");
   *  - `plans`: formatted physical plans, one section per query, written to
@@ -165,6 +168,11 @@ object QueryRun {
     def stages(group: String): Seq[StageRow] = read(stageRows.filter(_.group == group).toSeq)
   }
 
+  /** Generated classes compiled so far in this JVM, on the driver and on
+    * local-mode executor threads alike; a cache hit compiles nothing.
+    */
+  def classesCompiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Runs `body` with fresh [[Counters]] on the session's listener bus. */
   def watch[T](spark: SparkSession)(body: Counters => T): T = {
     val c = new Counters(spark.sparkContext)
@@ -180,9 +188,10 @@ object QueryRun {
   // tens of KB — the point of the shuffle audit is that they are NOT MBs
   private def mb(b: Long): String = f"${b / 1048576.0}%.2f"
 
-  private def profile(r: Record, c: Counters): Unit = {
+  private def profile(r: Record, c: Counters, compiled: Long): Unit = {
     val w = c.of(r.name)
-    println(f"== ${r.name}: ${r.seconds}%.3f s, ${w.jobs} jobs, ${w.stages} stages, " +
+    println(f"== ${r.name}: ${r.seconds}%.3f s, $compiled classes compiled, " +
+      f"${w.jobs} jobs, ${w.stages} stages, " +
       f"${w.tasks} tasks, cpu ${w.cpuNs / 1e9}%.2f s, sw ${mb(w.shuffleWrite)} MB, " +
       s"sr ${mb(w.shuffleRead)} MB, spill ${mb(w.spill)} MB, peak task mem ${mb(w.peakMem)} MB")
     c.jobs(r.name).sortBy(-_.ms).take(30).foreach { j =>
@@ -211,7 +220,12 @@ object QueryRun {
     val records = mode match {
       case "profile" => names.map { name =>
         once(name, noop)
-        watch(spark) { c => val r = once(name, noop); profile(r, c); r }
+        watch(spark) { c =>
+          val n0 = classesCompiled()
+          val r = once(name, noop)
+          profile(r, c, classesCompiled() - n0)
+          r
+        }
       }
       case "shuffle" =>
         println("| query | shuffle write MB | shuffle read MB | spill MB |")

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.IntegerType
   * planner strategy.
   *
   * Two ways in:
-  *  - at session build time: `SparkSession.builder.withExtensions(new
-  *    GraftExtensions)` (or config `spark.sql.extensions=graft.plans
-  *    .GraftExtensions`) — the idiomatic deployment path;
+  *  - at session build time: `withExtensions(new GraftExtensions)` on the
+  *    builder, as `graft.Sessions.base` does (or config
+  *    `spark.sql.extensions=graft.plans.GraftExtensions`) — the idiomatic
+  *    deployment path;
   *  - post-hoc on a live session: [[GraftExtensions.ensureRegistered]] —
   *    used by query modules so they work against ANY caller-provided session
   *    (the driver contract hands us a session we didn't build).

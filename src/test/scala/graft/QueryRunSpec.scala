@@ -72,4 +72,17 @@ class QueryRunSpec extends SparkSuiteBase {
     val e = intercept[IllegalArgumentException](QueryRun.select("q1_agg,q1_agq"))
     assert(e.getMessage.contains("q1_agq"))
   }
+
+  test("a second headline pass compiles no generated class") {
+    def pass(): Long = {
+      val n0 = QueryRun.classesCompiled()
+      PlanDump.headline.foreach { name =>
+        val r = QueryRun.runQuery(spark, sf0001, name, QueryRun.noop)
+        assert(r.ok, s"$name failed: ${r.error}")
+      }
+      QueryRun.classesCompiled() - n0
+    }
+    val first = pass()
+    assert(pass() === 0, s"the first pass compiled $first")
+  }
 }

@@ -4,21 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (lazy; JVM-wide getOrCreate so all suites in a
-  * forked test run share one context).
+  * forked test run share one context), built by the same [[Sessions.base]]
+  * every entry point uses: same settings, extensions and codegen cache size.
   */
 trait SparkSuiteBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    graft.plans.GraftExtensions.ensureRegistered(s)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.base("local[4]", 4)
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
