@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate, one command:
-#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> schema inference guard -> session definition guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
+#   artifact root guard -> query lifecycle guard -> lake lifecycle guard -> aggregate plumbing guard -> schema inference guard -> session definition guard -> row seam guard -> compile -> unit specs -> Verify@sf0.01 -> DuckDB oracle -> Bench@sf0.1
 # Usage: scripts/gate.sh [--no-bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -72,6 +72,17 @@ stray=$(grep -rnF 'SparkSession.builder' src \
   | grep -v '^src/main/scala/graft/Sessions\.scala:' || true)
 if [[ -n "$stray" ]]; then
   echo "SparkSession.builder outside graft.Sessions:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+
+echo "== row seam guard =="
+# every hand-written row transform in the operators is a MapPartitions node
+# inside the query's plan (graft.operators.Rows.mapPartitions): no Arrow
+# marshalling anywhere in the library, no RDD round trip in the operators
+stray=$( (grep -rnF 'org.apache.arrow' src/main; grep -rnF '.rdd' src/main/scala/graft/operators) || true)
+if [[ -n "$stray" ]]; then
+  echo "Arrow in src/main or .rdd in graft.operators:" >&2
   echo "$stray" >&2
   exit 1
 fi

@@ -163,12 +163,12 @@ object PlanDump {
     "txt_vocab_coverage",
     // RFM: one per-user partial agg; tercile bounds from value histograms
     "evt_rfm_segments",
-    // round 8: real PNG decode (narrow Arrow-seam mapPartitions, only
+    // round 8: real PNG decode (narrow mapPartitions, only
     // stats rows continue), BPE training loop (per-round partial-agg'd
     // pair count + shuffle-free re-measure), HLL uniqueness gate
     // (constant-state sketch agg, no key shuffle)
     "mm_png_decode", "txt_bpe_train", "q_expectations_audit_est",
-    // real PCM sample decode through the same Arrow seam
+    // real PCM sample decode through the same decode seam
     "mm_wav_decode",
     // round-8 session 2: NN resize fused with the decode (narrow,
     // 4 thumbnail rows per image continue), PCM zero-crossing features
@@ -194,13 +194,13 @@ object PlanDump {
     // and the signature joins stay doc-keyed (sig-sized, no text)
     "dedup_minhash_calibration",
     // round 9: real y4m frame decode + evenly-spaced frame sampling
-    // (narrow Arrow-seam mapPartitions — clip bytes never shuffle, only
+    // (narrow mapPartitions — clip bytes never shuffle, only
     // per-video/per-frame stat rows continue)
     "mm_video_decode", "mm_frame_sample", "mm_video_meta",
     // version-pinned snapshot diff: audit that both inputs are plain
     // pinned-directory scans and the join carries 16-byte hashes
     "pipe_version_diff",
-    // crawl ingestion: narrow Arrow-seam chain (gunzip -> WARC -> HTML),
+    // crawl ingestion: narrow mapPartitions chain (gunzip -> WARC -> HTML),
     // archive bytes never shuffle; HTML extraction inside the scan stage
     "crawl_gzip_members", "pipe_crawl_e2e", "txt_html_extract", "txt_utf8_audit",
     // export manifest: one partitioned readback + 8-byte bit_xor state
@@ -210,7 +210,7 @@ object PlanDump {
     // joins; SFT assembly projection
     "crawl_url_stats", "crawl_source_scan", "q_recursive_tree",
     "txt_sft_assemble",
-    // round 10: baseline JPEG decode (narrow Arrow-seam mapPartitions —
+    // round 10: baseline JPEG decode (narrow mapPartitions —
     // Huffman/dequant/IDCT where the bytes are read, only stat rows
     // continue) and the file-based crawl capstone (streamed warcgz V2
     // scan -> per-member WARC parse -> one doc-keyed reassembly agg)
@@ -258,7 +258,7 @@ object PlanDump {
     // window keys on the HIGH-cardinality canon string — the frontier
     // analog of dedup_exact)
     "crawl_url_canon",
-    // round-11 session 3: perceptual-hash image near-dup (Arrow-seam
+    // round-11 session 3: perceptual-hash image near-dup (narrow
     // decode+hash, 4×16-bit band equi-join — never all-pairs), its
     // connected-components capstone, and the audio energy-delta
     // fingerprint (narrow decode, no shuffle)
@@ -285,7 +285,7 @@ object PlanDump {
     // decodes live, corpus side scans the persisted signature artifact,
     // asymmetric band join)
     "sim_topk_m16_rerank", "mm_dhash_incr",
-    // temporal video fingerprint: narrow Arrow-seam decode, no shuffle
+    // temporal video fingerprint: narrow decode, no shuffle
     "mm_video_fingerprint",
     // sequence packing: per-(shard, block) bounded cumsum windows, two
     // partial-agg rollups — no corpus-wide sort
@@ -299,7 +299,7 @@ object PlanDump {
     "pipe_media_dedup_e2e",
     // the token-budget CUT: same histogram machinery, per-doc verdicts
     "pipe_token_budget_cut",
-    // round 13: the widened 60-bit audio fingerprint (narrow Arrow-seam
+    // round 13: the widened 60-bit audio fingerprint (narrow
     // decode — four per-window features in one pass, no shuffle) and the
     // width-tradeoff report (two decode aggs + a 1-row broadcast)
     "mm_wav_fingerprint60", "mm_wav_overmerge",

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types._
   * sees a single archive byte).
   *
   * Scale posture: all decode stages run inside ONE narrow
-  * mapPartitions/Arrow-seam pass — archive bytes are decoded where they
-  * are read and never shuffle; only per-document stat rows continue to
+  * `MapPartitions` pass ([[Rows.mapPartitions]]) — archive bytes are
+  * decoded where they are read and never shuffle; only per-document stat rows continue to
   * the presentation sort. Malformed members/records degrade to typed
   * reasons, never garbage output.
   */
@@ -684,8 +684,8 @@ object Crawl extends QueryModule {
     * `doc-<id>-<i>`.
     */
   def attachGzipMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"), col("text")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"), col("text")),
+        Multimodal.payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       val data = r.getString(1).getBytes("UTF-8")
       val k = data.length % 2 + 1
@@ -697,9 +697,7 @@ object Crawl extends QueryModule {
           java.util.Arrays.copyOfRange(data, from, until))
       }
       Row(id, GzipCodec.encodeMembers(chunks))
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** The fixture's WARC `request` record for doc `id`. */
@@ -754,8 +752,10 @@ object Crawl extends QueryModule {
     * actually transcoding the legacy bytes.
     */
   def attachCharsetMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"), col("text")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"), col("text")),
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("charset", StringType),
+          StructField("payload", BinaryType))))(_.map { r =>
       val id = r.getLong(0)
       val (label, marker) = charsetClasses((id % 5).toInt)
       val page =
@@ -781,10 +781,7 @@ object Crawl extends QueryModule {
         HttpCodec.encode(200, "OK",
           Seq("Content-Type" -> s"text/html; charset=$label"),
           pageBytes, chunked = false)))
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("charset", StringType),
-      StructField("payload", BinaryType))))
+    })
   }
 
   private val charsetStatSchema = StructType(Seq(
@@ -799,15 +796,13 @@ object Crawl extends QueryModule {
     * doc's HTML page ([[TextAnalysis.htmlTemplate]]).
     */
   def attachWarcGzMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"), col("text")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"), col("text")),
+        Multimodal.payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       Row(id, GzipCodec.encodeMembers(Seq(
         None -> requestRecord(id),
         None -> responseRecord(id, r.getString(1)))))
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   val gzipDecodeSchema: StructType = StructType(Seq(
@@ -896,23 +891,21 @@ object Crawl extends QueryModule {
     * data is a single JSON line of the doc's metadata.
     */
   def attachGzipJsonlMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"), col("lang"), col("n_chars")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"), col("lang"), col("n_chars")),
+        Multimodal.payloadSchema)(_.map { r =>
       val line =
         s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)}}"""
       Row(r.getLong(0), GzipCodec.encodeMember(line.getBytes("UTF-8")))
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** Archive → text LINES: every member's bytes split on newlines —
     * the generic front half of any `.jsonl.gz` reader (the JSON parse
     * stays declarative, downstream in `from_json`).
     */
-  def decodeGzipLines(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("payload")).rdd.mapPartitions { it =>
+  def decodeGzipLines(media: DataFrame): DataFrame =
+    Rows.mapPartitions(media.select(col("payload")),
+        StructType(Seq(StructField("line", StringType)))) { it =>
       // one-member-at-a-time salvage iterator: peak task memory is one
       // inflated member, not the whole inflated shard — a corrupt member
       // ends that archive's contribution at the last verified boundary
@@ -921,8 +914,6 @@ object Crawl extends QueryModule {
           new String(m.data, "UTF-8").split("\n").iterator.filter(_.nonEmpty))
       }.map(Row(_))
     }
-    spark.createDataFrame(rdd, StructType(Seq(StructField("line", StringType))))
-  }
 
   /** Archive → DOCUMENTS: every response record in every member of each
     * archive becomes one (doc_id, text) row — doc identity parsed from
@@ -931,7 +922,7 @@ object Crawl extends QueryModule {
     * ingest seam [[graft.streaming.StreamRunner.crawlIngestToWarehouse]]
     * feeds into the dedup publisher. Malformed archives/records and
     * non-response or unidentifiable records yield zero rows here — the
-    * accounting query for the corrupt classes is [[crawlExtractArrow]];
+    * accounting query for the corrupt classes is [[crawlExtract]];
     * an ingest pipeline runs both (extract for the corpus, the stats row
     * for the quarantine report).
     */
@@ -990,15 +981,12 @@ object Crawl extends QueryModule {
       salvage: Boolean = false): DataFrame = {
     val members = spark.read.format("warcgz")
       .option("salvage", salvage.toString).load(paths: _*).select(col("data"))
-    val rdd = members.rdd.mapPartitions { it =>
-      it.flatMap(row => memberText(row.getAs[Array[Byte]](0)))
-    }
-    spark.createDataFrame(rdd, textSchema)
+    Rows.mapPartitions(members, textSchema)(
+      _.flatMap(row => memberText(row.getAs[Array[Byte]](0))))
   }
 
-  def crawlTexts(archives: DataFrame, payloadCol: String): DataFrame = {
-    val spark = archives.sparkSession
-    val rdd = archives.select(col(payloadCol)).rdd.mapPartitions { it =>
+  def crawlTexts(archives: DataFrame, payloadCol: String): DataFrame =
+    Rows.mapPartitions(archives.select(col(payloadCol)), textSchema) { it =>
       // one-member-at-a-time salvage iterator: each member is inflated,
       // WARC-parsed, extracted, and RELEASED before the next — peak task
       // memory is one record, not the inflated shard. A corrupt member
@@ -1008,32 +996,12 @@ object Crawl extends QueryModule {
           .flatMap(m => memberText(m.data))
       }
     }
-    spark.createDataFrame(rdd, textSchema)
-  }
 
-  def decodeGzipArrow(media: DataFrame): DataFrame =
-    Multimodal.arrowHeaderParse(media, gzipDecodeSchema)(gzipDecodeRow)
+  def decodeGzip(media: DataFrame): DataFrame =
+    Multimodal.decodeEach(media, gzipDecodeSchema)(gzipDecodeRow)
 
-  /** Row-path twin of [[decodeGzipArrow]] (parity spec pins equality). */
-  def decodeGzip(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      gzipDecodeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, gzipDecodeSchema)
-  }
-
-  def crawlExtractArrow(media: DataFrame): DataFrame =
-    Multimodal.arrowHeaderParse(media, crawlSchema)(crawlRow)
-
-  /** Row-path twin of [[crawlExtractArrow]] (parity spec pins equality). */
-  def crawlExtract(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      crawlRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, crawlSchema)
-  }
+  def crawlExtract(media: DataFrame): DataFrame =
+    Multimodal.decodeEach(media, crawlSchema)(crawlRow)
 
   /** On-disk gzip-member shard files for the V2 source
     * ([[graft.sources.GzipMemberSource]]): up to eight `shard-<s>.gz`
@@ -1068,17 +1036,17 @@ object Crawl extends QueryModule {
     // layout v2: response records carry the HTTP layer
     def dir(s: SparkSession, d: String): String = Artifacts.wh.tablePath(
       Artifacts.publish("warc_shards", d, layout = "v2") { scratch =>
-        val rows = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .rdd.flatMap { r =>
-            val id = r.getLong(0)
-            // name "q" < "r" sorts the request record before its response
-            Seq(Row(id, "q", requestRecord(id)),
-              Row(id, "r", responseRecord(id, r.getString(1))))
-          }
-        val df = s.createDataFrame(rows, StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("name", StringType),
-          StructField("data", BinaryType))))
+        val df = Rows.mapPartitions(
+            Tables.documents(s, d).select(col("doc_id"), col("text")),
+            StructType(Seq(
+              StructField("doc_id", LongType),
+              StructField("name", StringType),
+              StructField("data", BinaryType))))(_.flatMap { r =>
+          val id = r.getLong(0)
+          // name "q" < "r" sorts the request record before its response
+          Seq(Row(id, "q", requestRecord(id)),
+            Row(id, "r", responseRecord(id, r.getString(1))))
+        })
         graft.sources.GzipShardWriter.write(
           df, Artifacts.wh.tablePath(scratch), 8): Unit
       })
@@ -1100,9 +1068,8 @@ object Crawl extends QueryModule {
     * unparseable members are dropped (the per-archive typed accounting
     * stays with [[crawlExtract]]).
     */
-  def warcRecordStats(members: DataFrame): DataFrame = {
-    val spark = members.sparkSession
-    val rdd = members.select(col("data")).rdd.mapPartitions { it =>
+  def warcRecordStats(members: DataFrame): DataFrame =
+    Rows.mapPartitions(members.select(col("data")), warcStatSchema) { it =>
       it.flatMap { row =>
         val data = row.getAs[Array[Byte]](0)
         WarcCodec.decode(data) match {
@@ -1134,8 +1101,6 @@ object Crawl extends QueryModule {
         }
       }
     }
-    spark.createDataFrame(rdd, warcStatSchema)
-  }
 
   /** Generic URL canonicalization over a frame carrying a `url` column
     * (built-in codegen'd `parse_url` + array HOFs, no UDF): adds
@@ -1219,8 +1184,8 @@ object Crawl extends QueryModule {
     * resolution, loop detection, and the hop cap all flip rows.
     */
   def attachRedirectMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id")),
+        Multimodal.payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       val c = id % 12
       val (st, reason, headers, body) =
@@ -1247,9 +1212,7 @@ object Crawl extends QueryModule {
         "Content-Type" -> "application/http; msgtype=response"),
         HttpCodec.encode(st, reason, headers, body, chunked = false))
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   val redirectSchema: StructType = StructType(Seq(
@@ -1276,9 +1239,9 @@ object Crawl extends QueryModule {
         }
     }
 
-  /** Redirect-record parse over the Arrow batch seam. */
-  def redirectRecordsArrow(media: DataFrame): DataFrame =
-    Multimodal.arrowHeaderParse(media, redirectSchema)(redirectRow)
+  /** Redirect-record parse, one [[redirectRow]] per payload. */
+  def redirectRecords(media: DataFrame): DataFrame =
+    Multimodal.decodeEach(media, redirectSchema)(redirectRow)
 
   /** A REAL streaming-maintained frontier fixture: the streaming ingest
     * body ([[graft.streaming.StreamRunner.frontierPublishBatch]]) run
@@ -1409,7 +1372,7 @@ object Crawl extends QueryModule {
     */
   private def frontierRecordsTable(s: SparkSession, d: String): DataFrame =
     Artifacts.table(s, d, "documents", "frontier_records")(
-      redirectRecordsArrow(attachRedirectMedia(Tables.documents(s, d))))
+      redirectRecords(attachRedirectMedia(Tables.documents(s, d))))
 
   /** Redirect-CHAIN resolution over a parsed record frame `(doc_id, url,
     * status, location)` — the frontier feeder a real crawler runs. Per
@@ -1667,7 +1630,6 @@ object Crawl extends QueryModule {
     */
   def robotsVerdicts(frontier: DataFrame, robots: DataFrame,
       agent: String): DataFrame = {
-    val spark = frontier.sparkSession
     val withParts = frontier.select(
       col("url"),
       regexp_extract(parse_url(col("url"), lit("HOST")),
@@ -1677,21 +1639,19 @@ object Crawl extends QueryModule {
           .otherwise(concat(lit("?"), parse_url(col("url"), lit("QUERY")))))
         .as("path_query"))
     val joined = withParts.join(broadcast(robots), Seq("domain"), "left")
-    val rdd = joined.select(col("url"), col("domain"), col("path_query"),
-        col("robots_txt")).rdd
-      .mapPartitions { it =>
-        val cache = scala.collection.mutable.HashMap[String, Seq[RobotsCodec.Rule]]()
-        it.map { r =>
-          val allowed =
-            if (r.isNullAt(3)) true // no robots.txt for this domain
-            else RobotsCodec.allowed(
-              cache.getOrElseUpdate(r.getString(3),
-                RobotsCodec.rulesFor(RobotsCodec.parse(r.getString(3)), agent)),
-              r.getString(2))
-          Row(r.getString(0), r.getString(1), allowed)
-        }
+    Rows.mapPartitions(joined.select(col("url"), col("domain"),
+        col("path_query"), col("robots_txt")), robotsVerdictSchema) { it =>
+      val cache = scala.collection.mutable.HashMap[String, Seq[RobotsCodec.Rule]]()
+      it.map { r =>
+        val allowed =
+          if (r.isNullAt(3)) true // no robots.txt for this domain
+          else RobotsCodec.allowed(
+            cache.getOrElseUpdate(r.getString(3),
+              RobotsCodec.rulesFor(RobotsCodec.parse(r.getString(3)), agent)),
+            r.getString(2))
+        Row(r.getString(0), r.getString(1), allowed)
       }
-    spark.createDataFrame(rdd, robotsVerdictSchema)
+    }
   }
 
   /** The host→host link-edge report shared by `crawl_link_graph` and
@@ -1736,21 +1696,25 @@ object Crawl extends QueryModule {
         col("n_links"), col("n_pages"), col("url_check"))
   }
 
+  /** A `(domain, robots_txt)` table of literal rows. */
+  private def robotsTable(s: SparkSession, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("domain", StringType), StructField("robots_txt", StringType))))
+  }
+
   /** Per-domain crawl delay for `agent` from the robots table — a
     * |domains|-sized frame ([[RobotsCodec.delayFor]] per body), the
     * politeness input a fetch scheduler multiplies into its budget.
     */
-  def robotsDelays(robots: DataFrame, agent: String): DataFrame = {
-    val spark = robots.sparkSession
-    val rdd = robots.select(col("domain"), col("robots_txt")).rdd.map { r =>
+  def robotsDelays(robots: DataFrame, agent: String): DataFrame =
+    Rows.mapPartitions(robots.select(col("domain"), col("robots_txt")),
+        StructType(Seq(StructField("domain", StringType),
+          StructField("crawl_delay", LongType))))(_.map { r =>
       Row(r.getString(0),
         RobotsCodec.delayFor(RobotsCodec.parse(r.getString(1)), agent)
           .map(_.toLong).map(Long.box).orNull)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("domain", StringType),
-      StructField("crawl_delay", org.apache.spark.sql.types.LongType))))
-  }
+    })
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- the V2 SOURCE surface: `spark.read.format("warcgz")` over a
@@ -1781,7 +1745,7 @@ object Crawl extends QueryModule {
     // never shuffle. ----
     "crawl_gzip_members" -> ((s, d) => {
       val media = attachGzipMedia(Tables.documents(s, d))
-      decodeGzipArrow(media).cache().orderBy(col("doc_id"))
+      decodeGzip(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- `.jsonl.gz` metadata shards: each doc's payload is a gzip
@@ -1922,17 +1886,14 @@ object Crawl extends QueryModule {
     "pipe_crawl_budget" -> ((s, d) => {
       val frontier = Tables.documents(s, d)
         .select(col("doc_id"), frontierUrl.as("url"))
-      val robots = s.createDataFrame(
-        s.sparkContext.parallelize((0 until 14).map { i =>
-          Row(s"site${i % 7}${if (i < 7) ".com" else ".org"}",
-            robotsTextFor(i.toLong))
-        }),
-        StructType(Seq(StructField("domain", StringType),
-          StructField("robots_txt", StringType))))
-      // localCheckpoint (not cache): the RDD-backed verdict pass feeds
-      // BOTH the gate rollup and the canonical-dedup branch — without it
-      // the robots matching runs twice (RDD scans are not
-      // exchange-reusable). Checkpointing materializes eagerly and is
+      val robots = robotsTable(s, (0 until 14).map { i =>
+        Row(s"site${i % 7}${if (i < 7) ".com" else ".org"}",
+          robotsTextFor(i.toLong))
+      })
+      // localCheckpoint (not cache): the verdict pass feeds BOTH the
+      // gate rollup and the canonical-dedup branch — without it the
+      // robots matching runs twice (the branches shuffle on different
+      // keys, so no exchange below the fork is reused). Checkpointing materializes eagerly and is
       // GC-reclaimed when the plan dies, where a .cache() with no
       // unpersist hook would pin the pass in executor memory for the
       // session (the dedup_clusters convention).
@@ -1998,13 +1959,10 @@ object Crawl extends QueryModule {
     // counts. Frontier is the data side; robots broadcast. ----
     "crawl_robots_gate" -> ((s, d) => {
       val frontier = Tables.documents(s, d).select(frontierUrl.as("url"))
-      val robots = s.createDataFrame(
-        s.sparkContext.parallelize((0 until 14).map { i =>
-          Row(s"site${i % 7}${if (i < 7) ".com" else ".org"}",
-            robotsTextFor(i.toLong))
-        }),
-        StructType(Seq(StructField("domain", StringType),
-          StructField("robots_txt", StringType))))
+      val robots = robotsTable(s, (0 until 14).map { i =>
+        Row(s"site${i % 7}${if (i < 7) ".com" else ".org"}",
+          robotsTextFor(i.toLong))
+      })
       robotsVerdicts(frontier, robots, "graftbot")
         .groupBy(col("domain"))
         .agg(count(lit(1)).as("n_urls"),
@@ -2024,7 +1982,7 @@ object Crawl extends QueryModule {
     // the landing URL's param-sort/utm-drop canon. ----
     "crawl_redirects" -> ((s, d) => {
       val media = attachRedirectMedia(Tables.documents(s, d))
-      resolveRedirects(redirectRecordsArrow(media)).orderBy(col("doc_id"))
+      resolveRedirects(redirectRecords(media)).orderBy(col("doc_id"))
     }),
 
     // ---- FRONTIER MERGE: the per-domain crawl-ops rollup the redirect
@@ -2035,12 +1993,12 @@ object Crawl extends QueryModule {
     // the same c=8 pages, so the dedup across discovery channels is
     // load-bearing, not zero by construction); dangling/loop/cap counts
     // are the frontier's hygiene columns. One decode pass feeds both
-    // rollups (localCheckpoint — the RDD seam is not exchange-reusable);
+    // rollups (localCheckpoint — no exchange below the fork is reused);
     // everything after is |domains|-sized. The oracle reruns the SAME
     // walk replay `crawl_redirects` uses and re-derives every count. ----
     "pipe_frontier_merge" -> ((s, d) => {
       val media = attachRedirectMedia(Tables.documents(s, d))
-      val recs = redirectRecordsArrow(media).localCheckpoint()
+      val recs = redirectRecords(media).localCheckpoint()
       val dom = (u: org.apache.spark.sql.Column) =>
         regexp_extract(u, "https://([^/]+)/", 1)
       val pages = recs.filter(col("status") === 200L)
@@ -2080,7 +2038,7 @@ object Crawl extends QueryModule {
     // artifact-vs-live parity); the oracle replays the SAME doc_id-space
     // walk filtered to batch sources. ----
     "crawl_frontier_incr" -> ((s, d) => {
-      val batch = redirectRecordsArrow(attachRedirectMedia(
+      val batch = redirectRecords(attachRedirectMedia(
         Tables.documents(s, d).filter(col("doc_id") % 10 === 0)))
       resolveRedirectsAgainst(batch, frontierRecordsTable(s, d))
         .orderBy(col("doc_id"))
@@ -2182,13 +2140,10 @@ object Crawl extends QueryModule {
         .filter(col("outcome") === "ok")
         .groupBy(col("final_canon").as("url"))
         .agg(count(lit(1)).cast("bigint").as("n_sources"))
-      val robots = s.createDataFrame(
-        s.sparkContext.parallelize(Seq(Row("site1.com",
-          "User-agent: graftbot\nDisallow: /d/\nAllow: /d/*?a=1\n" +
-            "Allow: /d/*?a=3\n\nUser-agent: otherbot\nDisallow: /\n\n" +
-            "User-agent: *\nDisallow: /\n"))),
-        StructType(Seq(StructField("domain", StringType),
-          StructField("robots_txt", StringType))))
+      val robots = robotsTable(s, Seq(Row("site1.com",
+        "User-agent: graftbot\nDisallow: /d/\nAllow: /d/*?a=1\n" +
+          "Allow: /d/*?a=3\n\nUser-agent: otherbot\nDisallow: /\n\n" +
+          "User-agent: *\nDisallow: /\n")))
       val verdicts = robotsVerdicts(landings.select(col("url")), robots,
         "graftbot")
       val w = org.apache.spark.sql.expressions.Window
@@ -2220,8 +2175,9 @@ object Crawl extends QueryModule {
     // they are read, only (id, md5, count) rows continue. ----
     "crawl_charset_extract" -> ((s, d) => {
       val media = attachCharsetMedia(Tables.documents(s, d))
-      val rdd = media.select(col("doc_id"), col("charset"), col("payload"))
-        .rdd.map { r =>
+      Rows.mapPartitions(
+          media.select(col("doc_id"), col("charset"), col("payload")),
+          charsetStatSchema)(_.map { r =>
           val id = r.getLong(0)
           val label = r.getString(1)
           WarcCodec.decode(r.getAs[Array[Byte]](2)) match {
@@ -2240,8 +2196,7 @@ object Crawl extends QueryModule {
               }
             }
           }
-        }
-      s.createDataFrame(rdd, charsetStatSchema).cache().orderBy(col("doc_id"))
+        }).cache().orderBy(col("doc_id"))
     }),
 
     // ---- the crawl-ingestion CAPSTONE over a realistic `.warc.gz`
@@ -2254,7 +2209,7 @@ object Crawl extends QueryModule {
     // the hash. ----
     "pipe_crawl_e2e" -> ((s, d) => {
       val media = attachWarcGzMedia(Tables.documents(s, d))
-      crawlExtractArrow(media).cache().orderBy(col("doc_id"))
+      crawlExtract(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- the FILE-based crawl capstone: the write→read symmetry proof

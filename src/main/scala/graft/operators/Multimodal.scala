@@ -19,40 +19,21 @@ import org.apache.spark.sql.types._
   *    (the uncompressed interchange format real video toolchains pipe
   *    between stages) — `mm_video_decode` recovers actual per-frame YUV
   *    planes; a compressed codec (H.26x/AV1) would slot in at the same
-  *    Arrow seam as a JNI/library call.
+  *    decode seam as a JNI/library call.
   *
-  * Scale design: payload bytes never shuffle — `decodeFeatures` is a
-  * mapPartitions (narrow) stage, so a 100 TB binary lake is decoded where it
-  * is read; only the small feature vectors flow on to joins/aggregations.
-  * Batch shape: partitions are processed via a buffered iterator in batches
-  * of [[MediaBatch.batchSize]] rows, the same shape a real GPU/codec decode
-  * would want (amortized model/codec setup per batch, bounded memory) — the
-  * Scala `mapPartitions` analog of PySpark's `mapInPandas` batched-UDF
-  * contract, which is where a Python decoder (PIL/torchcodec) would plug in.
+  * Scale design: payload bytes never shuffle. Every decode goes through
+  * one seam, [[decodeEach]]/[[decodeEachFlat]]: a narrow `MapPartitions`
+  * stage inside the query's plan ([[Rows.mapPartitions]]), so a 100 TB
+  * binary lake is decoded where it is read and only the small parsed
+  * rows flow on to joins/aggregations.
   */
 object Multimodal extends QueryModule {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("n_bytes", LongType),
-      StructField("sample_rate", IntegerType))))))
-
-  /** Attach a raw (format-free) binary payload + typed metadata to each
-    * document — the "unknown bytes" class of a real lake, exercised by
-    * the [[ByteStats]] format-agnostic featurizer and as the degrade
-    * input for the typed decoders.
+  /** `(doc_id, payload)`: the shape every fixture builds and every decode
+    * reads.
     */
-  def attachRawMedia(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      col("text").cast("binary").as("payload"),
-      struct(
-        lit("application/octet-stream").as("format"),
-        length(col("text").cast("binary")).cast("bigint").as("n_bytes"),
-        lit(16000).as("sample_rate")).as("meta"))
+  val payloadSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("payload", BinaryType)))
 
   /** PNG-framed payloads: a REAL png byte layout — 8-byte signature, then
     * an IHDR chunk (length, type, 13-byte data, CRC32 over type+data —
@@ -1056,9 +1037,9 @@ object Multimodal extends QueryModule {
     * the same for a 4K frame).
     */
   def attachPngPixelMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"),
-        col("n_chars").cast("bigint").as("n_chars")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"),
+        col("n_chars").cast("bigint").as("n_chars")),
+        payloadSchema)(_.map { r =>
       val id = r.getLong(0); val nChars = r.getLong(1)
       val w = (id % 16 + 1).toInt
       val h = (nChars % 12 + 1).toInt
@@ -1066,9 +1047,7 @@ object Multimodal extends QueryModule {
       val bytes = PngCodec.encode(w, h, colorType,
         (y, x, c) => ((id * 31 + y * 7 + x * 5 + c * 11) % 256).toInt)
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** 18×16 RGB PNGs engineered for perceptual-hash dedup: pixel values
@@ -1086,8 +1065,7 @@ object Multimodal extends QueryModule {
     * under a brightness-only formula vs 0 here at 500 docs).
     */
   def attachDhashMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id")), payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       val k = (id / 10) * 10 + (id % 10) % 8
       val a1 = (k * 13 % 97 + 7).toInt
@@ -1105,9 +1083,7 @@ object Multimodal extends QueryModule {
         if (pert && y == 4 && x == 6) pv
         else (a1 * x * x + a2 * x * y + 13 * y * y + c * 11) % 256)
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   val dhashSchema: StructType = StructType(Seq(
@@ -1159,11 +1135,11 @@ object Multimodal extends QueryModule {
         Row(id, "png", hi, lo)
     }
 
-  /** dHash over the Arrow batch seam: decode + hash where the bytes are
-    * read; only 3-long rows continue.
+  /** dHash: decode + hash where the bytes are read; only 3-long rows
+    * continue.
     */
-  def dhashArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, dhashSchema)(dhashRow)
+  def dhash(media: DataFrame): DataFrame =
+    decodeEach(media, dhashSchema)(dhashRow)
 
   /** Identity collapse over a 64-bit hash frame `(doc_id, hash_hi,
     * hash_lo)`: adds `rep` = the group's min doc_id. Exact duplicates —
@@ -1314,7 +1290,7 @@ object Multimodal extends QueryModule {
     * here each query recomputes it from the payloads.
     */
   private def dhashHashes(s: SparkSession, d: String): DataFrame =
-    dhashArrow(attachDhashMedia(Tables.documents(s, d)))
+    dhash(attachDhashMedia(Tables.documents(s, d)))
       .filter(col("format") === "png")
       .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
 
@@ -1342,7 +1318,10 @@ object Multimodal extends QueryModule {
     // exchange (exchange reuse — see dhashClusterEdges), so the upstream
     // decode runs once without a materialization barrier
     val members = dhashCollapse(hashes)
-    val identityPairs = members.as("a").join(members.as("b"),
+    // shuffle_merge: both sides are the same lake-sized frame, so one
+    // shared exchange feeds both; a broadcast build side (what a small
+    // size estimate picks) would run the decode a second time
+    val identityPairs = members.as("a").join(members.as("b").hint("shuffle_merge"),
         col("a.hash_hi") === col("b.hash_hi") &&
           col("a.hash_lo") === col("b.hash_lo") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1372,8 +1351,7 @@ object Multimodal extends QueryModule {
     * full Huffman → dequant → IDCT chain to reach them.
     */
   def attachJpegMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id")), payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       def lumaCoef(bi: Int): (Int, Int) = {
         val vY = 2 * ((id * 7 + bi * 13) % 50).toInt + 80
@@ -1389,9 +1367,7 @@ object Multimodal extends QueryModule {
           JpegCodec.encode420(lumaCoef, (vCb - 128) / 2, (vCr - 128) / 2)
         }
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   val jpegDecodeSchema: StructType = StructType(Seq(
@@ -1430,21 +1406,11 @@ object Multimodal extends QueryModule {
           ck)
     }
 
-  /** Full baseline-JPEG decode over the Arrow batch seam: Huffman +
-    * dequant + IDCT run where the bytes are read; only per-image stats
-    * rows continue.
+  /** Full baseline-JPEG decode: Huffman + dequant + IDCT run where the
+    * bytes are read; only per-image stats rows continue.
     */
-  def decodeJpegArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, jpegDecodeSchema)(jpegDecodeRow)
-
-  /** Row-path twin of [[decodeJpegArrow]] (parity spec pins equality). */
-  def decodeJpeg(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      jpegDecodeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, jpegDecodeSchema)
-  }
+  def decodeJpeg(media: DataFrame): DataFrame =
+    decodeEach(media, jpegDecodeSchema)(jpegDecodeRow)
 
   val pngDecodeSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1483,21 +1449,12 @@ object Multimodal extends QueryModule {
           if (d.channels == 4) sumA else null, checksum)
     }
 
-  /** Full PNG pixel decode over the Arrow batch seam (same contract as
-    * [[parseHeadersArrow]]): inflate + unfilter happen where the bytes are
+  /** Full PNG pixel decode (same contract as
+    * [[parseHeaders]]): inflate + unfilter happen where the bytes are
     * read; only the per-image stats rows continue.
     */
-  def decodePngArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, pngDecodeSchema)(pngDecodeRow)
-
-  /** Row-path twin of [[decodePngArrow]] (parity spec pins equality). */
-  def decodePng(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      pngDecodeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, pngDecodeSchema)
-  }
+  def decodePng(media: DataFrame): DataFrame =
+    decodeEach(media, pngDecodeSchema)(pngDecodeRow)
 
   val pngResizeSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1520,7 +1477,7 @@ object Multimodal extends QueryModule {
     * values exist ONLY by [[PngCodec.decode]] inflating + unfiltering the
     * bytes and indexing the pixel buffer; a corrupt payload degrades to
     * ZERO rows for that doc (spec'd). At scale this runs inside the same
-    * narrow Arrow-seam stage as the decode — payload bytes never shuffle,
+    * narrow stage as the decode — payload bytes never shuffle,
     * only th·tw thumbnail rows per image continue.
     */
   private def pngResizeRows(tw: Int, th: Int)(id: Long, bytes: Array[Byte]): Seq[Row] =
@@ -1541,20 +1498,9 @@ object Multimodal extends QueryModule {
         }
     }
 
-  /** NN thumbnail resize over the Arrow batch seam (decode + resize fused
-    * where the bytes are read).
-    */
-  def resizePngArrow(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame =
-    arrowFlatParse(media, pngResizeSchema)(pngResizeRows(tw, th))
-
-  /** Row-path twin of [[resizePngArrow]] (parity spec pins equality). */
-  def resizePng(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.flatMap { row =>
-      pngResizeRows(tw, th)(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, pngResizeSchema)
-  }
+  /** NN thumbnail resize (decode + resize fused where the bytes are read). */
+  def resizePng(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame =
+    decodeEachFlat(media, pngResizeSchema)(pngResizeRows(tw, th))
 
   val jpegResizeSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1586,18 +1532,9 @@ object Multimodal extends QueryModule {
         }
     }
 
-  /** JPEG decode + NN resize fused over the Arrow batch seam. */
-  def resizeJpegArrow(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame =
-    arrowFlatParse(media, jpegResizeSchema)(jpegResizeRows(tw, th))
-
-  /** Row-path twin of [[resizeJpegArrow]] (parity spec pins equality). */
-  def resizeJpeg(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.flatMap { row =>
-      jpegResizeRows(tw, th)(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, jpegResizeSchema)
-  }
+  /** JPEG decode + NN resize fused. */
+  def resizeJpeg(media: DataFrame, tw: Int = 2, th: Int = 2): DataFrame =
+    decodeEachFlat(media, jpegResizeSchema)(jpegResizeRows(tw, th))
 
   /** Mixed-modality corpus: one binary column holding heterogeneous
     * payloads — doc_id mod 4 = 0 carries a REAL complete PNG (the
@@ -1672,18 +1609,9 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** Modality routing + decode over the Arrow batch seam. */
-  def routeMixedArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, routeSchema)(routeRow)
-
-  /** Row-path twin of [[routeMixedArrow]] (parity spec pins equality). */
-  def routeMixed(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      routeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, routeSchema)
-  }
+  /** Modality routing + decode. */
+  def routeMixed(media: DataFrame): DataFrame =
+    decodeEach(media, routeSchema)(routeRow)
 
   val wavHeaderSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1754,21 +1682,12 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** PCM sample decode over the Arrow batch seam (same contract as
-    * [[parseHeadersArrow]]): samples are decoded where the bytes are read,
+  /** PCM sample decode (same contract as
+    * [[parseHeaders]]): samples are decoded where the bytes are read,
     * only the per-doc stats rows continue.
     */
-  def decodeWavArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, wavDecodeSchema)(wavDecodeRow)
-
-  /** Row-path twin of [[decodeWavArrow]] (parity spec pins equality). */
-  def decodeWav(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      wavDecodeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, wavDecodeSchema)
-  }
+  def decodeWav(media: DataFrame): DataFrame =
+    decodeEach(media, wavDecodeSchema)(wavDecodeRow)
 
   val wavFeatureSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1823,18 +1742,9 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** PCM feature extraction over the Arrow batch seam. */
-  def wavFeaturesArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, wavFeatureSchema)(wavFeatureRow)
-
-  /** Row-path twin of [[wavFeaturesArrow]] (parity spec pins equality). */
-  def wavFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      wavFeatureRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, wavFeatureSchema)
-  }
+  /** PCM feature extraction. */
+  def wavFeatures(media: DataFrame): DataFrame =
+    decodeEach(media, wavFeatureSchema)(wavFeatureRow)
 
   val wavFingerprintSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1885,11 +1795,11 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** Audio fingerprint over the Arrow batch seam: decode + bin + compare
-    * where the bytes are read; only 2-long rows continue.
+  /** Audio fingerprint: decode + bin + compare where the bytes are read;
+    * only 2-long rows continue.
     */
-  def wavFingerprintArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, wavFingerprintSchema)(wavFingerprintRow)
+  def wavFingerprint(media: DataFrame): DataFrame =
+    decodeEach(media, wavFingerprintSchema)(wavFingerprintRow)
 
   val wavFingerprint60Schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1965,24 +1875,13 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** Widened audio fingerprint over the Arrow batch seam. */
-  def wavFingerprint60Arrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, wavFingerprint60Schema)(wavFingerprint60Row)
+  /** Widened audio fingerprint. */
+  def wavFingerprint60(media: DataFrame): DataFrame =
+    decodeEach(media, wavFingerprint60Schema)(wavFingerprint60Row)
 
-  /** WAV header sniffing over the same Arrow batch seam as
-    * [[parseHeadersArrow]].
-    */
-  def parseWavHeadersArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, wavHeaderSchema)(wavRow)
-
-  /** Row-path twin of [[parseWavHeadersArrow]] (parity spec pins equality). */
-  def parseWavHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      wavRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, wavHeaderSchema)
-  }
+  /** WAV header sniffing, the audio twin of [[parseHeaders]]. */
+  def parseWavHeaders(media: DataFrame): DataFrame =
+    decodeEach(media, wavHeaderSchema)(wavRow)
 
   /** A REAL YUV4MPEG2 (y4m) codec — no video library, just the public
     * y4m stream layout (mjpegtools `yuv4mpeg(5)`): an ASCII stream header
@@ -2149,9 +2048,9 @@ object Multimodal extends QueryModule {
     * 1080p stream).
     */
   def attachY4mMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"),
-        col("n_chars").cast("bigint").as("n_chars")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"),
+        col("n_chars").cast("bigint").as("n_chars")),
+        payloadSchema)(_.map { r =>
       val id = r.getLong(0); val nChars = r.getLong(1)
       val w = (id % 8 + 1).toInt
       val h = (nChars % 6 + 1).toInt
@@ -2159,9 +2058,7 @@ object Multimodal extends QueryModule {
       val bytes = Y4mCodec.encode(w, h, nf,
         (f, p, y, x) => ((id * 31 + f * 13 + p * 17 + y * 7 + x * 5) % 256).toInt)
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** Colourspace-MIXED y4m corpus: even doc_ids carry the C444 clip of
@@ -2173,9 +2070,9 @@ object Multimodal extends QueryModule {
     * fixture — the shape real camera/codec output actually has.
     */
   def attachY4mMixedMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"),
-        col("n_chars").cast("bigint").as("n_chars")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id"),
+        col("n_chars").cast("bigint").as("n_chars")),
+        payloadSchema)(_.map { r =>
       val id = r.getLong(0); val nChars = r.getLong(1)
       val nf = (nChars % 3 + 2).toInt
       def sample(f: Int, p: Int, y: Int, x: Int): Int =
@@ -2187,9 +2084,7 @@ object Multimodal extends QueryModule {
           Y4mCodec.encode((2 * (id % 4 + 1)).toInt, (2 * (nChars % 3 + 1)).toInt,
             nf, sample, "420jpeg")
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** Small REAL 18×16 C444 y4m clips (2 frames) whose LUMA values are
@@ -2204,8 +2099,7 @@ object Multimodal extends QueryModule {
     * right to even locate the luma.
     */
   def attachVideoDupMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id")), payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       val k = (id / 10) * 10 + (id % 10) % 8
       val a1 = (k * 13 % 97 + 7).toInt
@@ -2219,9 +2113,7 @@ object Multimodal extends QueryModule {
           else (luma0(y, x) + 37 * f) % 256
         } else (id + p * 31 + y + x).toInt % 256)
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** Keyframe dHash over REAL decoded y4m luma: frame 0's Y plane is
@@ -2262,18 +2154,18 @@ object Multimodal extends QueryModule {
         Row(id, "y4m", hi, lo)
     }
 
-  /** Keyframe dHash over the Arrow batch seam (decode + hash where the
-    * bytes are read; only 3-long rows continue).
+  /** Keyframe dHash (decode + hash where the bytes are read; only 3-long
+    * rows continue).
     */
-  def videoDhashArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, dhashSchema)(videoDhashRow)
+  def videoDhash(media: DataFrame): DataFrame =
+    decodeEach(media, dhashSchema)(videoDhashRow)
 
   /** The video fixture's keyframe-hash frame (persisted-signature scan
     * position at 100 TB, recomputed from payloads here — the
     * [[dhashHashes]] convention).
     */
   private def videoDhashHashes(s: SparkSession, d: String): DataFrame =
-    videoDhashArrow(attachVideoDupMedia(Tables.documents(s, d)))
+    videoDhash(attachVideoDupMedia(Tables.documents(s, d)))
       .filter(col("format") === "y4m")
       .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
 
@@ -2302,8 +2194,7 @@ object Multimodal extends QueryModule {
     * 2 — `MediaDedupSpec` pins the strict inequality.
     */
   def attachPerceptualMixMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id")).rdd.map { r =>
+    Rows.mapPartitions(docs.select(col("doc_id")), payloadSchema)(_.map { r =>
       val id = r.getLong(0)
       val c = id / 3
       val dup = c % 8 == 7
@@ -2343,9 +2234,7 @@ object Multimodal extends QueryModule {
             else (k + pl * 31 + y + x).toInt % 256)
       }
       Row(id, bytes)
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType))))
+    })
   }
 
   /** Byte-level RIFF/WAVE builder (16-bit PCM) for fixtures constructed
@@ -2397,9 +2286,9 @@ object Multimodal extends QueryModule {
     } else fail("unknown-media")
   }
 
-  /** Signature router over the Arrow batch seam. */
-  def mediaSigArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, mediaSigSchema)(mediaSigRow)
+  /** Signature router. */
+  def mediaSig(media: DataFrame): DataFrame =
+    decodeEach(media, mediaSigSchema)(mediaSigRow)
 
   val videoFpSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -2436,9 +2325,9 @@ object Multimodal extends QueryModule {
         Row(id, "y4m", v.nFrames.toLong, fp)
     }
 
-  /** Temporal fingerprint over the Arrow batch seam. */
-  def videoFingerprintArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, videoFpSchema)(videoFingerprintRow)
+  /** Temporal fingerprint. */
+  def videoFingerprint(media: DataFrame): DataFrame =
+    decodeEach(media, videoFpSchema)(videoFingerprintRow)
 
   val videoMetaSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -2470,18 +2359,9 @@ object Multimodal extends QueryModule {
           v.frameLen.toLong, bytes.length.toLong)
     }
 
-  /** y4m metadata parse over the Arrow batch seam. */
-  def parseY4mMetaArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, videoMetaSchema)(y4mMetaRow)
-
-  /** Row-path twin of [[parseY4mMetaArrow]] (parity spec pins equality). */
-  def parseY4mMeta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      y4mMetaRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, videoMetaSchema)
-  }
+  /** y4m metadata parse. */
+  def parseY4mMeta(media: DataFrame): DataFrame =
+    decodeEach(media, videoMetaSchema)(y4mMetaRow)
 
   val videoDecodeSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -2505,124 +2385,58 @@ object Multimodal extends QueryModule {
     * static-clip signal a video-curation pipeline filters on). Corrupt
     * payloads degrade to the typed class with stats withheld.
     */
-  /** Exact plane statistics over a decoded video — THE single
-    * accumulation shared by the stats row and the Arrow featurizer, so
-    * the two paths can never drift (a chroma-offset fix lands in both).
-    */
-  private case class PlaneStats(sumY: Long, sumU: Long, sumV: Long,
-                                lumaChecksum: Long, delta: Long)
-
-  private def planeStats(v: Y4mCodec.DecodedVideo): PlaneStats = {
-    val luma = v.lumaLen
-    val cLen = v.chromaW * v.chromaH
-    var sumY = 0L; var sumU = 0L; var sumV = 0L
-    var checksum = 0L; var delta = 0L
-    var f = 0
-    while (f < v.nFrames) {
-      val fr = v.frames(f)
-      var i = 0
-      while (i < luma) {
-        val pv = fr(i) & 0xff
-        sumY += pv
-        checksum += pv.toLong * (f.toLong * luma + i + 1)
-        i += 1
-      }
-      i = 0
-      while (i < cLen) {
-        sumU += fr(luma + i) & 0xff
-        sumV += fr(luma + cLen + i) & 0xff
-        i += 1
-      }
-      if (f > 0) {
-        val prev = v.frames(f - 1)
-        i = 0
-        while (i < luma) {
-          delta += math.abs((fr(i) & 0xff) - (prev(i) & 0xff)).toLong
-          i += 1
-        }
-      }
-      f += 1
-    }
-    PlaneStats(sumY, sumU, sumV, checksum, delta)
-  }
-
   private def y4mDecodeRow(id: Long, bytes: Array[Byte]): Row =
     Y4mCodec.decode(bytes) match {
       case Left(_) =>
         Row(id, "y4m-corrupt", null, null, null, null, null, null, null, null, null)
       case Right(v) =>
-        val st = planeStats(v)
+        val luma = v.lumaLen
+        val cLen = v.chromaW * v.chromaH
+        var sumY = 0L; var sumU = 0L; var sumV = 0L
+        var checksum = 0L; var delta = 0L
+        var f = 0
+        while (f < v.nFrames) {
+          val fr = v.frames(f)
+          var i = 0
+          while (i < luma) {
+            val pv = fr(i) & 0xff
+            sumY += pv
+            checksum += pv.toLong * (f.toLong * luma + i + 1)
+            i += 1
+          }
+          i = 0
+          while (i < cLen) {
+            sumU += fr(luma + i) & 0xff
+            sumV += fr(luma + cLen + i) & 0xff
+            i += 1
+          }
+          if (f > 0) {
+            val prev = v.frames(f - 1)
+            i = 0
+            while (i < luma) {
+              delta += math.abs((fr(i) & 0xff) - (prev(i) & 0xff)).toLong
+              i += 1
+            }
+          }
+          f += 1
+        }
         Row(id, "y4m", v.width.toLong, v.height.toLong, v.nFrames.toLong,
-          v.width.toLong * v.height * v.nFrames, st.sumY, st.sumU, st.sumV,
-          st.lumaChecksum, st.delta)
+          v.width.toLong * v.height * v.nFrames, sumY, sumU, sumV,
+          checksum, delta)
     }
 
-  /** Full y4m frame decode over the Arrow batch seam (same contract as
-    * [[decodePngArrow]]): container parse + plane slicing happen where the
+  /** Full y4m frame decode (same contract as
+    * [[decodePng]]): container parse + plane slicing happen where the
     * bytes are read; only the per-video stats rows continue.
     */
-  def decodeY4mArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, videoDecodeSchema)(y4mDecodeRow)
+  def decodeY4m(media: DataFrame): DataFrame =
+    decodeEach(media, videoDecodeSchema)(y4mDecodeRow)
 
-  /** Row-path twin of [[decodeY4mArrow]] (parity spec pins equality). */
-  def decodeY4m(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      y4mDecodeRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, videoDecodeSchema)
-  }
-
-  /** REAL video featurizer over the Arrow contract — the video twin of
-    * [[PngArrowDecoder]]: each payload is decoded with [[Y4mCodec]] and
-    * featurized as `[width, height, n_frames, mean_y, mean_u, mean_v,
-    * delta_norm, fps]` (plane means normalized to [0, 1]; delta_norm =
-    * frame-delta energy over its 255·(n−1)·w·h maximum). A payload that
-    * fails to decode yields the all-zero vector — the typed-degradation
-    * contract.
+  /** PNG header sniffing ([[MediaHeader]]): the payload is parsed where it
+    * is read; only the tiny parsed fields continue.
     */
-  object Y4mArrowDecoder extends ArrowBatchDecoder {
-    override def decode(root: org.apache.arrow.vector.VectorSchemaRoot): Seq[Array[Double]] = {
-      val payload = root.getVector("payload")
-        .asInstanceOf[org.apache.arrow.vector.VarBinaryVector]
-      (0 until root.getRowCount).map { i =>
-        Y4mCodec.decode(payload.get(i)) match {
-          case Left(_) => new Array[Double](MediaBatch.featureDim)
-          case Right(v) if v.nFrames == 0 => new Array[Double](MediaBatch.featureDim)
-          case Right(v) =>
-            val st = planeStats(v)
-            val luma = v.lumaLen; val cLen = v.chromaW * v.chromaH
-            val lumaTotal = luma.toDouble * v.nFrames
-            val chromaTotal = cLen.toDouble * v.nFrames
-            Array(v.width.toDouble, v.height.toDouble, v.nFrames.toDouble,
-              st.sumY / (255.0 * lumaTotal),
-              if (chromaTotal == 0) 0.0 else st.sumU / (255.0 * chromaTotal),
-              if (chromaTotal == 0) 0.0 else st.sumV / (255.0 * chromaTotal),
-              if (v.nFrames < 2) 0.0
-              else st.delta / (255.0 * (v.nFrames - 1) * luma),
-              v.fpsNum.toDouble / v.fpsDen)
-        }
-      }
-    }
-  }
-
-  /** Header sniffing over the SAME Arrow-columnar batch seam as
-    * [[decodeFeaturesArrow]]: payload bytes are marshalled into a
-    * `VarBinaryVector` per batch and parsed there — the shape a native
-    * (JNI/GPU) header reader consumes — still a narrow stage; the payload
-    * bytes never shuffle, only the tiny parsed fields continue.
-    */
-  def parseHeadersArrow(media: DataFrame): DataFrame =
-    arrowHeaderParse(media, headerSchema)(pngRow)
-
-  /** Row-path twin of [[parseHeadersArrow]] (parity spec pins equality). */
-  def parseHeaders(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.map { row =>
-      pngRow(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, headerSchema)
-  }
+  def parseHeaders(media: DataFrame): DataFrame =
+    decodeEach(media, headerSchema)(pngRow)
 
   private def pngRow(id: Long, bytes: Array[Byte]): Row = {
     val h = MediaHeader.sniff(bytes)
@@ -2630,229 +2444,25 @@ object Multimodal extends QueryModule {
       h.bitDepth.map(Int.box).orNull, h.colorType.map(Int.box).orNull, bytes.length.toLong)
   }
 
-  /** Shared Arrow marshalling for header parsers: rows become one
-    * (doc_id BigInt, payload VarBinary) `VectorSchemaRoot` per batch of
-    * [[MediaBatch.batchSize]], the per-row `parse` reads straight off the
-    * vectors — the shape a native (JNI/GPU) header reader consumes. Still
-    * a narrow stage; payload bytes never shuffle, only parsed fields
-    * continue.
+  /** The decode seam every modality shares: `parse` turns each
+    * `(doc_id, payload)` of `media` into one row of `schema`, inside the
+    * query's plan ([[Rows.mapPartitions]]). A narrow stage: payload bytes
+    * never shuffle, only the parsed fields continue.
     */
-  private[operators] def arrowHeaderParse(
+  private[operators] def decodeEach(
       media: DataFrame, schema: StructType)(
       parse: (Long, Array[Byte]) => Row): DataFrame =
-    arrowFlatParse(media, schema)((id, bytes) => Seq(parse(id, bytes)))
+    decodeEachFlat(media, schema)((id, bytes) => Seq(parse(id, bytes)))
 
-  /** Generalization of [[arrowHeaderParse]] for parsers that emit a
-    * VARIABLE number of rows per payload (e.g. one row per resized pixel):
-    * same per-batch `VectorSchemaRoot` marshalling, same narrow-stage
-    * contract, `parse` returns the (eagerly materialized) rows for one
-    * payload — corrupt payloads may legitimately return zero rows.
+  /** [[decodeEach]] for parsers that emit a VARIABLE number of rows per
+    * payload (e.g. one row per resized pixel); corrupt payloads may
+    * legitimately return zero rows.
     */
-  private[operators] def arrowFlatParse(
+  private[operators] def decodeEachFlat(
       media: DataFrame, schema: StructType)(
-      parse: (Long, Array[Byte]) => Seq[Row]): DataFrame = {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector.{BigIntVector, VarBinaryVector, VectorSchemaRoot}
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.mapPartitions { it =>
-      it.grouped(MediaBatch.batchSize).flatMap { batch =>
-        val alloc = new RootAllocator(Long.MaxValue)
-        var docId: BigIntVector = null
-        var payload: VarBinaryVector = null
-        var root: VectorSchemaRoot = null
-        try {
-          docId = new BigIntVector("doc_id", alloc)
-          payload = new VarBinaryVector("payload", alloc)
-          docId.allocateNew(batch.size)
-          payload.allocateNew()
-          batch.zipWithIndex.foreach { case (row, i) =>
-            docId.setSafe(i, row.getLong(0))
-            payload.setSafe(i, row.getAs[Array[Byte]]("payload"))
-          }
-          docId.setValueCount(batch.size)
-          payload.setValueCount(batch.size)
-          root = VectorSchemaRoot.of(docId, payload)
-          root.setRowCount(batch.size)
-          // eager: rows must be materialized before the finally closes root
-          (0 until root.getRowCount).flatMap { i =>
-            parse(docId.get(i), payload.get(i))
-          }
-        } finally {
-          if (root != null) root.close()
-          else { if (docId != null) docId.close(); if (payload != null) payload.close() }
-          alloc.close()
-        }
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Decode batching constants shared by every modality path. */
-  object MediaBatch {
-    /** Rows per decode batch — amortizes codec/Arrow setup, bounds memory. */
-    val batchSize = 64
-    /** Width of the fixed-dim feature vectors every featurizer emits. */
-    val featureDim = 8
-  }
-
-  /** Format-AGNOSTIC byte-level featurizer — a real statistic, not a
-    * decoder stand-in: feature k = mean of payload bytes at positions
-    * ≡ k (mod featureDim), normalized to [0, 1]. Position-stratified
-    * byte means are the cheap triage signal for unknown binaries:
-    * fixed-stride record layouts and interleaved sample formats show up
-    * as divergence BETWEEN the strata, while compressed/encrypted bytes
-    * flatten all strata toward 0.5 — useful for bucketing a lake's
-    * unclassified tail before paying for real decode attempts. Typed
-    * modality decodes live in [[PngCodec]]/[[wavDecodeRow]]/[[Y4mCodec]].
-    */
-  object ByteStats {
-    def featureBatch(payloads: Seq[Array[Byte]]): Seq[Array[Double]] =
-      payloads.map { bytes =>
-        val dim = MediaBatch.featureDim
-        val sums = new Array[Double](dim)
-        val counts = new Array[Long](dim)
-        var i = 0
-        while (i < bytes.length) {
-          val k = i % dim
-          sums(k) += (bytes(i) & 0xff) / 255.0
-          counts(k) += 1
-          i += 1
-        }
-        Array.tabulate(dim)(k => if (counts(k) == 0) 0.0 else sums(k) / counts(k))
-      }
-  }
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("features", ArrayType(DoubleType)),
-    StructField("n_bytes", LongType)))
-
-  /** Per-partition batched decode: the Spark-side contract a real
-    * image/audio featurizer plugs into (mapPartitions, batches of
-    * [[MediaBatch.batchSize]], bounded memory, no shuffle).
-    */
-  def decodeFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.mapPartitions { it =>
-      it.grouped(MediaBatch.batchSize).flatMap { batch =>
-        val feats = ByteStats.featureBatch(batch.map(_.getAs[Array[Byte]]("payload")))
-        batch.zip(feats).map { case (row, f) =>
-          val payload = row.getAs[Array[Byte]]("payload")
-          Row(row.getLong(0), f.toSeq, payload.length.toLong)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, featureSchema)
-  }
-
-  /** The Arrow-columnar decode seam: a decoder consumes one Arrow
-    * `VectorSchemaRoot` per batch — columns `doc_id` (BigInt) and `payload`
-    * (VarBinary), `root.getRowCount` rows — and returns one feature array
-    * per row. Arrow buffers are the interchange format GPU decode stacks
-    * (DALI, torchcodec via JNI, CUDA IPC) and Python workers consume
-    * zero-copy, so this interface IS the production plug point; the fake
-    * below is the only stubbed part.
-    */
-  trait ArrowBatchDecoder extends Serializable {
-    def decode(root: org.apache.arrow.vector.VectorSchemaRoot): Seq[Array[Double]]
-  }
-
-  /** [[ByteStats]] over the Arrow contract: reads each payload from the
-    * VarBinary vector and computes the same position-stratified byte means
-    * — so the Arrow path is parity-checkable against the row path
-    * (OperatorSmokeSpec).
-    */
-  object ByteStatsArrowDecoder extends ArrowBatchDecoder {
-    override def decode(root: org.apache.arrow.vector.VectorSchemaRoot): Seq[Array[Double]] = {
-      val payload = root.getVector("payload")
-        .asInstanceOf[org.apache.arrow.vector.VarBinaryVector]
-      ByteStats.featureBatch((0 until root.getRowCount).map(payload.get))
-    }
-  }
-
-  /** REAL image featurizer over the Arrow contract: each payload is decoded
-    * with [[PngCodec]] (inflate + unfilter — actual pixels, not a hash of
-    * the compressed bytes) and featurized as
-    * `[width, height, channels, mean_r, mean_g, mean_b, mean_a, mean_all]`
-    * (means normalized to [0, 1]; mean_a = 0 for RGB). A payload that fails
-    * to decode yields the all-zero vector — the typed-degradation contract,
-    * matching `png-corrupt` on the stats path. [[Y4mArrowDecoder]] is the
-    * video twin; [[ByteStatsArrowDecoder]] covers format-free bytes.
-    */
-  object PngArrowDecoder extends ArrowBatchDecoder {
-    override def decode(root: org.apache.arrow.vector.VectorSchemaRoot): Seq[Array[Double]] = {
-      val payload = root.getVector("payload")
-        .asInstanceOf[org.apache.arrow.vector.VarBinaryVector]
-      (0 until root.getRowCount).map { i =>
-        PngCodec.decode(payload.get(i)) match {
-          case Left(_) => new Array[Double](MediaBatch.featureDim)
-          case Right(d) =>
-            val sums = new Array[Double](4)
-            var j = 0
-            while (j < d.pixels.length) {
-              sums(j % d.channels) += (d.pixels(j) & 0xff) / 255.0
-              j += 1
-            }
-            val nPix = (d.width.toDouble * d.height).max(1.0)
-            val meanAll = sums.sum / (nPix * d.channels)
-            Array(d.width.toDouble, d.height.toDouble, d.channels.toDouble,
-              sums(0) / nPix, sums(1) / nPix, sums(2) / nPix,
-              if (d.channels == 4) sums(3) / nPix else 0.0, meanAll)
-        }
-      }
-    }
-  }
-
-  /** [[decodeFeatures]] over the Arrow-columnar batch contract: rows are
-    * marshalled into Arrow `VectorSchemaRoot` batches of
-    * [[MediaBatch.batchSize]] inside `mapPartitions` (still narrow — the
-    * payload bytes never shuffle), the decoder consumes the columnar batch,
-    * and the feature vectors come back as rows. Output is identical to the
-    * row-based path (OperatorSmokeSpec pins it); the difference is the seam:
-    * a real featurizer gets contiguous Arrow buffers instead of per-row JVM
-    * objects.
-    */
-  def decodeFeaturesArrow(
-      media: DataFrame,
-      decoder: ArrowBatchDecoder = ByteStatsArrowDecoder): DataFrame = {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector.{BigIntVector, VarBinaryVector, VectorSchemaRoot}
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.mapPartitions { it =>
-      it.grouped(MediaBatch.batchSize).flatMap { batch =>
-        val alloc = new RootAllocator(Long.MaxValue)
-        // vectors are closed via `root` on the happy path; if anything
-        // throws BEFORE the root exists they must be closed directly, or
-        // alloc.close() throws "memory leaked" and masks the real error
-        var docId: BigIntVector = null
-        var payload: VarBinaryVector = null
-        var root: VectorSchemaRoot = null
-        try {
-          docId = new BigIntVector("doc_id", alloc)
-          payload = new VarBinaryVector("payload", alloc)
-          docId.allocateNew(batch.size)
-          payload.allocateNew()
-          batch.zipWithIndex.foreach { case (row, i) =>
-            docId.setSafe(i, row.getLong(0))
-            payload.setSafe(i, row.getAs[Array[Byte]]("payload"))
-          }
-          docId.setValueCount(batch.size)
-          payload.setValueCount(batch.size)
-          root = VectorSchemaRoot.of(docId, payload)
-          root.setRowCount(batch.size)
-          val feats = decoder.decode(root)
-          batch.indices.map { i =>
-            Row(docId.get(i), feats(i).toSeq, payload.get(i).length.toLong)
-          }
-        } finally {
-          if (root != null) root.close()
-          else { if (docId != null) docId.close(); if (payload != null) payload.close() }
-          alloc.close()
-        }
-      }
-    }
-    spark.createDataFrame(rdd, featureSchema)
-  }
+      parse: (Long, Array[Byte]) => Seq[Row]): DataFrame =
+    Rows.mapPartitions(media.select(col("doc_id"), col("payload")), schema)(
+      _.flatMap(r => parse(r.getLong(0), r.getAs[Array[Byte]](1))))
 
   val frameSampleSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -2890,20 +2500,11 @@ object Multimodal extends QueryModule {
         }
     }
 
-  /** Evenly spaced frame sampling over the Arrow batch seam (decode +
-    * sample fused where the bytes are read).
+  /** Evenly spaced frame sampling (decode + sample fused where the bytes
+    * are read).
     */
-  def frameSampleArrow(media: DataFrame, maxFrames: Int = 2): DataFrame =
-    arrowFlatParse(media, frameSampleSchema)(frameSampleRows(maxFrames))
-
-  /** Row-path twin of [[frameSampleArrow]] (parity spec pins equality). */
-  def frameSample(media: DataFrame, maxFrames: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id"), col("payload")).rdd.flatMap { row =>
-      frameSampleRows(maxFrames)(row.getLong(0), row.getAs[Array[Byte]]("payload"))
-    }
-    spark.createDataFrame(rdd, frameSampleSchema)
-  }
+  def frameSample(media: DataFrame, maxFrames: Int = 2): DataFrame =
+    decodeEachFlat(media, frameSampleSchema)(frameSampleRows(maxFrames))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- REAL frame sampling on REAL decoded frames: each doc's y4m clip
@@ -2914,7 +2515,7 @@ object Multimodal extends QueryModule {
     // never sees the bytes. ----
     "mm_frame_sample" -> ((s, d) => {
       val media = attachY4mMedia(Tables.documents(s, d))
-      frameSampleArrow(media, maxFrames = 2)
+      frameSample(media, maxFrames = 2)
         .cache().orderBy(col("doc_id"), col("slot"))
     }),
     // ---- FULL video-frame decode, the video twin of mm_png_decode: the
@@ -2922,7 +2523,7 @@ object Multimodal extends QueryModule {
     // corpus ([[attachY4mMixedMedia]] — C444 even docs, real 4:2:0 odd
     // docs) and every value below except doc_id exists on the Spark side
     // ONLY because [[Y4mCodec.decode]] genuinely parses the container and
-    // slices the planar frames inside the Arrow batch seam — including
+    // slices the planar frames inside the decode pass — including
     // the quarter-size chroma planes, whose sums the oracle replays at
     // CHROMA coordinates. The oracle replays the generative sample
     // formula per (frame, plane, y, x) in SQL — it never sees the
@@ -2931,7 +2532,7 @@ object Multimodal extends QueryModule {
     // the scene-change/static-clip curation signal. ----
     "mm_video_decode" -> ((s, d) => {
       val media = attachY4mMixedMedia(Tables.documents(s, d))
-      decodeY4mArrow(media).cache().orderBy(col("doc_id"))
+      decodeY4m(media).cache().orderBy(col("doc_id"))
     }),
     // ---- container metadata over a colourspace-MIXED corpus (C444 even
     // docs, real 4:2:0 odd docs): width/height/fps come only from the
@@ -2942,18 +2543,18 @@ object Multimodal extends QueryModule {
     // must account for every byte), not just a spec fixture. ----
     "mm_video_meta" -> ((s, d) => {
       val media = attachY4mMixedMedia(Tables.documents(s, d))
-      parseY4mMetaArrow(media).cache().orderBy(col("doc_id"))
+      parseY4mMeta(media).cache().orderBy(col("doc_id"))
     }),
     // binary-column metadata surface: REAL byte-level header decode. The
     // payload is a PNG-framed binary ([[attachPngMedia]]); the values below
     // exist on the Spark side ONLY via [[MediaHeader.sniff]] reading the
-    // signature + IHDR (incl. CRC32 verification) inside the Arrow batch
-    // seam, while the oracle predicts the same fields independently from
+    // signature + IHDR (incl. CRC32 verification) inside the decode
+    // pass, while the oracle predicts the same fields independently from
     // (doc_id, n_chars). Narrow stage end to end: payload bytes never
     // shuffle, only the parsed fields reach the final sort.
     "mm_binary_meta" -> ((s, d) => {
       val media = attachPngMedia(Tables.documents(s, d))
-      parseHeadersArrow(media)
+      parseHeaders(media)
         .select(col("doc_id"), col("format"),
           col("width").cast("bigint").as("width"),
           col("height").cast("bigint").as("height"),
@@ -2967,11 +2568,11 @@ object Multimodal extends QueryModule {
     // ([[attachWavMedia]]); channels/sample-rate/bits/data-length exist on
     // the Spark side ONLY via [[WavHeader.sniff]] parsing the RIFF frame +
     // fmt chunk (incl. the byteRate/blockAlign consistency check) inside
-    // the Arrow batch seam, while the oracle predicts the same fields
+    // the decode pass, while the oracle predicts the same fields
     // independently from (doc_id, n_chars). ----
     "mm_wav_meta" -> ((s, d) => {
       val media = attachWavMedia(Tables.documents(s, d))
-      parseWavHeadersArrow(media)
+      parseWavHeaders(media)
         .select(col("doc_id"), col("format"),
           col("channels").cast("bigint").as("channels"),
           col("sample_rate").cast("bigint").as("sample_rate"),
@@ -2985,14 +2586,14 @@ object Multimodal extends QueryModule {
     // scanline filters in rotation, per-chunk CRCs) and every value below
     // except doc_id exists on the Spark side ONLY because
     // [[PngCodec.decode]] genuinely inflates and unfilters the bytes
-    // inside the Arrow batch seam. The oracle replays the generative pixel
+    // inside the decode pass. The oracle replays the generative pixel
     // formula per (y, x, channel) in SQL — it never sees the bytes — so
     // any filter/inflate bug breaks the hash. Narrow stage end to end:
     // compressed bytes are decoded where read, only per-image stats rows
     // continue to the sort. ----
     "mm_png_decode" -> ((s, d) => {
       val media = attachPngPixelMedia(Tables.documents(s, d))
-      decodePngArrow(media).cache().orderBy(col("doc_id"))
+      decodePng(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- FULL baseline-JPEG decode, the compressed-image rung of the
@@ -3002,7 +2603,7 @@ object Multimodal extends QueryModule {
     // interleaved 4:2:0 MCUs on odd docs) and every value below except
     // doc_id exists on the Spark side ONLY because [[JpegCodec.decode]]
     // genuinely Huffman-decodes, dequantizes, and IDCTs the blocks
-    // inside the Arrow batch seam — chroma at native QUARTER resolution.
+    // inside the decode pass — chroma at native QUARTER resolution.
     // The fixture's coefficients make the lossy pipeline bit-exact
     // (per-block constants + one frequency-4 AC with a closed-form ±
     // pattern), so the oracle replays every luma pixel and both chroma
@@ -3010,31 +2611,31 @@ object Multimodal extends QueryModule {
     // any Huffman/dequant/IDCT/sampling bug breaks the hash. ----
     "mm_jpeg_decode" -> ((s, d) => {
       val media = attachJpegMedia(Tables.documents(s, d))
-      decodeJpegArrow(media).cache().orderBy(col("doc_id"))
+      decodeJpeg(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- FULL PCM decode, the audio twin of mm_png_decode: the payload
     // is a real RIFF/WAVE binary whose data chunk carries the document's
     // text bytes as 16-bit LE samples; per-channel sums / energy / peak
     // exist on the Spark side ONLY via [[wavDecodeRow]] decoding and
-    // de-interleaving the samples inside the Arrow batch seam, while the
+    // de-interleaving the samples inside the decode pass, while the
     // oracle recomputes them from the text's byte values (lo + 256·hi,
     // signed) — it never sees the framed bytes. ----
     "mm_wav_decode" -> ((s, d) => {
       val media = attachWavMedia(Tables.documents(s, d))
-      decodeWavArrow(media).cache().orderBy(col("doc_id"))
+      decodeWav(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- REAL resize on REAL pixels: each doc's PNG is decoded
     // (inflate + unfilter) and nearest-neighbor-resampled to a 2×2
-    // thumbnail inside the Arrow batch seam; the emitted channel values
+    // thumbnail inside the decode pass; the emitted channel values
     // exist ONLY by indexing the decoded pixel buffer at the NN source
     // coordinates, while the oracle replays the generator formula at the
     // SAME coordinates in SQL — it never sees the bytes. Completes the
     // decode / feature-extract / resize / frame-sample multimodal set. ----
     "mm_png_resize" -> ((s, d) => {
       val media = attachPngPixelMedia(Tables.documents(s, d))
-      resizePngArrow(media).cache().orderBy(col("doc_id"), col("ty"), col("tx"))
+      resizePng(media).cache().orderBy(col("doc_id"), col("ty"), col("tx"))
     }),
 
     // ---- the JPEG twin of mm_png_resize: decode + NN-normalize fused in
@@ -3045,7 +2646,7 @@ object Multimodal extends QueryModule {
     // and IDCT to index any of them. ----
     "mm_jpeg_resize" -> ((s, d) => {
       val media = attachJpegMedia(Tables.documents(s, d))
-      resizeJpegArrow(media).cache().orderBy(col("doc_id"), col("ty"), col("tx"))
+      resizeJpeg(media).cache().orderBy(col("doc_id"), col("ty"), col("tx"))
     }),
 
     // ---- per-channel PCM features on REAL decoded samples: zero-crossing
@@ -3054,7 +2655,7 @@ object Multimodal extends QueryModule {
     // are read. Oracle recomputes both from the text's byte stream. ----
     "mm_wav_features" -> ((s, d) => {
       val media = attachWavMedia(Tables.documents(s, d))
-      wavFeaturesArrow(media).cache().orderBy(col("doc_id"))
+      wavFeatures(media).cache().orderBy(col("doc_id"))
     }),
 
     // ---- the multimodal capstone: ONE binary column, heterogeneous REAL
@@ -3100,7 +2701,7 @@ object Multimodal extends QueryModule {
     // mm_wav_fingerprint idiom) and replays the delta-sign packing. ----
     "mm_video_fingerprint" -> ((s, d) => {
       val media = attachY4mMedia(Tables.documents(s, d))
-      videoFingerprintArrow(media)
+      videoFingerprint(media)
         .filter(col("format") === "y4m")
         .select(col("doc_id"), col("n_frames"), col("fingerprint"))
         .cache().orderBy(col("doc_id"))
@@ -3122,11 +2723,11 @@ object Multimodal extends QueryModule {
     // the lake. Work scales with the BATCH at any corpus size. ----
     "mm_dhash_incr" -> ((s, d) => {
       val corpus = Artifacts.table(s, d, "documents", "dhash_sigs")(
-        dhashArrow(attachDhashMedia(
+        dhash(attachDhashMedia(
             Tables.documents(s, d).filter(col("doc_id") % 10 <= 7)))
           .filter(col("format") === "png")
           .select(col("doc_id"), col("hash_hi"), col("hash_lo")))
-      val batch = dhashArrow(attachDhashMedia(
+      val batch = dhash(attachDhashMedia(
           Tables.documents(s, d).filter(col("doc_id") % 10 >= 8)))
         .filter(col("format") === "png")
         .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
@@ -3161,7 +2762,7 @@ object Multimodal extends QueryModule {
     // sees the framed bytes. ----
     "mm_wav_fingerprint" -> ((s, d) => {
       val media = attachWavMedia(Tables.documents(s, d))
-      wavFingerprintArrow(media)
+      wavFingerprint(media)
         .filter(col("format") === "wav")
         .select(col("doc_id"), col("n_frames"), col("fingerprint"))
         .cache().orderBy(col("doc_id"))
@@ -3175,7 +2776,7 @@ object Multimodal extends QueryModule {
     // never seeing the framed bytes. ----
     "mm_wav_fingerprint60" -> ((s, d) => {
       val media = attachWavMedia(Tables.documents(s, d))
-      wavFingerprint60Arrow(media)
+      wavFingerprint60(media)
         .filter(col("format") === "wav")
         .select(col("doc_id"), col("n_frames"), col("sig_hi"), col("sig_lo"))
         .cache().orderBy(col("doc_id"))
@@ -3190,8 +2791,8 @@ object Multimodal extends QueryModule {
     // that the 15-bit code IS chunk 0 of the 60-bit one (same e0
     // comparisons), so one replay covers both widths. ----
     "mm_wav_overmerge" -> ((s, d) => {
-      // localCheckpoint: BOTH width decoders read this RDD-backed
-      // fixture — uncheckpointed, the payload generation would run twice
+      // localCheckpoint: BOTH width decoders read this fixture —
+      // uncheckpointed, the payload generation would run twice
       val media = attachPerceptualMixMedia(Tables.documents(s, d))
         .filter(col("doc_id") % 3 === 1)
         .localCheckpoint()
@@ -3199,11 +2800,11 @@ object Multimodal extends QueryModule {
         .filter(col("doc_id") % 3 === 1 &&
           expr("doc_id DIV 3") % 8 === 7 && expr("doc_id DIV 3") >= 7)
         .agg(count(lit(1)).as("n_planted"))
-      val w15 = wavFingerprintArrow(media).filter(col("format") === "wav")
+      val w15 = wavFingerprint(media).filter(col("format") === "wav")
         .agg(count(lit(1)).as("n_items"),
           countDistinct(col("fingerprint")).as("n_distinct"))
         .withColumn("width_bits", lit(15L))
-      val w60 = wavFingerprint60Arrow(media).filter(col("format") === "wav")
+      val w60 = wavFingerprint60(media).filter(col("format") === "wav")
         .agg(count(lit(1)).as("n_items"),
           countDistinct(col("sig_hi"), col("sig_lo")).as("n_distinct"))
         .withColumn("width_bits", lit(60L))
@@ -3220,7 +2821,7 @@ object Multimodal extends QueryModule {
     }),
 
     // ---- CROSS-MODALITY perceptual dedup capstone: the signature
-    // router ([[mediaSigArrow]]) decodes each payload by its magic and
+    // router ([[mediaSig]]) decodes each payload by its magic and
     // emits the modality's 64-bit perceptual signature; the report
     // counts per-modality items, distinct signatures, and redundant
     // copies. Every planted dup is byte-DIFFERENT (wider canvas / 2×
@@ -3232,7 +2833,7 @@ object Multimodal extends QueryModule {
     // shuffle. ----
     "pipe_media_dedup_e2e" -> ((s, d) => {
       val media = attachPerceptualMixMedia(Tables.documents(s, d))
-      mediaSigArrow(media)
+      mediaSig(media)
         .filter(col("modality").isin("image", "audio", "video"))
         .groupBy(col("modality"))
         .agg(count(lit(1)).cast("bigint").as("n_items"),
@@ -3270,7 +2871,7 @@ object Multimodal extends QueryModule {
     // scheduled-batch form (the reference's own cadence model), the
     // dedup_incremental asymmetry applied to ALL THREE modalities at
     // once: the ingest batch (doc_id % 10 = 0) byte-sniffs, decodes and
-    // signs LIVE in one routed pass ([[mediaSigArrow]]); the corpus
+    // signs LIVE in one routed pass ([[mediaSig]]); the corpus
     // side reads the PERSISTED per-modality signature artifact (the
     // Artifacts contract — corpus pixels/samples are never
     // re-decoded). Per modality, the asymmetric band match of
@@ -3284,13 +2885,13 @@ object Multimodal extends QueryModule {
     "pipe_media_dedup_incr" -> ((s, d) => {
       val corpus = Artifacts.table(s, d, "documents",
         "media_corpus_sigs")(
-        mediaSigArrow(attachPerceptualMixMedia(
+        mediaSig(attachPerceptualMixMedia(
             Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0)))
           .filter(col("modality").isin("image", "audio", "video"))
           .select(col("doc_id"), col("modality"),
             col("sig_hi"), col("sig_lo")))
       // ONE routed decode pass over the batch feeds all three branches
-      val batch = mediaSigArrow(attachPerceptualMixMedia(
+      val batch = mediaSig(attachPerceptualMixMedia(
           Tables.documents(s, d).filter(col("doc_id") % 10 === 0)))
         .filter(col("modality").isin("image", "audio", "video"))
         .localCheckpoint()
@@ -3339,7 +2940,7 @@ object Multimodal extends QueryModule {
 
     "pipe_multimodal_e2e" -> ((s, d) => {
       val media = attachMixedMedia(Tables.documents(s, d))
-      routeMixedArrow(media)
+      routeMixed(media)
         .groupBy(col("modality"))
         .agg(count(lit(1)).cast("bigint").as("n_docs"),
           sum(col("units")).as("total_units"),
@@ -3493,8 +3094,8 @@ object Multimodal extends QueryModule {
   }
 
   /** The cross-modality dedup VERDICT body shared by the cut and the
-    * export manifest: decode once (localCheckpoint — the RDD-backed
-    * signature pass feeds three modality branches plus the verdict
+    * export manifest: decode once (localCheckpoint — the signature
+    * pass feeds three modality branches plus the verdict
     * join), per-modality near-dup edges (guarded hamming ≤ 3 banding
     * for image/video; maxHamming 0 = exact 60-bit equality for audio —
     * hamming tolerance on an energy-shape code would re-open the
@@ -3505,7 +3106,7 @@ object Multimodal extends QueryModule {
     */
   private def mediaCutVerdicts(s: SparkSession, d: String): DataFrame = {
     val media = attachPerceptualMixMedia(Tables.documents(s, d))
-    val sigs = mediaSigArrow(media)
+    val sigs = mediaSig(media)
       .filter(col("modality").isin("image", "audio", "video"))
       .localCheckpoint()
     def hashesOf(m: String): DataFrame = sigs

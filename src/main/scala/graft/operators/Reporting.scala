@@ -48,18 +48,16 @@ object Reporting extends QueryModule {
     */
   private[graft] def skylineFrontier(pts: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val sp = pts.sparkSession
     val canon = pts.select(col("price_c").cast("bigint").as("price_c"),
       col("p_size").cast("int").as("p_size"))
     val sorted = canon.sortWithinPartitions(col("price_c"), desc("p_size"))
-    val partialRdd = sorted.rdd.mapPartitions { it =>
+    val partial = Rows.mapPartitions(sorted, sorted.schema) { it =>
       var best = Long.MinValue
       it.filter { r =>
         val sz = r.getInt(1).toLong
         if (sz > best) { best = sz; true } else false
       }
     }
-    val partial = sp.createDataFrame(partialRdd, sorted.schema)
     val before = Window.orderBy(col("price_c"), desc("p_size"))
       .rowsBetween(Window.unboundedPreceding, -1)
     partial.withColumn("max_before", max(col("p_size")).over(before))

@@ -531,15 +531,11 @@ object TextAnalysis extends QueryModule {
       ("\n<a href=\"#\">x</a>" * (id % 3).toInt) + "\n</body></html>"
 
   private def attachHtml(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs.select(col("doc_id"), col("text")).rdd.map { r =>
-      org.apache.spark.sql.Row(r.getLong(0), htmlTemplate(r.getLong(0), r.getString(1)))
-    }
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("html",
-        org.apache.spark.sql.types.StringType))))
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    Rows.mapPartitions(docs.select(col("doc_id"), col("text")), StructType(Seq(
+        StructField("doc_id", LongType), StructField("html", StringType))))(
+      _.map(r => org.apache.spark.sql.Row(r.getLong(0),
+        htmlTemplate(r.getLong(0), r.getString(1)))))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -141,17 +141,20 @@ object GraftExtensions {
   /** Idempotently register the functions + the HOF→native rewrite on an
     * existing session (builder-time extensions can't be added post-hoc;
     * the optimizer rule goes through the experimental-methods hook instead).
+    * The rule and strategy are checked in the session's optimizer batches
+    * and planner strategies, which hold both the builder-time and the
+    * experimental copies, so the two paths never stack a second copy.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     descriptors.foreach { case (id, info, builder) =>
       if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(VectorFoldRewrite)) {
+    if (!spark.sessionState.optimizer.batches.exists(_.rules.contains(VectorFoldRewrite))) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ VectorFoldRewrite
     }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
     }

@@ -548,9 +548,9 @@ object StreamRunner {
     * loop for an image lake. Per micro-batch of (doc_id, payload) rows:
     *
     *  1. dHash where the bytes are read
-    *     ([[graft.operators.Multimodal.dhashArrow]] over the Arrow
-    *     seam); corrupt payloads drop HERE, typed by the decode — only
-    *     (doc_id, hash_hi, hash_lo) rows continue;
+    *     ([[graft.operators.Multimodal.dhash]]); corrupt payloads drop
+    *     HERE, typed by the decode — only (doc_id, hash_hi, hash_lo)
+    *     rows continue;
     *  2. within-batch EXACT dedup: identity collapse on the 64-bit hash
     *     ([[graft.operators.Multimodal.dhashCollapse]] — min-doc_id
     *     representative, the canonical-keeper convention);
@@ -582,10 +582,10 @@ object StreamRunner {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     perceptualIngestToWarehouse(mediaStream, wh, table, audit, checkpointDir,
-      graft.operators.Multimodal.dhashArrow, "png", trigger)
+      graft.operators.Multimodal.dhash, "png", trigger)
 
   /** The VIDEO twin: keyframe dHash over decoded y4m luma
-    * ([[graft.operators.Multimodal.videoDhashArrow]]) through the same
+    * ([[graft.operators.Multimodal.videoDhash]]) through the same
     * collapse → incremental-match → audited-publish body.
     */
   def videoIngestToWarehouse(
@@ -596,11 +596,11 @@ object StreamRunner {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     perceptualIngestToWarehouse(mediaStream, wh, table, audit, checkpointDir,
-      graft.operators.Multimodal.videoDhashArrow, "y4m", trigger)
+      graft.operators.Multimodal.videoDhash, "y4m", trigger)
 
   /** The AUDIO twin: the 60-bit four-feature energy-shape fingerprint
     * over REAL decoded PCM
-    * ([[graft.operators.Multimodal.wavFingerprint60Arrow]]) through the
+    * ([[graft.operators.Multimodal.wavFingerprint60]]) through the
     * same collapse → incremental-match → audited-publish body, completing
     * the modality ladder the batch side has. Matching is EXACT signature
     * equality (maxHamming = 0): hamming tolerance on an energy-shape
@@ -616,7 +616,7 @@ object StreamRunner {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions.col
     perceptualIngestToWarehouse(mediaStream, wh, table, audit, checkpointDir,
-      df => graft.operators.Multimodal.wavFingerprint60Arrow(df)
+      df => graft.operators.Multimodal.wavFingerprint60(df)
         .select(col("doc_id"), col("format"), col("sig_hi").as("hash_hi"),
           col("sig_lo").as("hash_lo")),
       "wav", trigger, maxHamming = 0)
@@ -628,7 +628,7 @@ object StreamRunner {
     * WARC-record rows,
     *
     *  1. parse status-line records where the bytes are read
-    *     ([[graft.operators.Crawl.redirectRecordsArrow]]) and APPEND
+    *     ([[graft.operators.Crawl.redirectRecords]]) and APPEND
     *     them to the parsed-record lake `<table>_records` (partitioned
     *     by ingest_batch — idempotent replay), so the archive's bytes
     *     are decoded exactly once, at their own ingest;
@@ -759,7 +759,7 @@ object StreamRunner {
       val settledName = s"${table}_settled"
       // decode once; the checkpointed frame feeds the edge/terminal
       // deltas, the walk's starters, and the gated publish
-      val recs = Crawl.redirectRecordsArrow(batch)
+      val recs = Crawl.redirectRecords(batch)
         .filter(col("format") === "http").localCheckpoint()
       // a batch with no parseable status-line records neither grows the
       // archive nor can change any outcome (retries against an UNCHANGED
@@ -1042,7 +1042,7 @@ object StreamRunner {
   /** The ROUTED mixed-modality ingest — the production shape of a media
     * lake's landing zone: ONE stream of mixed (doc_id, payload) rows,
     * byte-sniff-routed and signed in a single decode pass
-    * ([[graft.operators.Multimodal.mediaSigArrow]] — PNG/JPEG → dHash,
+    * ([[graft.operators.Multimodal.mediaSig]] — PNG/JPEG → dHash,
     * WAV → the 60-bit energy fingerprint, Y4M → keyframe dHash), then
     * each modality's slice drives its own signature index through the
     * SAME per-modality body the dedicated twins run
@@ -1066,7 +1066,7 @@ object StreamRunner {
     }
 
   /** One micro-batch of the routed ingest: decode + route + sign ONCE
-    * (localCheckpoint — the RDD-backed router feeds three branches),
+    * (localCheckpoint — the router feeds three branches),
     * then the shared per-modality publish body per slice. Unroutable
     * payloads drop typed at the router (the crawl salvage rule: loud
     * failure would be a permanent poison pill under checkpoint replay).
@@ -1079,7 +1079,7 @@ object StreamRunner {
       audit: DataFrame => Option[String]): Unit = {
     import org.apache.spark.sql.functions.col
     if (!batch.isEmpty) {
-      val sigs = graft.operators.Multimodal.mediaSigArrow(batch)
+      val sigs = graft.operators.Multimodal.mediaSig(batch)
         .filter(col("modality").isin("image", "audio", "video"))
         .localCheckpoint()
       for ((m, maxH) <- Seq(("image", 3), ("video", 3), ("audio", 0)))
@@ -1097,13 +1097,13 @@ object StreamRunner {
       table: String,
       audit: DataFrame => Option[String],
       checkpointDir: String,
-      hashArrow: DataFrame => DataFrame,
+      hashOf: DataFrame => DataFrame,
       okFormat: String,
       trigger: Trigger,
       maxHamming: Int = 3): StreamingQuery =
     sink(mediaStream, checkpointDir, trigger) { (batch, batchId) =>
       perceptualPublishBatch(batch, batchId, wh, table, audit,
-        hashArrow, okFormat, maxHamming)
+        hashOf, okFormat, maxHamming)
     }
 
   /** Hash-bucket count of the perceptual signature index's FOLDED
@@ -1152,13 +1152,13 @@ object StreamRunner {
       wh: Warehouse,
       table: String,
       audit: DataFrame => Option[String],
-      hashArrow: DataFrame => DataFrame,
+      hashOf: DataFrame => DataFrame,
       okFormat: String,
       maxHamming: Int): Unit = {
     import org.apache.spark.sql.functions.col
     if (!batch.isEmpty)
       perceptualPublishHashed(
-        hashArrow(batch).filter(col("format") === okFormat)
+        hashOf(batch).filter(col("format") === okFormat)
           .select(col("doc_id"), col("hash_hi"), col("hash_lo")),
         batchId, wh, table, audit, maxHamming)
   }
@@ -1181,7 +1181,7 @@ object StreamRunner {
     val sigsName = s"${table}_sigs"
     // no emptiness pre-check here: probing `hashed` would pay a partial
     // decode the callers' frames don't owe (the dedicated twins pass a
-    // lazy hashArrow chain), and the body below is empty-safe — an empty
+    // lazy hashOf chain), and the body below is empty-safe — an empty
     // frame flows to empty survivors/adds and writes nothing
     locally {
       // within-batch exact dedup WITH copy counts: one representative

@@ -18,7 +18,7 @@ class DhashSpec extends SparkSuiteBase {
   private def hashesFor(ids: Seq[Long]): Map[Long, (Long, Long)] = {
     val docs = spark.createDataFrame(
       spark.sparkContext.parallelize(ids.map(Row(_))), docSchema)
-    Multimodal.dhashArrow(Multimodal.attachDhashMedia(docs))
+    Multimodal.dhash(Multimodal.attachDhashMedia(docs))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
   }
 
@@ -60,7 +60,7 @@ class DhashSpec extends SparkSuiteBase {
       spark.sparkContext.parallelize(Seq(Row(7L))), docSchema)
     val media = Multimodal.attachDhashMedia(docs)
       .select(col("doc_id"), expr("substring(payload, 1, 20)").as("payload"))
-    val r = Multimodal.dhashArrow(media).collect()
+    val r = Multimodal.dhash(media).collect()
     assert(r.length === 1)
     assert(r(0).getString(1) === "png-corrupt")
     assert(r(0).isNullAt(2) && r(0).isNullAt(3))
@@ -80,7 +80,7 @@ class DhashSpec extends SparkSuiteBase {
       spark.sparkContext.parallelize(Seq(
         Row(0L, dec, dec.length.toLong), Row(2L, flat, flat.length.toLong))),
       schema)
-    val out = Multimodal.wavFingerprintArrow(Multimodal.attachWavMedia(docs))
+    val out = Multimodal.wavFingerprint(Multimodal.attachWavMedia(docs))
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(out(0L) === 0x7fffL)
     assert(out(2L) === 0L)
@@ -89,7 +89,7 @@ class DhashSpec extends SparkSuiteBase {
   private def videoHashesFor(ids: Seq[Long]): Map[Long, (Long, Long)] = {
     val docs = spark.createDataFrame(
       spark.sparkContext.parallelize(ids.map(Row(_))), docSchema)
-    Multimodal.videoDhashArrow(Multimodal.attachVideoDupMedia(docs))
+    Multimodal.videoDhash(Multimodal.attachVideoDupMedia(docs))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
   }
 
@@ -128,7 +128,7 @@ class DhashSpec extends SparkSuiteBase {
       spark.sparkContext.parallelize((0L until 48L).map(Row(_))), docSchema)
     val payloads = Multimodal.attachPerceptualMixMedia(docs).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    val sigs = Multimodal.mediaSigArrow(Multimodal.attachPerceptualMixMedia(docs))
+    val sigs = Multimodal.mediaSig(Multimodal.attachPerceptualMixMedia(docs))
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), Option(r.get(2)), Option(r.get(3)))).toMap
     // dup pairs: content c = id/3 with c%8==7 duplicates content c-7 of

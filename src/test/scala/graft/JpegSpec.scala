@@ -5,7 +5,7 @@ import graft.operators.Multimodal.JpegCodec
 
 /** Baseline JPEG codec: exact round-trip of the fixture's coefficient
   * scheme (gray + 4:2:0 colour), restart-marker handling, the typed
-  * malformation ladder, and Arrow == row parity of the decode query path.
+  * malformation ladder, and the decode query path's typed degrades.
   */
 class JpegSpec extends SparkSuiteBase {
 
@@ -129,7 +129,6 @@ class JpegSpec extends SparkSuiteBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id", "ty", "tx").collect().map(_.toSeq).toList
     val rows = canon(Multimodal.resizeJpeg(media))
-    assert(rows == canon(Multimodal.resizeJpegArrow(media)))
     assert(rows.nonEmpty && rows.size % 4 == 0, "2x2 thumbnail per decodable doc")
     val bad = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
@@ -144,7 +143,6 @@ class JpegSpec extends SparkSuiteBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(_.toSeq).toList
     val row = canon(Multimodal.decodeJpeg(media))
-    assert(row == canon(Multimodal.decodeJpegArrow(media)))
     assert(row.nonEmpty && row.forall(_(1) == "jpeg"))
     // a corrupt payload degrades typed through the same path
     val bad = spark.createDataFrame(

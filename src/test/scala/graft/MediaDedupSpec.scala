@@ -28,10 +28,10 @@ class MediaDedupSpec extends SparkSuiteBase {
     val n = media.count()
     val planted = (0L until 500L)
       .count(id => id % 3 == 1 && (id / 3) % 8 == 7 && id / 3 >= 7)
-    val d15 = Multimodal.wavFingerprintArrow(media)
+    val d15 = Multimodal.wavFingerprint(media)
       .filter(col("format") === "wav")
       .select(col("fingerprint")).distinct().count()
-    val w60 = Multimodal.wavFingerprint60Arrow(media)
+    val w60 = Multimodal.wavFingerprint60(media)
       .filter(col("format") === "wav").cache()
     try {
       val d60 = w60.select(col("sig_hi"), col("sig_lo")).distinct().count()
@@ -87,11 +87,11 @@ class MediaDedupSpec extends SparkSuiteBase {
       spark.sparkContext.parallelize(rows),
       StructType(Seq(StructField("doc_id", LongType),
         StructField("payload", BinaryType))))
-    val f60 = Multimodal.wavFingerprint60Arrow(media)
+    val f60 = Multimodal.wavFingerprint60(media)
       .filter(col("format") === "wav")
       .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val f15 = Multimodal.wavFingerprintArrow(media)
+    val f15 = Multimodal.wavFingerprint(media)
       .filter(col("format") === "wav")
       .select(col("doc_id"), col("fingerprint"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -127,7 +127,7 @@ class MediaDedupSpec extends SparkSuiteBase {
       // the image NEAR class (one flipped sampled pixel, hamming 1-2)
       // drops too — and its signature is NOT equal to the base's, so
       // only the hamming merge can have found it
-      val sigs = Multimodal.mediaSigArrow(
+      val sigs = Multimodal.mediaSig(
           Multimodal.attachPerceptualMixMedia(docs(nDocs)))
         .filter(col("modality") === "image")
         .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
@@ -161,7 +161,7 @@ class MediaDedupSpec extends SparkSuiteBase {
     // live replay: decode BOTH sides and run the same per-modality
     // asymmetric match — the artifact-served path must land on
     // identical rows (artifact-vs-live parity)
-    val all = Multimodal.mediaSigArrow(Multimodal.attachPerceptualMixMedia(
+    val all = Multimodal.mediaSig(Multimodal.attachPerceptualMixMedia(
         Tables.documents(spark, sf)))
       .filter(col("modality").isin("image", "audio", "video"))
       .localCheckpoint()

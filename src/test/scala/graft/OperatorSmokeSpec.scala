@@ -67,34 +67,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     }
   }
 
-  test("multimodal byte-stats featurizer: batched, fixed-dim, deterministic, no shuffle") {
-    val media = Multimodal.attachRawMedia(Tables.documents(spark, sf0001))
-    val feats = Multimodal.decodeFeatures(media)
-    val rows = feats.limit(20).collect()
-    assert(rows.length == 20)
-    rows.foreach { r =>
-      val f = r.getSeq[Double](r.fieldIndex("features"))
-      assert(f.length == Multimodal.MediaBatch.featureDim)
-      assert(f.forall(v => v >= 0.0 && v <= 1.0))
-      assert(r.getAs[Long]("n_bytes") > 0)
-    }
-    // determinism: same payload -> same features
-    val again = Multimodal.decodeFeatures(media).limit(20).collect()
-    assert(rows.map(_.getSeq[Double](1).toList).toList ==
-      again.map(_.getSeq[Double](1).toList).toList)
-  }
-
-  test("Arrow-columnar decode path is row-identical to the row-based path") {
-    val media = Multimodal.attachRawMedia(Tables.documents(spark, sf0001))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toList, r.getLong(2))).toList
-    val rowPath = canon(Multimodal.decodeFeatures(media))
-    val arrowPath = canon(Multimodal.decodeFeaturesArrow(media))
-    assert(rowPath.nonEmpty)
-    assert(arrowPath == rowPath)
-  }
-
   test("MediaHeader.sniff: parses a real PNG IHDR, rejects corrupt CRC and non-PNG bytes") {
     import graft.operators.Multimodal.MediaHeader
     // hand-build a real PNG header: signature + IHDR(640x480, depth 8, RGBA)
@@ -124,12 +96,10 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     val media = Multimodal.attachPngMedia(Tables.documents(spark, sf0001))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(_.toSeq).toList
-    val rowPath = canon(Multimodal.parseHeaders(media))
-    val arrowPath = canon(Multimodal.parseHeadersArrow(media))
-    assert(rowPath.nonEmpty)
-    assert(arrowPath == rowPath)
+    val parsed = canon(Multimodal.parseHeaders(media))
+    assert(parsed.nonEmpty)
     // every fixture payload round-trips: built as a valid PNG, parsed as one
-    assert(rowPath.forall(_(1) == "png"))
+    assert(parsed.forall(_(1) == "png"))
   }
 
   test("WavHeader.sniff: parses a real RIFF/WAVE header, rejects inconsistent fmt and non-RIFF bytes") {
@@ -163,12 +133,10 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     val media = Multimodal.attachWavMedia(Tables.documents(spark, sf0001))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(_.toSeq).toList
-    val rowPath = canon(Multimodal.parseWavHeaders(media))
-    val arrowPath = canon(Multimodal.parseWavHeadersArrow(media))
-    assert(rowPath.nonEmpty)
-    assert(arrowPath == rowPath)
+    val parsed = canon(Multimodal.parseWavHeaders(media))
+    assert(parsed.nonEmpty)
     // every fixture payload round-trips: built as a valid wav, parsed as one
-    assert(rowPath.forall(_(1) == "wav"))
+    assert(parsed.forall(_(1) == "wav"))
   }
 
   test("PngCodec: encode/decode round-trips exact pixels across all five filters and both color types") {
@@ -252,46 +220,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     }
   }
 
-  test("PNG pixel decode: Arrow path is row-identical to the row path") {
-    val media = Multimodal.attachPngPixelMedia(Tables.documents(spark, sf0001))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    val rowPath = canon(Multimodal.decodePng(media))
-    val arrowPath = canon(Multimodal.decodePngArrow(media))
-    assert(rowPath.nonEmpty)
-    assert(arrowPath == rowPath)
-  }
-
-  test("PngArrowDecoder: real features through the Arrow seam match the formula; corrupt → zero vector") {
-    val media = Multimodal.attachPngPixelMedia(Tables.documents(spark, sf0001).limit(20))
-    val feats = Multimodal.decodeFeaturesArrow(media, Multimodal.PngArrowDecoder)
-      .orderBy("doc_id").collect()
-    assert(feats.nonEmpty)
-    val docs = Tables.documents(spark, sf0001)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("n_chars").cast("long")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    feats.foreach { r =>
-      val id = r.getLong(0)
-      val f = r.getSeq[Double](1)
-      val (w, h) = ((id % 16 + 1).toInt, (docs(id) % 12 + 1).toInt)
-      val ch = if (id % 2 == 0) 3 else 4
-      assert(f(0) == w && f(1) == h && f(2) == ch)
-      val sums = new Array[Double](4)
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until ch)
-        sums(c) += ((id * 31 + y * 7 + x * 5 + c * 11) % 256) / 255.0
-      for (c <- 0 until ch)
-        assert(math.abs(f(3 + c) - sums(c) / (w * h)) < 1e-9, s"mean ch $c doc $id")
-      if (ch == 3) assert(f(6) == 0.0)
-    }
-    // corrupt payload through the same seam: zero vector, not an exception
-    val corrupt = Multimodal.attachRawMedia(Tables.documents(spark, sf0001).limit(3))
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("payload"))
-    val z = Multimodal.decodeFeaturesArrow(corrupt, Multimodal.PngArrowDecoder).collect()
-    assert(z.forall(_.getSeq[Double](1).forall(_ == 0.0)))
-  }
-
   test("WAV PCM decode: signed samples, channel de-interleave, odd trailing byte, corrupt degrade") {
     import graft.operators.Multimodal
     // hand-build a stereo 16-bit wav whose samples exercise what the
@@ -359,17 +287,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     assert(r8b.getString(1) == "wav-unsupported" && r8b.isNullAt(2))
   }
 
-  test("WAV PCM decode: Arrow path is row-identical to the row path on the fixture") {
-    val media = Multimodal.attachWavMedia(Tables.documents(spark, sf0001))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    val rowPath = canon(Multimodal.decodeWav(media))
-    val arrowPath = canon(Multimodal.decodeWavArrow(media))
-    assert(rowPath.nonEmpty)
-    assert(arrowPath == rowPath)
-    assert(rowPath.forall(_(1) == "wav"))
-  }
-
   test("PNG NN resize: picks the exact source pixels, upsamples 1x1, corrupt → zero rows, Arrow == row") {
     import graft.operators.Multimodal
     import graft.operators.Multimodal.PngCodec
@@ -408,13 +325,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     // corrupt payload degrades to ZERO rows, never garbage cells
     val bad = bytes.clone(); bad(bytes.length - 6) = (bad(bytes.length - 6) ^ 1).toByte
     assert(Multimodal.resizePng(mediaOf(Seq((3L, bad)))).collect().isEmpty)
-    // Arrow seam parity on the full fixture
-    val media = Multimodal.attachPngPixelMedia(Tables.documents(spark, sf0001))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id", "ty", "tx").collect().map(_.toSeq).toList
-    val rowPath = canon(Multimodal.resizePng(media))
-    val arrowPath = canon(Multimodal.resizePngArrow(media))
-    assert(rowPath.nonEmpty && arrowPath == rowPath)
   }
 
   test("WAV features: zero crossings + |v| mass replay planted sign changes; v = 0 counts non-negative") {
@@ -456,12 +366,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     val bad = wav(2, data); bad(28) = (bad(28) ^ 1).toByte
     val rb = Multimodal.wavFeatures(mediaOf(9L, bad)).collect().head
     assert(rb.getString(1) == "wav-corrupt" && rb.isNullAt(4))
-    // Arrow seam parity on the full fixture
-    val media = Multimodal.attachWavMedia(Tables.documents(spark, sf0001))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    assert(canon(Multimodal.wavFeatures(media)) ==
-      canon(Multimodal.wavFeaturesArrow(media)))
   }
 
   test("multimodal router: modality from bytes alone, recomposition parity, raw degrade, Arrow == row") {
@@ -518,11 +422,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.BinaryType))))
     val rr = Multimodal.routeMixed(rawMedia).collect().head
     assert(rr.getString(1) == "raw" && rr.isNullAt(2) && rr.isNullAt(3))
-    // Arrow seam parity on the mixed fixture
-    def canon2(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    assert(canon2(Multimodal.routeMixed(media)) ==
-      canon2(Multimodal.routeMixedArrow(media)))
   }
 
   test("minhash calibration: buckets recompose from signatures + verified pairs, estimator monotone") {
@@ -1012,11 +911,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
         org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.BinaryType))))
     assert(Multimodal.frameSample(corrupt).collect().isEmpty)
-    // Arrow seam parity on the full fixture
-    def canonF(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id", "slot").collect().map(_.toSeq).toList
-    assert(canonF(Multimodal.frameSample(media)) ==
-      canonF(Multimodal.frameSampleArrow(media)))
   }
 
   test("mm_video_meta: 4:2:0 chroma round-trips through the real decoder; Arrow == row") {
@@ -1038,11 +932,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
     val even = rows.find(_.getLong(0) % 2 == 0).get
     assert(Y4mCodec.decode(even.getAs[Array[Byte]]("payload"))
       .toOption.get.colourspace == "444")
-    // Arrow seam parity on the mixed fixture
-    def canonM(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    assert(canonM(Multimodal.parseY4mMeta(media)) ==
-      canonM(Multimodal.parseY4mMetaArrow(media)))
   }
 
   test("Y4mCodec: round-trip, header validation, truncation/garbage degrade typed") {
@@ -1073,12 +962,6 @@ class OperatorSmokeSpec extends SparkSuiteBase {
       .left.exists(_.contains("unsupported colourspace")))
     assert(Y4mCodec.decode("YUV4MPEG2 Wxx H2 C444\n".getBytes)
       .left.exists(_.startsWith("decode error")))
-    // decode twin parity: stats row path == Arrow path on the fixture
-    val media = Multimodal.attachY4mMedia(Tables.documents(spark, sf0001))
-    def canonV(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().map(_.toSeq).toList
-    assert(canonV(Multimodal.decodeY4m(media)) ==
-      canonV(Multimodal.decodeY4mArrow(media)))
   }
 
   // evt_dau_wau replaces the textbook rolling-distinct window (a day-spine

@@ -1659,7 +1659,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     assert(sigs === Map(0L -> 2L, 1L -> 2L, 2L -> 1L, 20L -> 2L, 21L -> 1L))
     // replay idempotence: re-running the same batch id against its own
     // appended index rows must not drop the batch's docs
-    val hashes = Multimodal.dhashArrow(spark.createDataFrame(
+    val hashes = Multimodal.dhash(spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(20L, pay(20L)), Row(21L, pay(21L)))),
         StructType(Seq(StructField("doc_id", LongType),
           StructField("payload", BinaryType)))))
@@ -1682,7 +1682,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
       StructType(Seq(StructField("doc_id", LongType),
         StructField("payload", BinaryType))))
     StreamRunner.perceptualPublishBatch(replay, 1L, wh, "imgs", _ => None,
-      Multimodal.dhashArrow, "png", maxHamming = 3)
+      Multimodal.dhash, "png", maxHamming = 3)
     val sigs2 = StreamRunner.perceptualSigsView(spark, wh, "imgs")
       .select(col("doc_id"), col("n_copies"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1797,7 +1797,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // the serve view must equal the ONE-SHOT batch walk over the full
     // archive (the crawl_redirects form) — the incremental maintenance
     // can never disagree with a from-scratch resolution
-    val allRecs = Crawl.redirectRecordsArrow(spark.createDataFrame(
+    val allRecs = Crawl.redirectRecords(spark.createDataFrame(
       spark.sparkContext.parallelize((b0 ++ b1).map { case (i, p) => Row(i, p) }),
       StructType(Seq(StructField("doc_id", LongType),
         StructField("payload", BinaryType)))))
@@ -1937,7 +1937,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // through backfilled state, and the lake keeps its original layout
     // (no db= directories mixed in)
     val wh5 = new Warehouse(tmpDir("frlegacy"))
-    val recs0 = Crawl.redirectRecordsArrow(b0frame)
+    val recs0 = Crawl.redirectRecords(b0frame)
       .filter(col("format") === "http")
     wh5.partitionedUpsertWrite(
       recs0.withColumn("ingest_batch", lit(0L)), "fl_records",
@@ -2084,13 +2084,13 @@ class StreamRunnerSpec extends SparkSuiteBase {
     }
     val wh = new Warehouse(tmpDir("duponly"))
     StreamRunner.perceptualPublishBatch(frame(Seq(0L)), 0L, wh, "dimg",
-      _ => None, Multimodal.dhashArrow, "png", maxHamming = 3)
+      _ => None, Multimodal.dhash, "png", maxHamming = 3)
     def sigs = StreamRunner.perceptualSigsView(spark, wh, "dimg")
       .select(col("doc_id"), col("n_copies"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs === Map(0L -> 1L))
     StreamRunner.perceptualPublishBatch(frame(Seq(8L)), 1L, wh, "dimg",
-      _ => None, Multimodal.dhashArrow, "png", maxHamming = 3)
+      _ => None, Multimodal.dhash, "png", maxHamming = 3)
     assert(wh.read(spark, "dimg").select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet === Set(0L),
       "a dup-only batch publishes no docs")
@@ -2099,7 +2099,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // replay idempotence: the delta partition overwrite replaces the
     // previous attempt's count-adds wholesale — no double-count
     StreamRunner.perceptualPublishBatch(frame(Seq(8L)), 1L, wh, "dimg",
-      _ => None, Multimodal.dhashArrow, "png", maxHamming = 3)
+      _ => None, Multimodal.dhash, "png", maxHamming = 3)
     assert(sigs === Map(0L -> 2L))
     // a dup-only batch the AUDIT rejects must NOT merge its copy mass:
     // the maintenance branch runs behind the same staged-readback gate
@@ -2107,7 +2107,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     // ungated maintenance branch would have appended batch 2's
     // count-add delta anyway)
     StreamRunner.perceptualPublishBatch(frame(Seq(8L)), 2L, wh, "dimg",
-      _ => Some("schema drift"), Multimodal.dhashArrow, "png", maxHamming = 3)
+      _ => Some("schema drift"), Multimodal.dhash, "png", maxHamming = 3)
     assert(sigs === Map(0L -> 2L),
       "a quarantined dup-only batch must not merge counts")
     assert(new java.io.File(wh.tablePath("__quarantine__dimg_b2")).exists(),
@@ -2147,7 +2147,7 @@ class StreamRunnerSpec extends SparkSuiteBase {
     val wh = new Warehouse(tmpDir("plsm"))
     def publish(ids: Seq[Long], batch: Long): Unit =
       StreamRunner.perceptualPublishBatch(frame(ids), batch, wh, "pl",
-        _ => None, Multimodal.dhashArrow, "png", maxHamming = 3)
+        _ => None, Multimodal.dhash, "png", maxHamming = 3)
     def dataFiles(sub: String): Set[String] = {
       def walk(f: java.io.File): Seq[String] =
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import graft.plans.{DotProduct, GraftExtensions}
+import graft.plans.{AsOfJoinStrategy, DotProduct, GraftExtensions, VectorFoldRewrite}
 import org.apache.spark.sql.functions._
 
 /** The HOF→native optimizer rewrite: plans using the portable
@@ -39,5 +39,18 @@ class VectorFoldRewriteSpec extends SparkSuiteBase {
     val optimized = df.queryExecution.optimizedPlan
     assert(!optimized.expressions.exists(_.exists(_.isInstanceOf[DotProduct])))
     assert(df.collect()(0).getDouble(0) == 7.0)
+  }
+
+  test("post-hoc registration does not stack a second rule or strategy on an extended session") {
+    // the suite session comes from Sessions.base, whose builder extensions
+    // already put the rule in both operator-optimization batches and the
+    // strategy in the planner once
+    val rows = SparkEntry.queries("sim_topk_brute")(spark, sf0001).collect()
+    assert(rows.nonEmpty)
+    GraftExtensions.ensureRegistered(spark)
+    val ruleBatches = spark.sessionState.optimizer.batches
+      .count(_.rules.contains(VectorFoldRewrite))
+    assert(ruleBatches === 2)
+    assert(spark.sessionState.planner.strategies.count(_ == AsOfJoinStrategy) === 1)
   }
 }
